@@ -33,11 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * CALL-SITE CONTRACT: the input must already be cleaned/lowercased
   * (the [[graft.ops.Text.cleanText]] output — pure ASCII by
-  * construction, since Java's default `\w` is ASCII-only). On
-  * off-contract inputs containing astral-plane characters the
-  * `length(t) > 1` filter counts UTF-16 units here vs codepoints in
-  * the composable form — unreachable after cleanText, documented
-  * rather than paid for with a per-token codepoint count.
+  * construction, since Java's default `\w` is ASCII-only).
   */
 case class ContentGrams(child: Expression) extends UnaryExpression {
 
@@ -137,8 +133,7 @@ object ContentGrams {
         "only), dropping tokens of length < 2 and the engine stop-word " +
         "list. Single fused pass, value-identical to " +
         "concat(ts, ngrams(ts,2), ngrams(ts,3)) over the filtered " +
-        "split. Inputs with astral-plane characters are off-contract " +
-        "(length counts UTF-16 units). NULL in, NULL out.",
+        "split. NULL in, NULL out.",
       "",
       "\n    Examples:\n      > SELECT gramsq('big cats sleep');\n       [\"big\",\"cats\",\"sleep\",\"big cats\",\"cats sleep\",\"big cats sleep\"]\n  ",
       "", "misc_funcs", "1.0.0", "", "built-in"),

@@ -1,6 +1,7 @@
 package graft.incremental
 
 import graft.io.IO
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,13 +12,25 @@ import org.apache.spark.sql.functions._
   * `(table_name, watermark_value, update_column)` that every ingest
   * task reads, filters, and rewrites
   * (dwh/ingest_click_house_incremental_load_users.py:28-46). The table
-  * is O(#tables) rows, so read-modify-overwrite through the driver is
-  * the right scale design — the DATA path never touches it beyond one
-  * pushed-down predicate.
+  * is O(#tables) rows, so it is read and written on the driver as
+  * plain text through the Hadoop `FileSystem` — no Spark job, no
+  * schema inference — and the DATA path never touches it beyond one
+  * pushed-down predicate. Values round-trip as the exact text written:
+  * an inferred schema would re-render a timestamp watermark in the
+  * JVM's default zone on every rewrite and drift it.
+  *
+  * On-disk layout (unchanged from the Spark-written table, which still
+  * reads): one directory holding one `part-*.csv` whose header is
+  * `table_name,watermark_value,update_column`. Fields are unquoted, so
+  * a value containing `,`, `"` or a line break is refused on write and
+  * on read, as are a missing part file, a second part file and a bad
+  * header — never a guessed parse.
   *
   * Semantics kept faithful: the watermark only advances on a non-empty
   * batch (ST2), and files/folders at-or-below the watermark are never
-  * re-read, i.e. late data is dropped at-most-once (ST3).
+  * re-read, i.e. late data is dropped (ST3). E1 advances it only after
+  * the batch's landing and archive writes commit
+  * ([[graft.pipeline.Ingest.incrementalIngest]]): at-least-once.
   *
   * Durability contract (the reference's raw overwrite has none:
   * a crash mid-rewrite loses every table's watermark): [[writeTable]]
@@ -65,18 +78,36 @@ object Watermark {
     if (f.exists(staged)) f.delete(staged, true)
   }
 
+  private val Header = "table_name,watermark_value,update_column"
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Read the control CSV into memory (it is tiny by construction),
-    * completing any interrupted swap first. */
+    * completing any interrupted swap first. Driver-side text read. */
   def readTable(spark: SparkSession, path: String): Seq[Entry] = {
     recoverSwap(spark, path)
-    IO.readCsv(spark, path)
-      .collect()
-      .toSeq
-      .map(r =>
-        Entry(
-          r.getAs[Any]("table_name").toString,
-          r.getAs[Any]("watermark_value").toString,
-          r.getAs[Any]("update_column").toString))
+    val f = fsOf(spark, path)
+    require(f.exists(new Path(path)), s"no watermark table at $path")
+    val parts = f.listStatus(new Path(path)).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".csv"))
+    require(parts.length == 1,
+      s"watermark table $path must hold exactly one part-*.csv, found " +
+        parts.map(_.getName).sorted.mkString("[", ", ", "]"))
+    val in = f.open(parts.head)
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
+    require(lines.headOption.contains(Header),
+      s"watermark table ${parts.head} has header ${lines.headOption.getOrElse("<none>")}, " +
+        s"expected $Header")
+    lines.tail.filter(_.nonEmpty).map { line =>
+      val fields = line.split(",", -1)
+      require(fields.length == 3 && !line.contains('"'),
+        s"watermark table ${parts.head}: unparseable row '$line' " +
+          "(want three unquoted fields)")
+      Entry(fields(0), fields(1), fields(2))
+    }
   }
 
   /** S10 — scalar lookup for one table. */
@@ -97,18 +128,23 @@ object Watermark {
   /** Crash-safe overwrite: stage the new CSV, then swap it live with
     * two directory renames (see the durability contract above). A
     * plain `SaveMode.Overwrite` deletes the live table before the new
-    * files commit — a crash in that window loses every watermark. */
+    * files commit — a crash in that window loses every watermark.
+    * Driver-side text write of one part file; no Spark job. */
   def writeTable(spark: SparkSession, path: String, entries: Seq[Entry]): Unit = {
-    import spark.implicits._
+    for (e <- entries; v <- Seq(e.tableName, e.watermarkValue, e.updateColumn))
+      require(v != null && !v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'),
+        s"watermark field ${Option(v).map("'" + _ + "'").getOrElse("null")} of " +
+          s"${e.tableName} cannot be stored unquoted (no comma, double quote or line break)")
     recoverSwap(spark, path)
     val staged = stagedPath(path)
-    IO.writeCsv(
-      entries.toDF("table_name", "watermark_value", "update_column"),
-      staged, singleFile = true)
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(oldPath(path))
+    val f = fsOf(spark, path)
+    val out = f.create(new Path(staged, "part-00000.csv"), true)
+    try out.write(
+      (Header +: entries.map(e => s"${e.tableName},${e.watermarkValue},${e.updateColumn}"))
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+    val live = new Path(path)
+    val old = new Path(oldPath(path))
     // Hadoop rename reports most failures by RETURNING FALSE, not
     // throwing. Unchecked, a failed `staged -> live` after `live ->
     // old` succeeded would let the delete below destroy the LAST copy
@@ -117,7 +153,7 @@ object Watermark {
     // only after confirming the live path actually exists.
     if (f.exists(live))
       require(f.rename(live, old), s"watermark swap rename failed: $live -> $old")
-    require(f.rename(new org.apache.hadoop.fs.Path(staged), live),
+    require(f.rename(new Path(staged), live),
       s"watermark swap rename failed: $staged -> $live")
     require(f.exists(live), s"watermark swap left no live table at $live")
     f.delete(old, true)

@@ -431,14 +431,47 @@ object IO {
       if (overwrite || !lockCreateIsAtomic(f)) {
         Thread.sleep(lockSettleMs(f))
         val back = """"holder"\s*:\s*"([^"]*)"""".r
-          .findFirstMatchIn(readSmallTextFile(f, m)).map(_.group(1))
+          .findFirstMatchIn(readClaimBack(f, m)).map(_.group(1))
         if (!back.contains(token)) throw new IllegalStateException(
           s"lost the $what-lock race on $m — a concurrent $what " +
             s"acquired the lock (held by ${back.getOrElse("?")}); retry " +
             "after it completes")
       }
       true
-    } catch { case _: java.io.IOException if !overwrite => false }
+    } catch {
+      // a checksum error is never "the marker pre-existed": reporting
+      // it so made the claimer classify its OWN marker as a foreign
+      // holder, and two racers could both lose
+      case e: java.io.IOException
+          if !overwrite && !e.isInstanceOf[org.apache.hadoop.fs.ChecksumException] => false
+    }
+
+  /** Read back a marker this claimer has just written. On the local
+    * checksummed FS a racing claimer's data and `.crc` writes can
+    * interleave with ours, and the read then throws
+    * `ChecksumException`: the marker is torn, not held by anyone else.
+    * Settle one window and re-read, as [[readMarkerSettled]] does — a
+    * racer caught between its two writes has finished by then. A tear
+    * that persists means the data file and the `.crc` came from
+    * different claimers; each wrote its whole body in one write, so
+    * the data file still names exactly one holder. Drop the stale
+    * `.crc` and read the data as it is: that holder wins and every
+    * later reader sees a readable marker. */
+  private[graft] def readClaimBack(f: FileSystem, m: Path): String = {
+    import org.apache.hadoop.fs.{ChecksumException, ChecksumFileSystem}
+    def read(): Either[ChecksumException, String] =
+      try Right(readSmallTextFile(f, m))
+      catch { case e: ChecksumException => Left(e) }
+    read().left.flatMap { _ => Thread.sleep(lockSettleMs(f)); read() } match {
+      case Right(txt) => txt
+      case Left(e) => f match {
+        case c: ChecksumFileSystem =>
+          c.getRawFileSystem.delete(c.getChecksumFile(m), false)
+          readSmallTextFile(c.getRawFileSystem, m)
+        case _ => throw e
+      }
+    }
+  }
 
   /** Acquire the fold lock: exclusive-create `_FOLDING` with this
     * process's holder id. Returns true iff the marker PRE-EXISTED as a

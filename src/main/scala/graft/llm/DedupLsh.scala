@@ -477,7 +477,9 @@ object DedupLsh {
     * iteration is two equi-joins + an aggregate, and pointer jumping
     * makes the iteration count O(log diameter), so even pathological
     * chained-near-dup components converge in a handful of shuffle
-    * rounds. */
+    * rounds. A run that reaches `maxIter` without two equal Σlabel
+    * values runs one edge-consistency check and throws if any edge
+    * still joins two labels — never a quietly split component. */
   /** @param reliableCheckpoints checkpoint durability for the
     *   iterative loop. `None` (default) = reliable `df.checkpoint()`
     *   exactly when the SparkContext has a checkpoint dir configured,
@@ -548,6 +550,7 @@ object DedupLsh {
     // on — null stands for "no previous sum yet" and saves one action
     // per call (empty input pays one harmless extra no-op iteration)
     var prevSum: java.math.BigDecimal = null
+    var lastDrop: java.math.BigDecimal = null
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -577,10 +580,29 @@ object DedupLsh {
       graft.Caching.dropSupersededCheckpoint(labels)
       labels = updated
       converged = prevSum != null && newSum.compareTo(prevSum) == 0
+      if (prevSum != null) lastDrop = prevSum.subtract(newSum)
       prevSum = newSum
       i += 1
     }
+    // the cap was hit before two equal sums: the labels may still be
+    // final (the last iteration can land exactly on the fixpoint), so
+    // check once that no edge joins two different labels — otherwise
+    // fail rather than return split components as distinct clusters
+    val split = !converged && {
+      val l = labels.select(col("id").as("l_id"), col("label").as("l_label"))
+      val r = labels.select(col("id").as("r_id"), col("label").as("r_label"))
+      !edges
+        .join(l, edges("src") === l("l_id"))
+        .join(r, edges("dst") === r("r_id"))
+        .filter(col("l_label") =!= col("r_label"))
+        .isEmpty
+    }
     edges.unpersist()
+    if (split) throw new IllegalStateException(
+      s"nearDupClusters did not converge: $i iterations (maxIter = $maxIter) " +
+        "left edges joining different labels; the last iteration lowered " +
+        s"Σlabel by ${Option(lastDrop).getOrElse("an unknown amount")}. " +
+        "Raise maxIter for components of this diameter")
     labels.withColumnRenamed("label", "cluster")
   }
 

@@ -4,15 +4,17 @@ import graft.incremental.Watermark
 import graft.io.IO
 import graft.ops.Rows
 import graft.quality.Quality
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** E1/E3 ingest pipelines + the J1 enrichment join (SURVEY §3).
   *
   * E1 (value-watermark incremental ingest,
   * dwh/ingest_click_house_incremental_load_users.py:25-78): watermark
-  * lookup → pushed-down `> wm` scan → watermark advance (non-empty
-  * only) → JSON landzone + Parquet archive → QC report.
+  * lookup → pushed-down `> wm` scan → JSON landzone (observing count
+  * and max) + Parquet archive → watermark advance (non-empty only) →
+  * QC report. The reference advances before it lands (at-most-once);
+  * advancing after the writes commit makes E1 at-least-once.
   *
   * E3 (batch full load,
   * dwh/ingest_batch_sources_full_load_ProblemLog_original.py:52-102):
@@ -30,7 +32,19 @@ object Ingest {
              joinType: String = "left"): DataFrame =
     fact.join(broadcast(dim), fact(factKey) === dim(dimKey), joinType)
 
-  /** E1 — one incremental micro-batch. Returns the landed batch. */
+  /** E1 — one incremental micro-batch. Returns the landed batch.
+    *
+    * Order: land, archive, then advance. The JSON landing write carries
+    * an `observe` of the batch's row count and `max(update_col)`, so the
+    * next watermark comes out of the scan that lands the rows, not out
+    * of a separate aggregate. The watermark moves only after both
+    * writes have committed, which makes delivery at-least-once: a crash
+    * before the advance re-delivers the batch, and the keep-latest
+    * bronze upsert absorbs the repeat. An empty batch leaves no landing
+    * or archive directory and keeps the watermark (ST2). The control
+    * table is driver-side text, so a non-empty batch costs two Spark
+    * jobs (the two writes) before the caller's QC.
+    */
   def incrementalIngest(
       spark: SparkSession,
       source: DataFrame,
@@ -45,14 +59,22 @@ object Ingest {
       .lookup(spark, watermarkCsv, table)
       .getOrElse(sys.error(s"no watermark row for $table"))
     val batch = Watermark.incrementalScan(source, wm.updateColumn, wm.watermarkValue)
-    // advance only when non-empty (ST2); one extra agg job on the
-    // filtered batch, pushed to the scan
-    Watermark.update(spark, watermarkCsv, table, Watermark.nextWatermark(batch, wm.updateColumn))
-    if (!batch.isEmpty) {
-      IO.writeJsonLines(batch, IO.datedPath(landzone, "stream", table, "json", yyyyMMdd, stamp))
+    val seen = Observation()
+    val landing = IO.datedPath(landzone, "stream", table, "json", yyyyMMdd, stamp)
+    IO.writeJsonLines(
+      batch.observe(seen, count(lit(1)).as("rows"),
+        max(col(wm.updateColumn)).cast("string").as("next_wm")),
+      landing)
+    val m = seen.get
+    // the count is only known once the landing write has run, so an
+    // empty batch drops the empty directory that write left behind
+    if (m("rows").asInstanceOf[Long] == 0L)
+      graft.streaming.Streams.deleteDir(spark, landing)
+    else {
       IO.writeParquet(
         Rows.stringifyColumns(batch, Seq.empty),
         IO.datedPath(archive, "archives", table, "parquet", yyyyMMdd, stamp))
+      Watermark.update(spark, watermarkCsv, table, Option(m("next_wm").asInstanceOf[String]))
     }
     batch
   }

@@ -579,16 +579,23 @@ object Streams {
                           keys: Seq[String], order: Seq[String], nBuckets: Int): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keyed = batch.withColumn("__bucket", pmod(col(keys.head), lit(nBuckets.toLong)))
-    val touched = keyed.select("__bucket").distinct()
-      .collect().map { r =>
-        // a permissive JSON source emits NULL (not a parse error) for a
-        // missing key field; pmod(null) is a null bucket — fail with
-        // the column name instead of an opaque NPE mid-stream
-        require(!r.isNullAt(0),
-          s"upsertBucketedBatch: merge key '${keys.head}' contains NULL — " +
-            "filter or repair null-key records before the merge")
-        r.getLong(0)
-      }.toSeq
+    // touched buckets: distinct per partition, then one collect — one
+    // job, no exchange (a global distinct() plans a shuffle and a
+    // second job for at most nBuckets values)
+    val touched = {
+      import spark.implicits._
+      keyed.select("__bucket").as[Option[Long]]
+        .mapPartitions(_.toSet.iterator)
+        .collect().distinct.map { b =>
+          // a permissive JSON source emits NULL (not a parse error) for a
+          // missing key field; pmod(null) is a null bucket — fail with
+          // the column name instead of an opaque NPE mid-stream
+          require(b.isDefined,
+            s"upsertBucketedBatch: merge key '${keys.head}' contains NULL — " +
+              "filter or repair null-key records before the merge")
+          b.get
+        }.toSeq
+    }
     // an empty micro-batch (e.g. an empty JSON file) touches no bucket:
     // writing would be pure metadata churn (dynamic overwrite of zero
     // partitions still creates a job + _SUCCESS churn) — a merge of

@@ -1042,6 +1042,50 @@ class OperatorsSpec extends SparkSpec {
     } finally conf.unset("graft.lock.settle.ms")
   }
 
+  test("lock read-back: a torn data/.crc pair settles and re-reads; a lasting tear still names one holder") {
+    import org.apache.hadoop.fs.{ChecksumException, ChecksumFileSystem, Path}
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_torn_marker"
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ck = fs.asInstanceOf[ChecksumFileSystem]
+    fs.delete(new Path(dir), true)
+    val m = new Path(s"$dir/.claim.lock")
+    def write(p: Path, holder: String): Unit = {
+      val o = fs.create(p, true)
+      o.write(s"""{"holder":"$holder","acquired_at_ms":1}""".getBytes("UTF-8")); o.close()
+    }
+    def read(): String = {
+      val in = fs.open(m)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    // the marker's .crc from claimer B, its data from claimer A: the
+    // interleaving two racing claimers can leave on the local FS
+    def tear(): Unit = {
+      write(m, "hostB:pid1:bbbb")
+      assert(new java.io.File(ck.getChecksumFile(m).toUri.getPath).exists())
+      val raw = new java.io.FileOutputStream(m.toUri.getPath)
+      raw.write("""{"holder":"hostA:pid1:aaaa","acquired_at_ms":1}""".getBytes("UTF-8"))
+      raw.close()
+      intercept[ChecksumException](read())
+    }
+    val conf = fs.getConf
+    conf.setLong("graft.lock.settle.ms", 1500L)
+    try {
+      // a racer that finishes its writes inside the settle window: the
+      // re-read sees its consistent marker
+      tear()
+      val racer = new Thread(() => { Thread.sleep(150L); write(m, "hostC:pid1:cccc") })
+      racer.start()
+      val back = graft.io.IO.readClaimBack(fs, m)
+      racer.join()
+      assert(back.contains("hostC:pid1:cccc"), back)
+      // a tear that outlasts the settle: the data names one holder, and
+      // the marker is readable afterwards (the stale .crc is gone)
+      tear()
+      assert(graft.io.IO.readClaimBack(fs, m).contains("hostA:pid1:aaaa"))
+      assert(read().contains("hostA:pid1:aaaa"))
+    } finally conf.unset("graft.lock.settle.ms")
+  }
+
   test("empty lock marker settles before classifying; process-lock release is token-verified (r20 ADVICE)") {
     import org.apache.hadoop.fs.Path
     val man = s"${sys.props("java.io.tmpdir")}/graft_test_emptymarker_man"
@@ -1553,6 +1597,16 @@ class OperatorsSpec extends SparkSpec {
     val got = graft.llm.DedupLsh.nearDupClusters(chain)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == (0L to 20L).map(i => i -> 0L))
+  }
+
+  test("Cluster assignment: a 1000-node path converges; a 3000-node path fails loudly at the cap") {
+    def path(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val ok = graft.llm.DedupLsh.nearDupClusters(path(1000L))
+    assert(ok.select(countDistinct("cluster"), min("cluster"), count(lit(1)))
+      .as[(Long, Long, Long)].head() == ((1L, 1L, 1000L)))
+    val e = intercept[IllegalStateException](graft.llm.DedupLsh.nearDupClusters(path(3000L)))
+    assert(e.getMessage.contains("did not converge") && e.getMessage.contains("10 iterations")
+      && e.getMessage.contains("Σlabel by"), e.getMessage)
   }
 
   test("Cluster assignment: reliable checkpoints converge to identical labels") {

@@ -48,6 +48,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (p +: below) ++ p.subqueries.flatMap(allPhysicalNodes)
   }
 
+  /** Run `f` and return its value with the number of Spark jobs it
+    * started (the listener bus is drained before and after). */
+  def withJobCount[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = f
+      org.apache.spark.TestBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   override def afterAll(): Unit = () // session shared across suites
 }
 

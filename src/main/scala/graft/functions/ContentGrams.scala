@@ -60,7 +60,7 @@ object ContentGrams {
 
   /** [[graft.ops.Text.StopWords]] as a hash set; tokens are short, so
     * String hashing beats a linear array_contains scan as well. */
-  private val stop: java.util.HashSet[UTF8String] = {
+  private[functions] val stop: java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String]()
     graft.ops.Text.StopWords.foreach(w => s.add(UTF8String.fromString(w)))
     s
@@ -71,7 +71,7 @@ object ContentGrams {
   /** Java regex \s (default flags): exactly these six ASCII bytes. In
     * UTF-8 they only ever appear as standalone ASCII chars (every
     * continuation byte is >= 0x80), so byte-level splitting is exact. */
-  private def isWs(b: Byte): Boolean =
+  private[functions] def isWs(b: Byte): Boolean =
     b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
       b == 0x0B.toByte || b == '\f'.toByte || b == '\r'.toByte
 

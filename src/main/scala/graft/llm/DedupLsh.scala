@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.ops.Text
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication for a training-data pipeline.
@@ -40,28 +40,20 @@ object DedupLsh {
   def shingles(textCol: Column, n: Int = 3): Column =
     shinglesFromTokens(split(textCol, "\\s+"), n)
 
-  /** The individual MinHash expressions: for seed s, min over shingles
-    * of md5("s|" + shingle). Returned as separate Columns so band keys
-    * can consume each exactly once — packing them into an array() and
-    * reading back via element_at would re-evaluate the whole signature
-    * per access (no subexpression elimination under HOFs). */
-  def minhashExprs(sh: Column, numHashes: Int): Seq[Column] =
-    (0 until numHashes).map { seed =>
-      array_min(transform(sh, x => md5(concat(lit(s"$seed|"), x))))
-    }
-
-  /** MinHash signature as one array column (API convenience). */
-  def minhashSignature(sh: Column, numHashes: Int): Column =
-    array(minhashExprs(sh, numHashes): _*)
-
-  /** Band keys built directly from the per-seed min-hash expressions:
-    * `numBands` groups of `rowsPerBand`, each one bucket key prefixed
-    * with the band index so buckets from different bands never collide. */
+  /** Band keys: `numBands` groups of `rowsPerBand` MinHash minima, each
+    * one bucket key `b#m1#m2…` prefixed with the band index so buckets
+    * from different bands never collide; the minimum for seed s is the
+    * least md5("s|" + shingle) hex digest over the shingles. The native
+    * [[graft.functions.MinHashBands]] kernel (`minhashbandsq`) computes
+    * them in one pass, bit-identical to the composable form
+    * `concat_ws('#', 'b', array_min(transform(sh, x -> md5(concat('s|',
+    * x)))), …)` that the DuckDB oracles replay. Registers the kernel in
+    * the active session, so probes and sessions without
+    * [[graft.plans.GraftExtensions]] resolve it too. */
   def bandKeys(sh: Column, numBands: Int, rowsPerBand: Int): Column = {
-    val sigs = minhashExprs(sh, numBands * rowsPerBand)
-    array((0 until numBands).map { b =>
-      concat_ws("#", lit(b.toString) +: sigs.slice(b * rowsPerBand, (b + 1) * rowsPerBand): _*)
-    }: _*)
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .foreach(graft.functions.MinHashBands.register)
+    call_function("minhashbandsq", sh, lit(numBands), lit(rowsPerBand))
   }
 
   /** Distinct Jaccard similarity of two shingle arrays (composable
@@ -142,14 +134,14 @@ object DedupLsh {
     // × selectivity heuristics) and would BROADCAST a corpus-sized
     // side (OOM at 50k docs, fatal at real scale); the hint's build
     // side is thin (band, id) rows, small at any corpus size. The two
-    // VERIFY joins carry NO hint (round-11 A/B,
-    // probe_x2_verify_join*.sc): un-hinted, the static planner picks
-    // sort-merge (both sides' estimates exceed the broadcast
-    // threshold: the pairs side is a join output, whose estimate can
-    // only OVERshoot, and the shingle side is scan-derived, which
-    // scales with the files) and AQE then converts to broadcast-hash
-    // at runtime exactly when the measured shingle table is genuinely
-    // small — 1.7 s vs the pinned-merge 3.1 s at sf0.1, bit-identical.
+    // VERIFY joins carry NO hint (round-11 A/B, PROBES.md): un-hinted,
+    // the static planner picks sort-merge (both sides' estimates exceed
+    // the broadcast threshold: the pairs side is a join output, whose
+    // estimate can only OVERshoot, and the shingle side is
+    // scan-derived, which scales with the files) and AQE then converts
+    // to broadcast-hash at runtime exactly when the measured shingle
+    // table is genuinely small — 1.7 s vs the pinned-merge 3.1 s at
+    // sf0.1, bit-identical.
     // Under pressure the conversion simply never fires and the
     // sort-merge spills and finishes: 1M docs at 3 GB/8-core AND
     // 2 GB/4-core heap complete with the identical pair checksum and
@@ -164,29 +156,10 @@ object DedupLsh {
     // dedup (id_a, id_b) BEFORE the jaccard verify: a pair colliding in
     // k bands would otherwise pay k verifies (the verify is the hot
     // loop at scale — round-3 verdict).
-    // overridable for A/B measurement (system property
-    // graft.dedup.verifyJoin = none | merge | shuffle_hash); "none"
-    // is the shipping default per the probes above. Fail fast on any
-    // other value: the analyzer DROPS unrecognized hints with only a
-    // log warning, so a typo'd A/B run would silently measure the
-    // un-hinted plan while reporting the requested mode.
-    val verifyHint = sys.props.getOrElse("graft.dedup.verifyJoin", "none")
-    require(Set("none", "merge", "shuffle_hash").contains(verifyHint),
-      s"graft.dedup.verifyJoin must be none|merge|shuffle_hash, got '$verifyHint'")
-    // ...except in the STATIC-BROADCAST danger band, where hint-free
-    // planning is pinned back to merge (see verifyJoinStaticRisk)
-    val sessConf = df.sparkSession.sessionState.conf
-    // lazy: only the "none" branch reads it — an explicit A/B override
-    // must not pay the driver-side analyze+optimize of the shingle
-    // subplan whose result it then ignores (round-11 review finding)
-    lazy val staticRisk = verifyJoinStaticRisk(
+    val staticRisk = verifyJoinStaticRisk(
       withSh.queryExecution.optimizedPlan.stats.sizeInBytes,
-      sessConf.autoBroadcastJoinThreshold)
-    def hinted(frame: DataFrame): DataFrame = verifyHint match {
-      case "none" if staticRisk => frame.hint("merge")
-      case "none"               => frame
-      case h                    => frame.hint(h)
-    }
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    def hinted(frame: DataFrame): DataFrame = if (staticRisk) frame.hint("merge") else frame
     val verified = a.join(b.hint("shuffle_hash"), Seq("band"))
       .filter(col("id_a") < col("id_b"))
       .dropDuplicates("id_a", "id_b")
@@ -256,7 +229,8 @@ object DedupLsh {
     * (measured 20 s vs 2 s at sf0.1). The repartition spreads the
     * CPU-bound shingle/minhash maps, and is skipped when the input
     * already has ≥ parallelism splits (any real-scale corpus) —
-    * split-count estimate from plan stats, not `df.rdd`
+    * split-count estimate from plan stats or a materialized cache's
+    * partition count, not `df.rdd`
     * ([[graft.ops.Partitions.spreadForCpu]], round-7 verdict). */
   private def shingleTable(df: DataFrame, idCol: String, textCol: String,
                            shingleN: Int): DataFrame = {
@@ -472,15 +446,21 @@ object DedupLsh {
     * any pair gets the minimum doc id of its connected component —
     * the canonical-representative choice a dedup pipeline needs before
     * dropping non-canonical members. Iterative min-label propagation
-    * (Pregel-lite: join labels along edges, take the min, then a
-    * pointer-jumping hop, repeat until no label changes) — each
-    * iteration is two equi-joins + an aggregate, and pointer jumping
-    * makes the iteration count O(log diameter), so even pathological
-    * chained-near-dup components converge in a handful of shuffle
-    * rounds. A run that reaches `maxIter` without two equal Σlabel
-    * values runs one edge-consistency check and throws if any edge
-    * still joins two labels — never a quietly split component. */
-  /** @param reliableCheckpoints checkpoint durability for the
+    * (Pregel-lite), repeated until Σlabel stops falling. One iteration:
+    *  1. union-min: `labels ∪ (edges ⋈ labels)` grouped by id, so each
+    *     id takes the least of its own label and its neighbours' in one
+    *     aggregate (no separate neighbour-min and left join);
+    *  2. pointer jumping, label(v) ← label(label(v)): one equi-join
+    *     that halves the remaining component diameter, so convergence
+    *     takes O(log d) iterations instead of O(d) — 6 instead of 1000
+    *     shuffle rounds on a chained near-dup component at web scale;
+    *  3. an eager checkpoint whose `Observation` yields Σlabel, so the
+    *     convergence test runs no job of its own.
+    * A run that reaches `maxIter` without two equal Σlabel values runs
+    * one edge-consistency check and throws if any edge still joins two
+    * labels — never a quietly split component.
+    *
+    * @param reliableCheckpoints checkpoint durability for the
     *   iterative loop. `None` (default) = reliable `df.checkpoint()`
     *   exactly when the SparkContext has a checkpoint dir configured,
     *   else executor-local checkpoints. Local checkpoints live in
@@ -505,11 +485,16 @@ object DedupLsh {
     // union branch on first materialization (only the banded staging
     // below it is cached — measured 2× the whole candidate+verify
     // phase on x8/x10). Checkpointing materializes the pair list once
-    // and both branches read the cached RDD. EXCEPT when pairs is
-    // already a bare file scan (the staged-artifact path, x8b/x15b):
-    // the parquet IS the materialization — both union branches read a
-    // columnar, pruned scan, and re-copying it into block storage
-    // would cost an extra job at any scale for nothing.
+    // and both branches read the cached RDD. It also cuts the lineage:
+    // even a pair list the caller cached and materialized carries its
+    // whole candidate+verify plan, which every iteration would analyze
+    // and match against the cache again (measured 0.9 s per iteration
+    // on the curation benchmark's cached pairs against 0.4 s with the
+    // checkpoint). EXCEPT when pairs is already a bare file scan (the
+    // staged-artifact path, x8b/x15b): the parquet IS the
+    // materialization — both union branches read a columnar, pruned
+    // scan, and re-copying it into block storage would cost an extra
+    // job at any scale for nothing.
     val alreadyMaterialized = pairs.queryExecution.optimizedPlan match {
       case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
       case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => true
@@ -532,47 +517,39 @@ object DedupLsh {
     var labels = ck(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     // convergence via Σlabel: labels are component-wise non-increasing
-    // (every update takes a least()), so an iteration changed something
-    // iff the sum strictly dropped — one cheap aggregate over the
-    // cached checkpoint instead of a join+filter+count per iteration.
-    // decimal(38,0) keeps the sum exact where a long sum could overflow
-    // on web-scale id spaces (2^40 ids × 2^30 docs > 2^63).
-    // sum over zero rows is NULL — map it to 0 or an empty pair list
-    // NPEs at the first compareTo (empty input must just converge)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
-    // no initial labelSum job: iteration 1 strictly decreases Σlabel
-    // whenever the edge list is non-empty (every labeled vertex has a
-    // neighbor, and each component's non-min members take a least()),
-    // so the first convergence compare can only fire from iteration 2
-    // on — null stands for "no previous sum yet" and saves one action
-    // per call (empty input pays one harmless extra no-op iteration)
+    // (every update takes a min), so an iteration changed something iff
+    // the sum strictly dropped. The sum is an Observation on the
+    // iteration's eager checkpoint: it completes with the checkpoint's
+    // own job, so the test costs no action. decimal(38,0) keeps the sum
+    // exact where a long sum could overflow on web-scale id spaces
+    // (2^40 ids × 2^30 docs > 2^63); a sum over zero rows is NULL, read
+    // as 0, so an empty pair list just converges.
+    //
+    // no initial sum: iteration 1 strictly decreases Σlabel whenever
+    // the edge list is non-empty (every labeled vertex has a neighbor,
+    // and each component's non-min members take a smaller label), so
+    // the first convergence compare can only fire from iteration 2 on —
+    // null stands for "no previous sum yet" (empty input pays one
+    // harmless extra no-op iteration)
     var prevSum: java.math.BigDecimal = null
     var lastDrop: java.math.BigDecimal = null
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val prop = edges
-        .join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src"))
-        .agg(min(col("label")).as("nbr_min"))
       val viaNbr = labels
-        .join(prop, labels("id") === prop("src"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-      // pointer jumping: label(v) ← label(label(v)). One extra
-      // equi-join per iteration halves the remaining component
-      // diameter, so convergence is O(log d) iterations instead of
-      // O(d) — the difference between 6 and 1000 shuffle rounds on a
-      // chained near-dup component at web scale.
+        .unionByName(edges.join(labels, edges("dst") === labels("id"))
+          .select(col("src").as("id"), col("label")))
+        .groupBy(col("id"))
+        .agg(min(col("label")).as("label"))
       val lbl = viaNbr.select(col("id").as("pj_id"), col("label").as("pj_label"))
+      val labelSum = Observation()
       val updated = ck(viaNbr
         .join(lbl, viaNbr("label") === lbl("pj_id"), "left")
         .select(viaNbr("id"),
-          least(viaNbr("label"), coalesce(col("pj_label"), viaNbr("label"))).as("label")))
-      val newSum = labelSum(updated)
+          least(viaNbr("label"), coalesce(col("pj_label"), viaNbr("label"))).as("label"))
+        .observe(labelSum, sum(col("label").cast("decimal(38,0)")).as("s")))
+      val newSum = Option(labelSum.get("s").asInstanceOf[java.math.BigDecimal])
+        .getOrElse(java.math.BigDecimal.ZERO)
       // `updated`'s checkpoint is eager, so the previous labels are
       // unreferenced now — release their blocks instead of waiting on
       // the ContextCleaner (Dataset.unpersist would be a no-op on a

@@ -40,6 +40,11 @@ object Pq {
 
   private val Dim = 64
 
+  /** One codebook cell of the [[trainCodebooks]] broadcast operand:
+    * the `array<struct<cell_id, cv>>` element [[graft.functions.NearestCell]]
+    * reads by ordinal. */
+  private[llm] case class Cell(cell_id: Long, cv: Seq[Long])
+
   /** Integer squared-L2 between two equal-length BIGINT arrays. */
   private def l2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
@@ -81,6 +86,9 @@ object Pq {
     * integer argmin, identical (d asc, cell_id asc) tie-break. */
   def trainCodebooks(v: DataFrame, m: Int = 8, numCells: Int = 16,
                      iters: Int = 2): DataFrame = {
+    require(m.toLong * numCells <= Similarity.MaxDriverCentroids,
+      s"trainCodebooks keeps m·numCells = ${m.toLong * numCells} centroid rows on the " +
+        s"driver between iterations; the bound is ${Similarity.MaxDriverCentroids}")
     val spark = v.sparkSession
     graft.functions.NearestCell.register(spark)
     import spark.implicits._
@@ -100,7 +108,7 @@ object Pq {
       .select(col("s"), col("vec_id").as("cell_id"), col("sv").as("cv")))
     def cellsFrame(cs: Seq[(Int, Long, Seq[Long])]): DataFrame =
       cs.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (s, rows) => (s, rows.sortBy(_._2).map(t => (t._2, t._3))) }
+        .map { case (s, rows) => (s, rows.sortBy(_._2).map(t => Cell(t._2, t._3))) }
         .toDF("s", "cells")
     for (_ <- 0 until iters) {
       val assigned = sv.join(broadcast(cellsFrame(cents)), Seq("s"))

@@ -23,6 +23,18 @@ object Similarity {
 
   val Scale = 1000000L
 
+  /** Bound on the centroid rows k-means training keeps on the driver
+    * between iterations ([[kmeansCodebookQ]], [[Pq.trainCodebooks]]).
+    * Each row is a boxed vector (about 1.6 KB at the default 64
+    * dims), so the bound keeps that copy, and the one-row broadcast
+    * operand rebuilt from it each iteration, near 100 MB. */
+  val MaxDriverCentroids: Long = 1L << 16
+
+  /** One codebook cell of the [[centsArrayFrameCosLocal]] broadcast
+    * operand, with `c2 = Σcv²`: the `array<struct<cell_id, cv, c2>>`
+    * element [[graft.functions.NearestCell]] reads by ordinal. */
+  private[llm] case class CosCell(cell_id: Long, cv: Seq[Long], c2: Long)
+
   /** array<float> → array<long> fixed-point, with the amplitude
     * contract ENFORCED across EVERY integer kernel downstream: each
     * component needs |x| ≤ sqrt(Long.MaxValue / (16·d)) / 1e6 (≈95 at
@@ -218,7 +230,7 @@ object Similarity {
                                       cents: Seq[(Long, Seq[Long])]): DataFrame = {
     import spark.implicits._
     Seq(Tuple1(cents.sortBy(_._1).map { case (id, cv) =>
-      (id, cv, cv.map(x => x * x).sum)
+      CosCell(id, cv, cv.map(x => x * x).sum)
     })).toDF("cells")
   }
 
@@ -254,6 +266,9 @@ object Similarity {
     // local rows, never a re-executed training chain).
     def collectCents(df: DataFrame): Seq[(Long, Seq[Long])] =
       df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq.sortBy(_._1)
+    require(numCells <= MaxDriverCentroids,
+      s"kmeansCodebookQ keeps numCells = $numCells centroid rows on the driver " +
+        s"between iterations; the bound is $MaxDriverCentroids")
     var cents = collectCents(v.filter(col("vec_id") < numCells)
       .select(col("vec_id").as("cell_id"), col("nv").as("cv")))
     for (_ <- 0 until iters) {

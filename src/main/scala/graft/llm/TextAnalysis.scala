@@ -5,9 +5,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline: language ID,
-  * quality scoring, token counting, document fingerprinting. All pure
-  * Column expressions (codegen-friendly, zero UDFs), all with exact
-  * cross-engine determinism so every one is oracle-checkable.
+  * quality scoring, token counting, document fingerprinting. Column
+  * expressions without UDFs: composable built-ins, plus native Catalyst
+  * kernels for language ID and quality score (whole-stage codegen, one
+  * pass per text). All with exact cross-engine determinism, so every
+  * one is oracle-checkable.
   */
 object TextAnalysis {
 
@@ -22,34 +24,28 @@ object TextAnalysis {
 
   private def tokens(c: Column): Column = split(c, "\\s+")
 
-  /** Language ID: distinct-token overlap with each language's function
-    * words; winner = max hits, ties broken by language code, zero hits
-    * → "und" (undetermined). */
-  def langId(text: Column): Column = {
-    val ts = tokens(text)
-    val hits = LangWords.map { case (lang, ws) =>
-      (lang, size(array_intersect(ts, array(ws.map(lit): _*))))
-    }
-    // fold to (bestLang, bestHits), visiting in lexicographic lang
-    // order so ties keep the earlier code
-    val (l0, h0) = hits.head
-    val (bestLang, bestHits) = hits.tail.foldLeft((lit(l0), h0)) {
-      case ((bl, bh), (lang, h)) =>
-        (when(h > bh, lit(lang)).otherwise(bl), when(h > bh, h).otherwise(bh))
-    }
-    when(bestHits > 0, bestLang).otherwise(lit("und"))
+  /** Registers the native text kernels in the active session, so
+    * sessions built without [[graft.plans.GraftExtensions]] resolve
+    * them too. */
+  private def native(name: String, text: Column): Column = {
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .foreach(graft.functions.TextScores.register)
+    call_function(name, text)
   }
 
-  /** Quality score ∈ [0,1]: length component × (1 − stop-word ratio).
-    * Same double arithmetic on both engines ⇒ exact compare. */
-  def qualityScore(text: Column): Column = {
-    val ts = tokens(text)
-    val n = size(ts).cast("double")
-    val stopHits =
-      size(filter(ts, t => array_contains(array(Text.StopWords.map(lit): _*), t))).cast("double")
-    val lengthComponent = least(n / lit(50.0), lit(1.0))
-    lengthComponent * (lit(1.0) - stopHits / n)
-  }
+  /** Language ID: distinct-token overlap with each language's function
+    * words; winner = max hits, ties broken by [[LangWords]] order, zero
+    * hits (or a NULL text) → "und" (undetermined). One native pass
+    * ([[graft.functions.TextScores]]), value-identical to the
+    * composable `size(array_intersect(split(text, '\s+'), words))`
+    * fold the DuckDB oracle replays. */
+  def langId(text: Column): Column = native("langidq", text)
+
+  /** Quality score ∈ [0,1]: length component × (1 − stop-word ratio),
+    * `least(n / 50, 1) * (1 - stopHits / n)` over the n whitespace
+    * tokens. Same double arithmetic on both engines ⇒ exact compare;
+    * one native pass ([[graft.functions.TextScores]]). */
+  def qualityScore(text: Column): Column = native("qscoreq", text)
 
   /** Token counts: naive whitespace split vs a BPE-ish [a-z0-9]+ regex
     * tokenization. */

@@ -4,9 +4,10 @@ import org.apache.spark.sql.DataFrame
 
 /** Partition-spreading heuristic shared by the CPU-bound narrow
   * stages (shingle/minhash staging, vector quantization, media
-  * encode): a small input arrives as one or two splits, and without a
-  * repartition all the per-row heavy work lands on those tasks
-  * (measured 20 s vs 2 s at sf0.1 for the shingle path).
+  * encode): a small input arrives as one or two splits (or one
+  * AQE-coalesced cached partition), and without a repartition all the
+  * per-row heavy work lands on those tasks (measured 20 s vs 2 s at
+  * sf0.1 for the shingle path).
   *
   * The "is the input already wide?" test must not construct the
   * frame's RDD — `df.rdd` physically plans the subtree a second time
@@ -25,29 +26,52 @@ import org.apache.spark.sql.DataFrame
   */
 object Partitions {
 
-  /** `df` repartitioned to default parallelism when it scans files
-    * and its estimated input-split count is below it; unchanged (no
-    * shuffle) otherwise. Memory-backed frames (Range, LocalRelation,
-    * checkpoint LogicalRDDs, post-shuffle subtrees) are left alone:
-    * they are already as parallel as their producer made them, their
-    * stats don't model split counts, and a gratuitous round-robin
-    * here would also destroy a partitioning the planner could have
-    * used downstream (Range's RangePartitioning elides a whole
-    * exchange in the incremental-dedup plan). */
+  /** `df` repartitioned to default parallelism when its input is known
+    * to be narrower than that; unchanged (no shuffle) otherwise. Two
+    * kinds of input are known on the driver without running a job:
+    *  - file scans: the split count is estimated from the leaf sizes
+    *    (above), and every other leaf beside them is ignored;
+    *  - materialized caches: an `InMemoryRelation` whose blocks are all
+    *    stored knows its partition count, so a plan whose every leaf is
+    *    one spreads when together they hold fewer partitions than the
+    *    parallelism. AQE coalesces a small frame to one partition
+    *    before it is cached, and the per-row work over it would run in
+    *    that one task.
+    * Every other frame (Range, LocalRelation, checkpoint LogicalRDDs,
+    * caches not yet materialized) is left alone: it is as parallel as
+    * its producer made it, its stats don't model split counts, and a
+    * gratuitous round-robin here would also destroy a partitioning the
+    * planner could have used downstream (Range's RangePartitioning
+    * elides a whole exchange in the incremental-dedup plan). */
   def spreadForCpu(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    val fileLeafBytes = plan.collectLeaves().collect {
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    val fileLeafBytes = leaves.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.stats.sizeInBytes
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         r.stats.sizeInBytes
     }
-    if (fileLeafBytes.isEmpty) return df
     val par = spark.sparkContext.defaultParallelism
-    val maxSplitBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val estSplits = fileLeafBytes.sum / math.max(maxSplitBytes, 1L)
-    if (estSplits < par) df.repartition(par) else df
+    val narrow =
+      if (fileLeafBytes.nonEmpty) {
+        val maxSplitBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+          spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+        fileLeafBytes.sum / math.max(maxSplitBytes, 1L) < par
+      } else {
+        val cached = leaves.map(cachedPartitions)
+        cached.nonEmpty && cached.forall(_.isDefined) && cached.flatten.sum < par
+      }
+    if (narrow) df.repartition(par) else df
+  }
+
+  /** The partition count of a materialized cache leaf, read from the
+    * driver's block status (no job); None for any other leaf. */
+  private[graft] def cachedPartitions(
+      leaf: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[Int] = leaf match {
+    case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
+        if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+      Some(r.cacheBuilder.cachedColumnBuffers.getNumPartitions)
+    case _ => None
   }
 }

@@ -76,6 +76,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(graft.functions.WinnowFingerprint.descriptor)
     ext.injectFunction(graft.functions.NfcNormalize.descriptor)
     ext.injectFunction(graft.functions.ContentGrams.descriptor)
+    ext.injectFunction(graft.functions.MinHashBands.descriptor)
+    graft.functions.TextScores.descriptors.foreach(ext.injectFunction)
     graft.functions.NearestCell.descriptors.foreach(ext.injectFunction)
   }
 }

@@ -2765,7 +2765,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("X2 plan: un-hinted verify joins stay sort-merge at scale, broadcast-convert when small") {
-    // round-11 contract (probe_x2_verify_join*.sc): the verify joins
+    // round-11 contract (PROBES.md verify-join A/B): the verify joins
     // carry NO hint. Above the broadcast threshold (every real-scale
     // corpus — emulated here with threshold -1) the planner must pick
     // sort-merge, NEVER a shuffled-hash build: an SHJ build is

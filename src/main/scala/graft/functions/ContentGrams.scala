@@ -117,13 +117,9 @@ object ContentGrams {
     ContentGrams(args.head)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gramsq", builder, "built-in")
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptor)
 
-  val descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val descriptor: Kernels.Descriptor = (
     org.apache.spark.sql.catalyst.FunctionIdentifier("gramsq"),
     new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
       classOf[ContentGrams].getName, null, "gramsq",

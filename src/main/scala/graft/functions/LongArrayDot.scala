@@ -80,16 +80,12 @@ object LongArrayDot {
   }
 
   /** Make `dotq(a, b)` available to `expr(...)` in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dotq", builder, "built-in")
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptor)
 
   /** Descriptor for `SparkSessionExtensions.injectFunction` — sessions
     * built with [[graft.plans.GraftExtensions]] get `dotq` without a
     * per-session register() call. */
-  val descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val descriptor: Kernels.Descriptor = (
     org.apache.spark.sql.catalyst.FunctionIdentifier("dotq"),
     new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
       classOf[LongArrayDot].getName, "dotq"),

@@ -175,18 +175,10 @@ object MinHashBands {
     MinHashBands(args.head, bands, rows)
   }
 
-  /** Registers `minhashbandsq` unless the session already resolves it
-    * (injected by [[graft.plans.GraftExtensions]], or registered before),
-    * so per-call registration does not log a replacement each time. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(descriptor._1))
-      reg.createOrReplaceTempFunction("minhashbandsq", builder, "built-in")
-  }
+  /** Make `minhashbandsq` available to `expr(...)` in this session. */
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptor)
 
-  val descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val descriptor: Kernels.Descriptor = (
     org.apache.spark.sql.catalyst.FunctionIdentifier("minhashbandsq"),
     new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
       classOf[MinHashBands].getName, null, "minhashbandsq",

@@ -267,17 +267,10 @@ object NearestCell {
 
   /** Make `nearest_cell_cos` / `nearest_cell_l2` available to
     * `expr(...)` in this session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell_cos", builder(useL2 = false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell_l2", builder(useL2 = true), "built-in")
-  }
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptors: _*)
 
   /** Descriptors for `SparkSessionExtensions.injectFunction`. */
-  val descriptors: Seq[(org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
+  val descriptors: Seq[Kernels.Descriptor] = Seq(
     (org.apache.spark.sql.catalyst.FunctionIdentifier("nearest_cell_cos"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         classOf[NearestCell].getName, "nearest_cell_cos"),

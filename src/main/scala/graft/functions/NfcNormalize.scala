@@ -73,13 +73,9 @@ object NfcNormalize {
     NfcNormalize(args.head)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfcq", builder, "built-in")
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptor)
 
-  val descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val descriptor: Kernels.Descriptor = (
     org.apache.spark.sql.catalyst.FunctionIdentifier("nfcq"),
     new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
       classOf[NfcNormalize].getName, null, "nfcq",

@@ -96,13 +96,9 @@ object SortedArrayJaccard {
     SortedArrayJaccard(args.head, args(1))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccardq", builder, "built-in")
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptor)
 
-  val descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val descriptor: Kernels.Descriptor = (
     org.apache.spark.sql.catalyst.FunctionIdentifier("jaccardq"),
     new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
       classOf[SortedArrayJaccard].getName, null, "jaccardq",

@@ -128,19 +128,11 @@ object TextScores {
     QualityScore(args.head, SQLConf.get.legacySizeOfNull)
   }
 
-  /** Registers `langidq` and `qscoreq` unless the session already
-    * resolves them (injected by [[graft.plans.GraftExtensions]], or
-    * registered before), so per-call registration does not log a
-    * replacement each time. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    for ((id, _, builder) <- descriptors if !reg.functionExists(id))
-      reg.createOrReplaceTempFunction(id.funcName, builder, "built-in")
-  }
+  /** Make `langidq` and `qscoreq` available to `expr(...)` in this
+    * session. */
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptors: _*)
 
-  val descriptors: Seq[(org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
+  val descriptors: Seq[Kernels.Descriptor] = Seq(
     (org.apache.spark.sql.catalyst.FunctionIdentifier("langidq"),
       info(classOf[LangId], "langidq",
         "langidq(text) - heuristic language id: the language of " +

@@ -125,13 +125,9 @@ object WinnowFingerprint {
     WinnowFingerprint(args.head, k, w)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnowq", builder, "built-in")
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptor)
 
-  val descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val descriptor: Kernels.Descriptor = (
     org.apache.spark.sql.catalyst.FunctionIdentifier("winnowq"),
     new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
       classOf[WinnowFingerprint].getName, null, "winnowq",

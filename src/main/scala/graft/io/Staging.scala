@@ -35,7 +35,7 @@ import org.apache.spark.sql.SparkSession
   * fail fast (no live path) until the next build — or an explicit
   * [[recover]] — restores the previous artifact; nothing is ever torn.
   * Single-writer per artifact root is assumed (the registry's
-  * buildOnce memo / global-lock conventions); the swap protects
+  * `Fixtures.staged` memo / global-lock conventions); the swap protects
   * READERS, it does not arbitrate concurrent writers.
   *
   * Filesystem contract, stated honestly for the 100 TB deployment:

@@ -2,8 +2,10 @@ package graft.llm
 
 import java.io.ByteArrayOutputStream
 
+import graft.functions.Kernels
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
 
 /** Incremental exact dedup of an ingest BATCH against a corpus-sized
@@ -43,9 +45,12 @@ object BloomDedup {
     * the value side must be the xxhash64 of the key — the same longs
     * [[antiJoinBloom]] feeds `stat.bloomFilter` (both ends hash the
     * key to a long first; the sketch's putLong/mightContainLong agree). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", builder, "built-in")
+  def register(spark: SparkSession): Unit = Kernels.registerMissing(spark, descriptor)
+
+  private val descriptor: Kernels.Descriptor = (
+    FunctionIdentifier("bloom_might_contain"),
+    new ExpressionInfo(classOf[BloomFilterMightContain].getName, "bloom_might_contain"),
+    builder)
 
   /** Batch rows whose `keyCol` does not occur in `history` — exact at
     * any `fpp`. `expectedItems` sizes the sketch to the BATCH key

@@ -378,7 +378,7 @@ object Similarity {
     // rename-into-existing-dir filesystems, nests the rebuild inside
     // it) and its rows can vanish with __swap_old (round-14 ADVICE).
     // Serialize appends and rebuilds externally (the registry's
-    // buildOnce memo does; a cluster deployment uses its scheduler's
+    // Fixtures.staged memo does; a cluster deployment uses its scheduler's
     // per-artifact mutual exclusion). Under the VERSIONED layout the
     // append lands in the LIVE version's member table: an append is by
     // nature a mutation of the live build (immutability there is a

@@ -6,6 +6,7 @@ import graft.ops.Rows
 import graft.pipeline.{Browsing, Ingest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Fixtures.scratch
 
 /** Small registered queries that pin down the remaining SURVEY §2
   * operators not already exercised as part of a larger pipeline:
@@ -14,22 +15,18 @@ import org.apache.spark.sql.functions._
   * check, and the faithful global-window E2 variant. */
 object CoverageQueries {
 
-  private def scratch(dir: String, name: String): String = {
-    val sf = new java.io.File(dir).getName
-    s"${sys.props("java.io.tmpdir")}/graft_cov/$sf/$name"
-  }
-
   /** session → sfdir whose `graft_li_b`/`graft_ord_b` bucketed fact
-    * tables are already in this JVM's catalog. A map, not a set: the
-    * table NAMES are fixed, so if the same session later targets a
-    * different sfdir the stale tables must be rebuilt, which a
-    * set-style memo keyed on (session, dir) would silently skip. */
-  private val builtBucketedFacts =
-    new java.util.concurrent.ConcurrentHashMap[Integer, String]()
+    * tables are already in the catalog; the session object itself is
+    * the key, held weakly and compared by identity, as in
+    * [[Fixtures.staged]]. A map, not a set: the table NAMES are fixed,
+    * so if the same session later targets a different sfdir the stale
+    * tables must be rebuilt, which a set-style memo keyed on
+    * (session, dir) would silently skip. */
+  private val builtBucketedFacts = new java.util.WeakHashMap[SparkSession, String]()
 
   /** Write both j3 fact tables bucketed+sorted on the join key, once
     * per (session, sfdir); recorded only after the build returns so a
-    * failed build stays rebuildable (the LlmFixtures buildOnce rule).
+    * failed build stays rebuildable (the [[Fixtures.staged]] rule).
     * The whole check-then-build runs under one global lock: the table
     * NAMES are shared across sessions, so even two builds under
     * different memo keys would race the same DROP + overwrite — and
@@ -37,8 +34,7 @@ object CoverageQueries {
     * entry and double-build (one paying the cost the memo hides). */
   private val bucketedFactsLock = new Object
   private def stageBucketedFacts(s: SparkSession, dir: String): Unit = bucketedFactsLock.synchronized {
-    val key = Integer.valueOf(System.identityHashCode(s))
-    if (builtBucketedFacts.get(key) != dir) {
+    if (builtBucketedFacts.get(s) != dir) {
       s.sql("DROP TABLE IF EXISTS graft_li_b")
       s.sql("DROP TABLE IF EXISTS graft_ord_b")
       // catalog is per-JVM but table dirs persist across runs; derive
@@ -54,7 +50,7 @@ object CoverageQueries {
       Tables.orders(s, dir).select("o_orderkey", "o_custkey")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable("graft_ord_b")
-      builtBucketedFacts.put(key, dir)
+      builtBucketedFacts.put(s, dir): Unit
     }
   }
 
@@ -77,9 +73,9 @@ object CoverageQueries {
     // S7 — CSV → JSON-lines + Parquet re-emit, pipelined (no 4-chunk
     // cap workaround): land CSV, re-emit both formats, read back
     "s7_reemit" -> { (s, dir) =>
-      val csv = scratch(dir, "s7csv")
-      val json = scratch(dir, "s7json")
-      val pq = scratch(dir, "s7parquet")
+      val csv = scratch(dir, "cov/s7csv")
+      val json = scratch(dir, "cov/s7json")
+      val pq = scratch(dir, "cov/s7parquet")
       IO.writeCsv(Tables.region(s, dir), csv)
       val landed = IO.readCsv(s, csv)
         .select(col("r_regionkey").cast("long").as("r_regionkey"), col("r_name"))
@@ -93,7 +89,7 @@ object CoverageQueries {
     // S8 — catalog listing of dated folders under a prefix
     "s8_catalog_list" -> { (s, dir) =>
       import s.implicits._
-      val base = scratch(dir, "s8dated")
+      val base = scratch(dir, "cov/s8dated")
       graft.streaming.Streams.deleteDir(s, base)
       val days = Tables.events(s, dir)
         .select(date_format(col("ts"), "yyyyMMdd").as("day")).distinct()
@@ -106,7 +102,7 @@ object CoverageQueries {
     // S9 — whitespace-only file yields an empty frame, guarded
     "s9_empty_guard" -> { (s, dir) =>
       import s.implicits._
-      val p = scratch(dir, "s9empty")
+      val p = scratch(dir, "cov/s9empty")
       val f = new java.io.File(s"$p/blank.json")
       f.getParentFile.mkdirs()
       java.nio.file.Files.writeString(f.toPath, "   \n  \n")
@@ -131,7 +127,7 @@ object CoverageQueries {
     // K5 idiomatic form — dated layout as parquet partitionBy + pruned
     // scan: the reader of one day touches one directory, not the table
     "k5_partition_prune" -> { (s, dir) =>
-      val p = scratch(dir, "k5part")
+      val p = scratch(dir, "cov/k5part")
       Tables.events(s, dir)
         .withColumn("day", date_format(col("ts"), "yyyyMMdd"))
         .select("event_id", "user_id", "event_type", "day")
@@ -147,7 +143,7 @@ object CoverageQueries {
     // 100 TB this is what keeps a dim-filtered fact join from reading
     // the whole table. Spec asserts the dynamicpruning subquery.
     "k9_dpp_prune" -> { (s, dir) =>
-      val p = scratch(dir, "k9part")
+      val p = scratch(dir, "cov/k9part")
       Tables.events(s, dir)
         .withColumn("day", date_format(col("ts"), "yyyyMMdd"))
         .select("event_id", "user_id", "day")

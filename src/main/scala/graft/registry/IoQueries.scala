@@ -8,6 +8,7 @@ import graft.pipeline.Ingest
 import graft.quality.Quality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Fixtures.{scratch, staged}
 
 /** Registered queries for the IO format matrix, coercions, the
   * watermark/incremental machinery, J1 enrichment and the quality
@@ -17,29 +18,15 @@ import org.apache.spark.sql.functions._
   */
 object IoQueries {
 
-  private def scratch(dir: String, name: String): String = {
-    val sf = new java.io.File(dir).getName
-    s"${sys.props("java.io.tmpdir")}/graft_io/$sf/$name"
-  }
-
-  /** (sessionUUID|dir) binary-file fixture dirs this JVM already wrote
-    * (see s16). */
-  private val binFileDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|dir) landing manifests this JVM already wrote (s18). */
-  private val binManifests =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** The s18/st18 landing MANIFEST over [[binFilesFixture]]'s 20 files:
     * the writer side replayed as two waves (each landing wave logs
     * exactly the files it landed — in production the uploader knows
     * its paths; no directory listing feeds the manifest). Written once
-    * per JVM; the batch reader and the manifest stream share it. */
+    * per session; the batch reader and the manifest stream share it. */
   private[registry] def binManifestFixture(s: SparkSession, dir: String): String = {
     val p = binFilesFixture(s, dir)
-    val man = scratch(dir, "bin_manifest")
-    LlmFixtures.buildOnce(binManifests, s"${System.identityHashCode(s)}|$man") {
+    val man = scratch(dir, "io/bin_manifest")
+    staged(s, man) {
       graft.streaming.Streams.deleteDir(s, man)
       val waves = new java.io.File(p).listFiles().toSeq
         .filter(_.getName.endsWith(".bin")).sortBy(_.getName)
@@ -49,18 +36,17 @@ object IoQueries {
       waves.foreach(w =>
         IO.appendLandingManifest(s, man, w.toDF("path", "length")))
     }
-    man
   }
 
   /** The s16/st16 landing-volume fixture: 20 deterministic .bin files
-    * (UTF-8 prefixes of the documents table), written once per JVM —
-    * bounded test scaffolding (in production the media files
-    * pre-exist). Per-JVM buildOnce (the LlmFixtures memo convention):
-    * a persistent done-marker would go stale if testdata regenerated
-    * under the same sf name; 20 tiny files rewrite in milliseconds. */
+    * (UTF-8 prefixes of the documents table), written once per session
+    * through [[Fixtures.staged]] — bounded test scaffolding (in
+    * production the media files pre-exist). A persistent done-marker
+    * would go stale if testdata regenerated under the same sf path;
+    * 20 tiny files rewrite in milliseconds. */
   private[registry] def binFilesFixture(s: SparkSession, dir: String): String = {
-    val p = scratch(dir, "binfiles")
-    LlmFixtures.buildOnce(binFileDirs, s"${System.identityHashCode(s)}|$p") {
+    val p = scratch(dir, "io/binfiles")
+    staged(s, p) {
       val root = new java.io.File(p)
       root.mkdirs()
       // clear stale *.bin first: a leftover doc_*.bin from an earlier
@@ -77,7 +63,6 @@ object IoQueries {
             r.getString(1).getBytes("UTF-8"))
         }
     }
-    p
   }
 
   /** s16/st16 shared oracle: name, BYTE length and base64 payload
@@ -117,7 +102,7 @@ object IoQueries {
     // decompress transparently, but gzip is NOT splittable — one task
     // per .gz file, so real pipelines keep delivery files shard-sized)
     "s15_gzip_json_roundtrip" -> { (s, dir) =>
-      val p = scratch(dir, "gzip")
+      val p = scratch(dir, "io/gzip")
       Tables.events(s, dir).select("event_id", "user_id", "event_type")
         .write.mode("overwrite").option("compression", "gzip").json(p)
       s.read.json(p)
@@ -129,7 +114,7 @@ object IoQueries {
     // mergeSchema (the footer-union read an append-only lake needs when
     // columns arrive over time); old rows surface NULL for the new column
     "s14_schema_evolution" -> { (s, dir) =>
-      val p = scratch(dir, "evolve")
+      val p = scratch(dir, "io/evolve")
       val ev = Tables.events(s, dir)
       ev.filter(col("event_id") % 2 === 0)
         .select("event_id", "user_id", "event_type")
@@ -142,7 +127,7 @@ object IoQueries {
         .orderBy("event_id")
     },
     "s13_orc_roundtrip" -> { (s, dir) =>
-      val p = scratch(dir, "orc")
+      val p = scratch(dir, "io/orc")
       IO.writeOrc(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"), p)
       IO.readOrc(s, p).orderBy("event_id")
     },
@@ -150,7 +135,7 @@ object IoQueries {
     // ~256 KB-target files; the oracle proves content survives the
     // rewrite bit-for-bit, the spec asserts the file-count collapse
     "k11_compaction" -> { (s, dir) =>
-      val p = scratch(dir, "compact")
+      val p = scratch(dir, "io/compact")
       Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")
         .repartition(40)
         .write.mode("overwrite").parquet(p)
@@ -238,7 +223,7 @@ object IoQueries {
       // two-level structs, read back (spark.read.json infers the nested
       // StructType — the typed twin of per-cell json.loads), flatten to
       // dotted leaf columns (quality_report.py:33-48 flatten_if_json)
-      val p = scratch(dir, "p9nested")
+      val p = scratch(dir, "io/p9nested")
       val nested = Tables.events(s, dir).select(col("event_id"),
         struct(col("user_id"),
           struct(col("event_type"), col("value")).as("detail")).as("meta"))
@@ -246,17 +231,17 @@ object IoQueries {
       graft.ops.Flatten.flatten(IO.readJsonAuto(s, p)).orderBy("event_id")
     },
     "s3_json_roundtrip" -> { (s, dir) =>
-      val p = scratch(dir, "jsonlines")
+      val p = scratch(dir, "io/jsonlines")
       IO.writeJsonLines(eventsSlim(s, dir), p)
       IO.readJsonAuto(s, p).select("event_id", "user_id", "event_type").orderBy("event_id")
     },
     "k2_json_array_roundtrip" -> { (s, dir) =>
-      val p = scratch(dir, "jsonarray")
+      val p = scratch(dir, "io/jsonarray")
       IO.writeJsonArray(eventsSlim(s, dir).orderBy("event_id"), p)
       IO.readJsonAuto(s, p).select("event_id", "user_id", "event_type").orderBy("event_id")
     },
     "s4_csv_roundtrip" -> { (s, dir) =>
-      val p = scratch(dir, "csv")
+      val p = scratch(dir, "io/csv")
       IO.writeCsv(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"), p)
       // inferSchema narrows small ints to int32; restore 64-bit ids
       IO.readCsv(s, p)
@@ -265,7 +250,7 @@ object IoQueries {
         .orderBy("event_id")
     },
     "s5_glob_union" -> { (s, dir) =>
-      val p = scratch(dir, "glob")
+      val p = scratch(dir, "io/glob")
       val ev = eventsSlim(s, dir)
       IO.writeJsonLines(ev.filter(col("event_id") % 2 === 0), s"$p/even.json")
       IO.writeJsonLines(ev.filter(col("event_id") % 2 === 1), s"$p/odd.json")
@@ -274,7 +259,7 @@ object IoQueries {
         .select("event_id", "user_id", "event_type").orderBy("event_id")
     },
     "k4_parquet_roundtrip" -> { (s, dir) =>
-      val p = scratch(dir, "parquet")
+      val p = scratch(dir, "io/parquet")
       IO.writeParquet(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"), p)
       s.read.parquet(p).orderBy("event_id")
     },
@@ -336,7 +321,7 @@ object IoQueries {
     "s19_manifest_compact" -> { (s, dir) =>
       import s.implicits._
       val p = binFilesFixture(s, dir)
-      val man = scratch(dir, "bin_manifest_compact")
+      val man = scratch(dir, "io/bin_manifest_compact")
       graft.streaming.Streams.deleteDir(s, man)
       val waves = new java.io.File(p).listFiles().toSeq
         .filter(_.getName.endsWith(".bin")).sortBy(_.getName)
@@ -356,7 +341,7 @@ object IoQueries {
     },
     "s17_binary_pack" -> { (s, dir) =>
       val p = binFilesFixture(s, dir)
-      val dest = scratch(dir, "binpacked")
+      val dest = scratch(dir, "io/binpacked")
       IO.packBinaryDir(s, s"$p/*.bin", dest)
       IO.readPackedBinary(s, dest)
         .select(col("fname"), col("length"),
@@ -364,7 +349,7 @@ object IoQueries {
         .orderBy("fname")
     },
     "s10_watermark_lookup" -> { (s, dir) =>
-      val csv = scratch(dir, "wm_lookup")
+      val csv = scratch(dir, "io/wm_lookup")
       Watermark.writeTable(s, csv,
         Seq(Watermark.Entry("events", "1704175200000000", "ts_us")))
       val wm = Watermark.lookup(s, csv, "events").get
@@ -374,7 +359,7 @@ object IoQueries {
     },
     "k6_watermark_update" -> { (s, dir) =>
       import s.implicits._
-      val csv = scratch(dir, "wm_update")
+      val csv = scratch(dir, "io/wm_update")
       Watermark.writeTable(s, csv,
         Seq(Watermark.Entry("events", "1704175200000000", "ts_us"),
           Watermark.Entry("other", "0", "x")))
@@ -389,8 +374,8 @@ object IoQueries {
       // one partitioned write job (not one job per dated slice), then
       // driver-side metadata renames into the reference's
       // {base}/{yyyyMMdd}/{yyyyMMddHHmmss}_{entity}.json layout
-      val base = scratch(dir, "dated")
-      val staging = scratch(dir, "dated_staging")
+      val base = scratch(dir, "io/dated")
+      val staging = scratch(dir, "io/dated_staging")
       graft.streaming.Streams.deleteDir(s, base)
       graft.streaming.Streams.deleteDir(s, staging)
       Tables.events(s, dir)
@@ -416,13 +401,13 @@ object IoQueries {
         .select("event_id", "user_id", "event_type").orderBy("event_id")
     },
     "e1_incremental_ingest" -> { (s, dir) =>
-      val csv = scratch(dir, "wm_e1")
+      val csv = scratch(dir, "io/wm_e1")
       Watermark.writeTable(s, csv,
         Seq(Watermark.Entry("events", "1704175200000000", "ts_us")))
       val src = Tables.events(s, dir).withColumn("ts_us", unix_micros(col("ts")))
       Ingest
         .incrementalIngest(s, src, "events", csv,
-          scratch(dir, "land"), scratch(dir, "arch"), "20240102", "20240102060000")
+          scratch(dir, "io/land"), scratch(dir, "io/arch"), "20240102", "20240102060000")
         .select("event_id", "user_id", "event_type", "ts_us")
         .orderBy("event_id")
     },
@@ -430,10 +415,10 @@ object IoQueries {
       // CSV source materialized from lineitem, then the full E3 chain
       // with the hash-gated sample so membership (not just row count)
       // is oracle-checkable; CSV inference narrows ints → restore 64-bit
-      val srcCsv = scratch(dir, "e3src")
+      val srcCsv = scratch(dir, "io/e3src")
       IO.writeCsv(Tables.lineitem(s, dir).select("l_orderkey", "l_linenumber", "l_quantity"), srcCsv)
       Ingest.batchFullLoad(s, srcCsv, "lineitem",
-        scratch(dir, "e3land"), scratch(dir, "e3arch"), "20240101", "20240101000000",
+        scratch(dir, "io/e3land"), scratch(dir, "io/e3arch"), "20240101", "20240101000000",
         sampleKeys = Seq("l_orderkey", "l_linenumber"))
         .select(col("l_orderkey").cast("long").as("l_orderkey"),
           col("l_linenumber").cast("long").as("l_linenumber"), col("l_quantity"))
@@ -449,7 +434,7 @@ object IoQueries {
           Quality.CleanRule("value_pos", "value", col("value") > 0.0),
           Quality.CleanRule("props_json", "props", col("props").startsWith("{")))
       )
-      Ingest.qualityCheck(ev, spec, scratch(dir, "report") + "/report.json",
+      Ingest.qualityCheck(ev, spec, scratch(dir, "io/report") + "/report.json",
         Map("event_id" -> "bigint", "event_type" -> "string"))
     },
     "a8_dtype_check" -> { (s, dir) =>
@@ -472,7 +457,7 @@ object IoQueries {
     // the non-matching files (spec asserts the disjointness; the
     // oracle proves the roundtrip + filter fidelity)
     "k13_clustered_write" -> { (s, dir) =>
-      val p = scratch(dir, "clustered")
+      val p = scratch(dir, "io/clustered")
       IO.writeClustered(
         Tables.events(s, dir).select("event_id", "user_id", "event_type"),
         p, nFiles = 8, col("user_id"), col("event_id"))
@@ -487,7 +472,7 @@ object IoQueries {
     // fidelity on the SECOND dimension; the spec proves the per-file
     // bounding boxes actually shrink.
     "k14_zorder_write" -> { (s, dir) =>
-      val p = scratch(dir, "zorder")
+      val p = scratch(dir, "io/zorder")
       IO.writeZOrdered(
         Tables.events(s, dir).select("event_id", "user_id", "value"),
         p, nFiles = 8,

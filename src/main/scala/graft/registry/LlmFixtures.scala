@@ -4,39 +4,15 @@ import graft.Tables
 import graft.llm.{Classifier, DedupLsh, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Fixtures.{scratch, staged}
 import TextQueries.{StopSql, tokSql, ngramSql}
 
 /** Shared fixtures behind the LLM-pipeline query families: the
-  * synthetic near-dup corpora, build-once memo sets (IVF index,
-  * seeded doc table, staged pair artifact), and the DuckDB SQL
+  * synthetic near-dup corpora, the staged artifacts (built once per
+  * session through [[Fixtures.staged]]), and the DuckDB SQL
   * snippet builders every family's oracle composes. Extracted from
   * LlmQueries in the round-11 mechanical split. */
 private[registry] object LlmFixtures {
-
-  /** Per-corpus scratch root for MEMOIZED build-once artifacts (staged
-    * pair lists, IVF indexes, seeded doc tables): basename for
-    * readability plus a short absolute-path digest, because two
-    * corpora sharing a basename (/data/a/sf0.01 vs /data/b/sf0.01)
-    * must never share a memoized artifact — the memo key includes the
-    * path, so a basename-only path would silently hand corpus B the
-    * artifact built from corpus A. Per-call overwrite sinks don't need
-    * the digest (they rewrite on every invocation). */
-  def corpusScratch(dir: String): String = {
-    val f = new java.io.File(dir).getAbsoluteFile
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(f.getPath.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${sys.props("java.io.tmpdir")}/graft_io/${f.getName}-$tag"
-  }
-
-  /** Build-once memo: run `build` if `key` is unrecorded, recording it
-    * only AFTER the build returns — a failed first build must stay
-    * rebuildable, not poison the JVM-wide memo and hand every later
-    * call a missing or partial artifact (round-11 review finding).
-    * Registry invocations are sequential per session, so check-then-act
-    * is not racy here; a concurrent duplicate build would only
-    * overwrite with identical content. */
-  def buildOnce(memo: java.util.Set[String], key: String)(build: => Unit): Unit =
-    if (!memo.contains(key)) { build; memo.add(key) }
 
   /** Read a staged artifact with crash-window availability on either
     * publish protocol: [[graft.io.Staging.resolveRead]] heals a
@@ -51,81 +27,14 @@ private[registry] object LlmFixtures {
     s.read.parquet(if (sub.isEmpty) live else s"$live/$sub")
   }
 
-  /** (sessionUUID|indexDir) pairs whose IVF index this JVM already
-    * built — see the x7b entry for the build-once contract. */
-  val builtIvfIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|indexDir) pairs whose IVFADC code index this JVM
-    * already built — the x7b contract applied to x23b. */
-  val builtPqIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|indexDir) pairs whose plain-ADC code index this JVM
-    * already built — the x7b contract applied to x22b. */
-  val builtAdcIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|path) pairs whose SemDeDup cell-assignment artifact
-    * this JVM already staged — the x7b contract applied to x17b. */
-  val builtSemanticCells =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|tablePath) doc tables this JVM already seeded with
-    * the corpus — the e5 upsert then only writes the batch's touched
-    * buckets, the O(touched-buckets) property the operator exists for. */
-  val seededDocTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|pairsDir) staged pair artifacts this JVM already
-    * wrote — the x7b build-once contract applied to the dedup family. */
-  val stagedPairTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|bandsDir) staged corpus band tables this JVM already
-    * wrote — same build-once contract, for the incremental sweep. */
-  val stagedBandTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|spanDir) staged corpus window-hash sets — the span
-    * family's incremental artifact. */
-  val stagedSpanTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|bucketsDir) staged corpus sign-bucket tables — the
-    * embedding family's incremental artifact. */
-  val stagedEmbBucketTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|modelDir) staged NB model artifacts — the
-    * classifier family's train-once/serve-many split. */
-  val stagedNbModels =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|fpsDir) staged SimHash fingerprint tables — the
-    * simhash family's fingerprint-once/sweep-many split. */
-  val stagedSimhashTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|modelDir) staged BPE merge tables — the tokenizer's
-    * train-once/encode-many split. */
-  val stagedBpeModels =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** (sessionUUID|modelDir) staged DSIR models — the data-selection
-    * family's train-once/score-many split. */
-  val stagedDsirModels =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** The trained DSIR model (vocab + totals) as a staged artifact (see
     * [[graft.llm.Corpus.stageDsirModel]]): trained once per
     * (reference, crawl) snapshot pair, re-read per scoring sweep by
-    * y21b. Same memoization contract as [[stagedNearDupPairs]]. The
-    * target rule is y21's (`lang = 'en'`), shared so the model can
-    * never drift from the oracle's. */
+    * y21b. The target rule is y21's (`lang = 'en'`), shared so the
+    * model can never drift from the oracle's. */
   def stagedDsirModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val path = s"${corpusScratch(dir)}/dsir_model"
-    buildOnce(stagedDsirModels, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/dsir_model")
+    staged(s, path) {
       graft.llm.Corpus.stageDsirModel(
         graft.Tables.documents(s, dir), "doc_id", "text",
         org.apache.spark.sql.functions.col("lang") === "en", path)
@@ -135,24 +44,21 @@ private[registry] object LlmFixtures {
 
   /** The trained BPE model as a staged artifact (see
     * [[graft.llm.Corpus.stageBpeModel]]): trained once per tokenizer
-    * version, re-read per encode sweep by y28b. Same memoization
-    * contract as [[stagedNearDupPairs]]. */
+    * version, re-read per encode sweep by y28b. */
   def stagedBpeModelPath(s: SparkSession, dir: String): String = {
-    val path = s"${corpusScratch(dir)}/bpe_model"
-    buildOnce(stagedBpeModels, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/bpe_model")
+    staged(s, path) {
       graft.llm.Corpus.stageBpeModel(
         graft.Tables.documents(s, dir), "doc_id", "text", path, numMerges = 6)
     }
-    path
   }
 
   /** The corpus SimHash fingerprint table as a staged artifact (see
     * [[graft.llm.DedupLsh.corpusSimhashFingerprints]]): fingerprinted
-    * once per snapshot, re-read per radius sweep by x11b. Same
-    * memoization contract as [[stagedNearDupPairs]]. */
+    * once per snapshot, re-read per radius sweep by x11b. */
   def stagedSimhashFps(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${corpusScratch(dir)}/simhash_fps"
-    buildOnce(stagedSimhashTables, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/simhash_fps")
+    staged(s, path) {
       graft.io.Staging.publish(s, path) { tmp =>
         graft.llm.DedupLsh.corpusSimhashFingerprints(
           corpusNear(s, dir), "doc_id", "text", bits = 32)
@@ -170,11 +76,10 @@ private[registry] object LlmFixtures {
 
   /** The trained NB model (terms + classes) as a staged artifact (see
     * [[graft.llm.Classifier.trainNaiveBayesModel]]): trained once per
-    * (corpus, seed-rule) version, re-read per scoring sweep by y20b.
-    * Same memoization contract as [[stagedNearDupPairs]]. */
+    * (corpus, seed-rule) version, re-read per scoring sweep by y20b. */
   def stagedNbModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val path = s"${corpusScratch(dir)}/nb_model"
-    buildOnce(stagedNbModels, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/nb_model")
+    staged(s, path) {
       val (terms, classes) = Classifier.trainNaiveBayesModel(
         Tables.documents(s, dir), "doc_id", "text", nbSeedLabel)
       // terms + classes swap live as ONE unit (graft.io.Staging): the
@@ -189,11 +94,10 @@ private[registry] object LlmFixtures {
 
   /** The corpus sign-bucket table as a staged artifact (see
     * [[graft.llm.Similarity.corpusSignBuckets]]): written once per
-    * snapshot, re-read per ingest batch by x27b's map-side sweep.
-    * Same memoization contract as [[stagedNearDupPairs]]. */
+    * snapshot, re-read per ingest batch by x27b's map-side sweep. */
   def stagedCorpusEmbBuckets(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${corpusScratch(dir)}/emb_sign_buckets"
-    buildOnce(stagedEmbBucketTables, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/emb_sign_buckets")
+    staged(s, path) {
       graft.io.Staging.publish(s, path) { tmp =>
         Similarity.corpusSignBuckets(Tables.embeddings(s, dir))
           .write.mode("overwrite").parquet(tmp)
@@ -204,11 +108,10 @@ private[registry] object LlmFixtures {
 
   /** The corpus k=8 window-hash SET as a staged artifact (see
     * [[graft.llm.SpanDedup.corpusWindowHashSet]]): written once per
-    * snapshot, re-read per ingest batch by x25's semi join. Same
-    * memoization contract as [[stagedNearDupPairs]]. */
+    * snapshot, re-read per ingest batch by x25's semi join. */
   def stagedCorpusSpanHashes(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${corpusScratch(dir)}/span_hash_set"
-    buildOnce(stagedSpanTables, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/span_hash_set")
+    staged(s, path) {
       graft.io.Staging.publish(s, path) { tmp =>
         graft.llm.SpanDedup.corpusWindowHashSet(
           Tables.documents(s, dir).select("doc_id", "text"), "doc_id", "text", k = 8)
@@ -244,18 +147,14 @@ private[registry] object LlmFixtures {
     * materializes shingle→band→verify ONCE per corpus snapshot and
     * every downstream consumer — clustering (x8b), canonical selection
     * (x15b), audits — reads the parquet instead of re-deriving pairs
-    * from raw text. Same memoization shape as the x7b IVF index: first
-    * call in a JVM (re)builds, so the artifact is always derived from
-    * the current corpus and stale leftovers can't leak in; repeated
-    * invocations (bench sweeps, interactive reuse) time the READ path,
-    * which is the steady-state production cost. The artifact is thin
+    * from raw text. The artifact is thin
     * (id_a, id_b, jaccard) rows — at 100 TB corpus scale it is the
     * verified-pair set only (corpus-fraction sized, not corpus sized),
     * and each consumer's first shuffle keys on an id column, so
     * re-reading it is strictly cheaper than re-verifying. */
   def stagedNearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${corpusScratch(dir)}/neardup_pairs"
-    buildOnce(stagedPairTables, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/neardup_pairs")
+    staged(s, path) {
       graft.io.Staging.publish(s, path) { tmp =>
         DedupLsh.nearDupPairs(corpusNear(s, dir), "doc_id", "text",
           shingleN = 3, numHashes = 12, numBands = 4, threshold = 0.5)
@@ -274,13 +173,10 @@ private[registry] object LlmFixtures {
     * per-batch term, and it was linear in corpus TEXT; against this
     * artifact the per-batch cost is a scan of signature-sized rows
     * (12 md5 hex strings + 4 band keys + the shingle set) with a
-    * map-side explode, no text tokenization, no md5 sweeps. Same
-    * memoization contract as [[stagedNearDupPairs]]: first call in a
-    * JVM (re)builds from the current corpus, later calls time the
-    * steady-state read path. */
+    * map-side explode, no text tokenization, no md5 sweeps. */
   def stagedCorpusBands(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${corpusScratch(dir)}/corpus_bands"
-    buildOnce(stagedBandTables, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/corpus_bands")
+    staged(s, path) {
       graft.io.Staging.publish(s, path) { tmp =>
         DedupLsh.corpusBandSignatures(
           Tables.documents(s, dir).select("doc_id", "text"), "doc_id", "text",
@@ -292,21 +188,17 @@ private[registry] object LlmFixtures {
   }
 
   /** The x12b staged contamination index over the x12 corpus side
-    * (docs with doc_id % 97 != 0): built once per JVM through the
+    * (docs with doc_id % 97 != 0): built once per session through the
     * publish protocol; serving screens the eval set against the
     * postings. Returns the artifact root. */
   def stagedCorpusGrams(s: SparkSession, dir: String): String = {
-    val path = s"${corpusScratch(dir)}/corpus_grams"
-    buildOnce(stagedGramIndexes, s"${System.identityHashCode(s)}|$path") {
+    val path = scratch(dir, "llm/corpus_grams")
+    staged(s, path) {
       graft.llm.Contamination.stageCorpusGrams(
         Tables.documents(s, dir).filter(col("doc_id") % 97 =!= 0),
         path, "doc_id", "text", n = 3)
     }
-    path
   }
-
-  val stagedGramIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The CASE arm of the synthetic ingest batch, shared by the Spark
     * side ([[syntheticIngestBatch]]) and the oracles ([[IngestBatchSql]])

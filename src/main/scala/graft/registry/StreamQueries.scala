@@ -5,6 +5,7 @@ import graft.io.IO
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Fixtures.{scratch, staged}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
@@ -14,26 +15,20 @@ import org.apache.spark.sql.types._
   * which the driver then hash-compares against a batch-SQL oracle. */
 object StreamQueries {
 
-  private def scratch(dir: String, name: String): String = {
-    val sf = new java.io.File(dir).getName
-    s"${sys.props("java.io.tmpdir")}/graft_stream/$sf/$name"
-  }
-
   private val streamSchema = StructType(Seq(
     StructField("entry_id", LongType), StructField("user_id", LongType),
     StructField("ts_us", LongType), StructField("pageview_count", LongType),
     StructField("event_type", StringType)))
 
-  private val microBatchCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Write the events table as 4 time-ordered micro-batch files. The
     * files depend only on the sf dir and are IDENTICAL for every
-    * streaming query, so each JVM materializes them once (the quantile
-    * sketch + 4 JSON writes were ~half of every streaming query's
-    * fixed overhead); checkpoints stay strictly per-query. */
-  private def writeMicroBatches(s: SparkSession, dir: String): String =
-    microBatchCache.computeIfAbsent(dir, { _ =>
-      val src = scratch(dir, "shared_src/files")
+    * streaming query, so each session materializes them once through
+    * [[Fixtures.staged]] (the quantile sketch + 4 JSON writes were
+    * ~half of every streaming query's fixed overhead); checkpoints stay
+    * strictly per-query. */
+  private def writeMicroBatches(s: SparkSession, dir: String): String = {
+    val src = scratch(dir, "stream/shared_src/files")
+    staged(s, src) {
       Streams.deleteDir(s, src)
       val ev = Tables.events(s, dir).select(
         col("event_id").as("entry_id"), col("user_id"),
@@ -51,8 +46,9 @@ object StreamQueries {
       ).foreach { case (n, pred) =>
         IO.writeJsonLines(ev.filter(pred), s"$src/$n.json", singleFile = true)
       }
-      s"$src/*.json/*.json"
-    })
+    }
+    s"$src/*.json/*.json"
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // st1's result is the registry's largest (a full unaggregated
@@ -65,8 +61,8 @@ object StreamQueries {
     "st1_stream_file_source" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "st1_ckpt"),
-          scratch(dir, "st1_out"),
+        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "stream/st1_ckpt"),
+          scratch(dir, "stream/st1_out"),
           df => df.select("entry_id", "user_id", "event_type", "ts_us"))
         .orderBy("entry_id")
     },
@@ -79,7 +75,7 @@ object StreamQueries {
     "st4_session_window" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStream(s, glob, streamSchema, scratch(dir, "st4_ckpt"),
+        .runFileStream(s, glob, streamSchema, scratch(dir, "stream/st4_ckpt"),
           Streams.sessionWindowAgg, OutputMode.Complete())
         .orderBy("user_id", "session_start_us")
     },
@@ -96,8 +92,8 @@ object StreamQueries {
       // table-sized Append result (one row per closed session) ⇒ the
       // parquet file-sink runner, like every production-mode st query
       Streams
-        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "st4a_ckpt"),
-          scratch(dir, "st4a_out"),
+        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "stream/st4a_ckpt"),
+          scratch(dir, "stream/st4a_out"),
           df => Streams.sessionWindowAppend(df),
           maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("user_id", "session_start_us")
@@ -105,7 +101,7 @@ object StreamQueries {
     "st6_tumbling_window" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStream(s, glob, streamSchema, scratch(dir, "st6_ckpt"),
+        .runFileStream(s, glob, streamSchema, scratch(dir, "stream/st6_ckpt"),
           df => Streams.tumblingAgg(df), OutputMode.Append(),
           maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("window_start_us")
@@ -117,7 +113,7 @@ object StreamQueries {
     "st14_stream_topk" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       val counts = Streams
-        .runFileStream(s, glob, streamSchema, scratch(dir, "st14_ckpt"),
+        .runFileStream(s, glob, streamSchema, scratch(dir, "stream/st14_ckpt"),
           df => Streams.windowTypeCounts(df), OutputMode.Append(),
           maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
       val w = org.apache.spark.sql.expressions.Window
@@ -132,7 +128,7 @@ object StreamQueries {
     "st7_sliding_window" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStream(s, glob, streamSchema, scratch(dir, "st7_ckpt"),
+        .runFileStream(s, glob, streamSchema, scratch(dir, "stream/st7_ckpt"),
           df => Streams.slidingAgg(df), OutputMode.Append(),
           maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("window_start_us")
@@ -151,7 +147,7 @@ object StreamQueries {
       // cross-batch join matches (inner join emits each match once
       // whatever the batching)
       Streams
-        .runFileStream(s, glob, streamSchema, scratch(dir, "st8_ckpt"),
+        .runFileStream(s, glob, streamSchema, scratch(dir, "stream/st8_ckpt"),
           df => Streams.streamSelfJoinPairs(df), OutputMode.Append(),
           maxFilesPerTrigger = Some(2),
           shufflePartitions = Some(Streams.suggestedStatePartitions(100000L)))
@@ -160,7 +156,7 @@ object StreamQueries {
     "st9_stream_dedup" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStream(s, glob, streamSchema, scratch(dir, "st9_ckpt"),
+        .runFileStream(s, glob, streamSchema, scratch(dir, "stream/st9_ckpt"),
           df => Streams.streamDedupKeys(df, Seq("user_id", "event_type")),
           OutputMode.Append(), maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("user_id", "event_type")
@@ -173,7 +169,7 @@ object StreamQueries {
     "st13_stream_dedup_bounded" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStream(s, glob, streamSchema, scratch(dir, "st13_ckpt"),
+        .runFileStream(s, glob, streamSchema, scratch(dir, "stream/st13_ckpt"),
           df => Streams.streamDedupKeysWithinWatermark(df, Seq("user_id", "event_type")),
           OutputMode.Append(), maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("user_id", "event_type")
@@ -184,8 +180,8 @@ object StreamQueries {
     "st5_stream_stitch" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "st5_ckpt"),
-          scratch(dir, "st5_out"),
+        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "stream/st5_ckpt"),
+          scratch(dir, "stream/st5_out"),
           df => Streams.stitchDwell(s, df),
           maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("entry_id")
@@ -203,8 +199,8 @@ object StreamQueries {
       // broadcast dim is caller-session state, but broadcast() wraps
       // the FRAME itself — self-contained under the clone contract)
       Streams
-        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "st11_ckpt"),
-          scratch(dir, "st11_out"),
+        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "stream/st11_ckpt"),
+          scratch(dir, "stream/st11_out"),
           df => df
             .select(col("entry_id"), col("user_id"), (col("user_id") % 25).as("nk"))
             .join(dim, "nk")
@@ -217,8 +213,8 @@ object StreamQueries {
     "st12_stream_upsert_bucketed" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStreamUpsertBucketed(s, glob, streamSchema, scratch(dir, "st12_ckpt"),
-          scratch(dir, "st12_table"),
+        .runFileStreamUpsertBucketed(s, glob, streamSchema, scratch(dir, "stream/st12_ckpt"),
+          scratch(dir, "stream/st12_table"),
           keys = Seq("user_id"), order = Seq("ts_us", "entry_id"), nBuckets = 16)
         .select("user_id", "entry_id", "ts_us", "event_type")
         .orderBy("user_id")
@@ -229,8 +225,8 @@ object StreamQueries {
     "st10_stream_upsert" -> { (s, dir) =>
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStreamUpsert(s, glob, streamSchema, scratch(dir, "st10_ckpt"),
-          scratch(dir, "st10_table"),
+        .runFileStreamUpsert(s, glob, streamSchema, scratch(dir, "stream/st10_ckpt"),
+          scratch(dir, "stream/st10_table"),
           keys = Seq("user_id"), order = Seq("ts_us", "entry_id"))
         .select("user_id", "entry_id", "ts_us", "event_type")
         .orderBy("user_id")
@@ -242,8 +238,8 @@ object StreamQueries {
       // cannot run it. Table-sized result ⇒ parquet file-sink twin
       val glob = writeMicroBatches(s, dir)
       Streams
-        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "st5tws_ckpt"),
-          scratch(dir, "st5tws_out"),
+        .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "stream/st5tws_ckpt"),
+          scratch(dir, "stream/st5tws_out"),
           df => Streams.stitchDwellTws(s, df),
           maxFilesPerTrigger = Some(2), shufflePartitions = Some(4),
           stateStoreMode = Some("rocksdb"))
@@ -255,7 +251,7 @@ object StreamQueries {
     // land in idempotent batch_id=N directories. Per-doc vs a static
     // corpus ⇒ batch-boundary independent ⇒ one batch-replay oracle.
     "st15_stream_neardup_gate" -> { (s, dir) =>
-      val src = scratch(dir, "st15_src")
+      val src = scratch(dir, "stream/st15_src")
       Streams.deleteDir(s, src)
       val batch = LlmFixtures.syntheticIngestBatch(s, dir)
       (0 until 3).foreach { i =>
@@ -266,7 +262,7 @@ object StreamQueries {
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("text", StringType)))
       Streams.runFileStreamNearDupGate(s, s"$src/*.json/*.json", docSchema,
-        scratch(dir, "st15_ckpt"), scratch(dir, "st15_out"),
+        scratch(dir, "stream/st15_ckpt"), scratch(dir, "stream/st15_out"),
         LlmFixtures.stagedCorpusBands(s, dir))
         .orderBy("doc_id")
     },
@@ -282,7 +278,7 @@ object StreamQueries {
       val binSchema = StructType(Seq(
         StructField("path", StringType), StructField("modificationTime", TimestampType),
         StructField("length", LongType), StructField("content", BinaryType)))
-      Streams.runFileStream(s, s"$p/*.bin", binSchema, scratch(dir, "st16_ckpt"),
+      Streams.runFileStream(s, s"$p/*.bin", binSchema, scratch(dir, "stream/st16_ckpt"),
         df => df.select(element_at(split(col("path"), "/"), -1).as("fname"),
           col("length"), base64(col("content")).as("content_b64")),
         maxFilesPerTrigger = Some(5), format = "binaryFile")
@@ -297,8 +293,8 @@ object StreamQueries {
     // boundaries are value-invisible).
     "st17_stream_binary_pack" -> { (s, dir) =>
       val p = IoQueries.binFilesFixture(s, dir)
-      Streams.runBinaryPackStream(s, s"$p/*.bin", scratch(dir, "st17_ckpt"),
-        scratch(dir, "st17_packed"), maxFilesPerTrigger = Some(7))
+      Streams.runBinaryPackStream(s, s"$p/*.bin", scratch(dir, "stream/st17_ckpt"),
+        scratch(dir, "stream/st17_packed"), maxFilesPerTrigger = Some(7))
         .select(col("fname"), col("length"),
           base64(col("content")).as("content_b64"))
         .orderBy("fname")
@@ -314,8 +310,8 @@ object StreamQueries {
     // oracle replays it as one batch.
     "st18_stream_manifest_ingest" -> { (s, dir) =>
       val man = IoQueries.binManifestFixture(s, dir)
-      Streams.runManifestIngestStream(s, man, scratch(dir, "st18_ckpt"),
-        scratch(dir, "st18_out"), maxFilesPerTrigger = Some(1))
+      Streams.runManifestIngestStream(s, man, scratch(dir, "stream/st18_ckpt"),
+        scratch(dir, "stream/st18_out"), maxFilesPerTrigger = Some(1))
         .select(col("fname"), col("length"),
           base64(col("content")).as("content_b64"))
         .orderBy("fname")
@@ -333,9 +329,9 @@ object StreamQueries {
     "st19_manifest_autofold" -> { (s, dir) =>
       import s.implicits._
       val p = IoQueries.binFilesFixture(s, dir)
-      val man = scratch(dir, "st19_man")
-      val ckpt = scratch(dir, "st19_ckpt")
-      val out = scratch(dir, "st19_out")
+      val man = scratch(dir, "stream/st19_man")
+      val ckpt = scratch(dir, "stream/st19_ckpt")
+      val out = scratch(dir, "stream/st19_out")
       Streams.deleteDir(s, man)
       val waves = new java.io.File(p).listFiles().toSeq
         .filter(_.getName.endsWith(".bin")).sortBy(_.getName)
@@ -363,7 +359,7 @@ object StreamQueries {
     "st20_manifest_multiconsumer" -> { (s, dir) =>
       import s.implicits._
       val p = IoQueries.binFilesFixture(s, dir)
-      val man = scratch(dir, "st20_man")
+      val man = scratch(dir, "stream/st20_man")
       Streams.deleteDir(s, man)
       val waves = new java.io.File(p).listFiles().toSeq
         .filter(_.getName.endsWith(".bin")).sortBy(_.getName)
@@ -372,18 +368,18 @@ object StreamQueries {
       IO.appendLandingManifest(s, man, waves.head.toDF("path", "length"))
       // b joins the active zone: pre-register before its first drain
       IO.recordManifestConsumer(s, man, "b", Long.MinValue)
-      Streams.runManifestIngestStream(s, man, scratch(dir, "st20_ckpt_a"),
-        scratch(dir, "st20_out_a"), compactAfterDrain = true,
+      Streams.runManifestIngestStream(s, man, scratch(dir, "stream/st20_ckpt_a"),
+        scratch(dir, "stream/st20_out_a"), compactAfterDrain = true,
         consumerId = Some("a")): Unit
       waves.tail.foreach(w =>
         IO.appendLandingManifest(s, man, w.toDF("path", "length")))
       val outA = Streams.runManifestIngestStream(s, man,
-        scratch(dir, "st20_ckpt_a"), scratch(dir, "st20_out_a"),
+        scratch(dir, "stream/st20_ckpt_a"), scratch(dir, "stream/st20_out_a"),
         reset = false, compactAfterDrain = true, consumerId = Some("a"))
       // b catches up on its own checkpoint; the central fold then
       // folds exactly the band both consumers covered
-      Streams.runManifestIngestStream(s, man, scratch(dir, "st20_ckpt_b"),
-        scratch(dir, "st20_out_b"), consumerId = Some("b")): Unit
+      Streams.runManifestIngestStream(s, man, scratch(dir, "stream/st20_ckpt_b"),
+        scratch(dir, "stream/st20_out_b"), consumerId = Some("b")): Unit
       IO.compactLandingManifestForConsumers(s, man): Unit
       outA
         .select(col("fname"), col("length"),
@@ -403,23 +399,23 @@ object StreamQueries {
     "st21_manifest_bootstrap" -> { (s, dir) =>
       import s.implicits._
       val p = IoQueries.binFilesFixture(s, dir)
-      val man = scratch(dir, "st21_man")
+      val man = scratch(dir, "stream/st21_man")
       Streams.deleteDir(s, man)
       val waves = new java.io.File(p).listFiles().toSeq
         .filter(_.getName.endsWith(".bin")).sortBy(_.getName)
         .map(f => (f.getAbsolutePath, f.length()))
         .grouped(10).toSeq
       IO.appendLandingManifest(s, man, waves.head.toDF("path", "length"))
-      Streams.runManifestIngestStream(s, man, scratch(dir, "st21_ckpt_a"),
-        scratch(dir, "st21_out_a"), compactAfterDrain = true,
+      Streams.runManifestIngestStream(s, man, scratch(dir, "stream/st21_ckpt_a"),
+        scratch(dir, "stream/st21_out_a"), compactAfterDrain = true,
         consumerId = Some("a")): Unit
       waves.tail.foreach(w =>
         IO.appendLandingManifest(s, man, w.toDF("path", "length")))
-      Streams.runManifestIngestStream(s, man, scratch(dir, "st21_ckpt_a"),
-        scratch(dir, "st21_out_a"), reset = false, compactAfterDrain = true,
+      Streams.runManifestIngestStream(s, man, scratch(dir, "stream/st21_ckpt_a"),
+        scratch(dir, "stream/st21_out_a"), reset = false, compactAfterDrain = true,
         consumerId = Some("a")): Unit
-      Streams.runManifestIngestStream(s, man, scratch(dir, "st21_ckpt_b"),
-        scratch(dir, "st21_out_b"), consumerId = Some("b"),
+      Streams.runManifestIngestStream(s, man, scratch(dir, "stream/st21_ckpt_b"),
+        scratch(dir, "stream/st21_out_b"), consumerId = Some("b"),
         bootstrapFromCheckpoint = true)
         .select(col("fname"), col("length"),
           base64(col("content")).as("content_b64"))
@@ -439,9 +435,9 @@ object StreamQueries {
     "st22_manifest_markclamp" -> { (s, dir) =>
       import s.implicits._
       val p = IoQueries.binFilesFixture(s, dir)
-      val man = scratch(dir, "st22_man")
-      val ckpt = scratch(dir, "st22_ckpt")
-      val out = scratch(dir, "st22_out")
+      val man = scratch(dir, "stream/st22_man")
+      val ckpt = scratch(dir, "stream/st22_ckpt")
+      val out = scratch(dir, "stream/st22_out")
       Streams.deleteDir(s, man)
       val waves = new java.io.File(p).listFiles().toSeq
         .filter(_.getName.endsWith(".bin")).sortBy(_.getName)

@@ -69,6 +69,16 @@ if [ $STATUS -ne 0 ] || ! echo "$SUMMARY" | grep -q "failed 0, canceled 0"; then
   exit 1
 fi
 
+# a native kernel re-registered on every operator call makes Spark log
+# this WARN each time; graft.functions.Kernels.registerMissing is the
+# one registration path, and a green suite leaves none of these lines
+REPLACED=$(grep -c "replaced a previously registered function" "$LOG")
+if [ "$REPLACED" -ne 0 ]; then
+  echo "[suite_gate] RED — $REPLACED 'replaced a previously registered function' warnings"
+  grep -m 5 "replaced a previously registered function" "$LOG"
+  exit 1
+fi
+
 cat > SUITE_GREEN.md <<EOF
 # Suite gate
 

@@ -148,9 +148,12 @@ object Jdbc {
   }
 
   /** Materialize `df` as Derby table `table` (once per JVM) and return
-    * the JDBC url. `columnTypes` overrides Spark's default DDL mapping
-    * — pass VARCHAR widths for string columns, which Derby's dialect
-    * would otherwise create as CLOB (not comparable, not pushdown-able).
+    * the JDBC url. `db` is both the database name and the memo key, so
+    * a caller seeding one table per corpus names `db` after the
+    * corpus's absolute path, never its basename alone. `columnTypes`
+    * overrides Spark's default DDL mapping — pass VARCHAR widths for
+    * string columns, which Derby's dialect would otherwise create as
+    * CLOB (not comparable, not pushdown-able).
     */
   def seedOnce(df: DataFrame, db: String, table: String, columnTypes: String): String =
     seeded.computeIfAbsent(s"$db/$table", { _ =>

@@ -601,9 +601,10 @@ object Corpus {
     // so planning cost grows with depth and at tokenizer-scale merge
     // counts (30–50k) the O(m²) planning would dominate the O(m·vocab)
     // work. A checkpoint every 16 rounds caps plan depth at 16;
-    // durability follows the nearDupClusters contract (reliable when
-    // sc.setCheckpointDir is set — the multi-hour cluster run — else
-    // executor-local, right for local[*]).
+    // durability follows the default of DedupLsh.labelPropagation's
+    // `reliableCheckpoints` (reliable when sc.setCheckpointDir is set —
+    // the multi-hour cluster run — else executor-local, right for
+    // local[*]).
     val checkpointEvery = 16
     val reliable = spark.sparkContext.getCheckpointDir.isDefined
     val words = docs

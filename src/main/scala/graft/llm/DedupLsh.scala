@@ -1,8 +1,10 @@
 package graft.llm
 
 import graft.ops.Text
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Large-scale deduplication for a training-data pipeline.
   *
@@ -442,11 +444,86 @@ object DedupLsh {
     graft.Caching.releaseAfterFirstUse(pairs, fps)
   }
 
-  /** Near-dup CLUSTER assignment from the pair list: each document in
-    * any pair gets the minimum doc id of its connected component —
-    * the canonical-representative choice a dedup pipeline needs before
-    * dropping non-canonical members. Iterative min-label propagation
-    * (Pregel-lite), repeated until Σlabel stops falling. One iteration:
+  /** Near-dup CLUSTER assignment from the pair list `(id_a, id_b)`:
+    * one `(id, cluster)` row per id that appears in any pair, where
+    * `cluster` is the least id of its connected component in the order
+    * Spark's `min` uses on the id type — the canonical representative
+    * a dedup pipeline keeps before dropping the other members. A NULL
+    * id links no two components (no equi-join matches NULL); it takes
+    * the least cluster among its non-NULL partners, or NULL without one.
+    *
+    * A pair list of at most [[Similarity.MaxDriverRows]] rows whose ids
+    * are integral or UTF8_BINARY strings is solved on the driver: one
+    * bounded collect of `MaxDriverRows + 1` rows, then a union-find
+    * whose root is always the least id of its component, returned as a
+    * local DataFrame. That path runs no checkpoint and no iteration, so
+    * it cannot hit `maxIter`. Any other pair list runs
+    * [[labelPropagation]] with `maxIter` and `reliableCheckpoints`, so
+    * that durability contract applies only above the bound (where the
+    * bounded collect is computed and thrown away); the loop takes
+    * integral ids only and rejects any other type. */
+  def nearDupClusters(pairs: DataFrame, maxIter: Int = 10,
+                      reliableCheckpoints: Option[Boolean] = None): DataFrame = {
+    // the id type the loop's union of both columns resolves to
+    val id = pairs.select(col("id_a").as("id"))
+      .unionByName(pairs.select(col("id_b").as("id"))).schema.head
+    val order: Option[Ordering[Any]] = id.dataType match {
+      case t if integral(t) => Some(Ordering.by((v: Any) => v.asInstanceOf[Number].longValue))
+      case s: StringType if s.collationId == StringType.collationId =>
+        Some(Ordering.by((v: Any) => UTF8String.fromString(v.asInstanceOf[String]))(
+          (a: UTF8String, b: UTF8String) => a.binaryCompare(b)))
+      case _ => None
+    }
+    val fits = order.flatMap { ord =>
+      val rows = pairs.select(col("id_a").cast(id.dataType), col("id_b").cast(id.dataType))
+        .limit(Similarity.MaxDriverRows.toInt + 1).collect()
+      if (rows.length > Similarity.MaxDriverRows) None
+      else Some(pairs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(driverComponents(rows.map(r => (r.get(0), r.get(1))), ord): _*),
+        StructType(Seq(id, StructField("cluster", id.dataType, nullable = true)))))
+    }
+    fits.getOrElse(labelPropagation(pairs, maxIter, reliableCheckpoints))
+  }
+
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The `(id, cluster)` rows of [[nearDupClusters]] for `edges` held
+    * on the driver: union-find with path compression over vertex
+    * indexes assigned in `order`, linking the larger root under the
+    * smaller, so every root is its component's least id. */
+  private def driverComponents(edges: Array[(Any, Any)], order: Ordering[Any]): Seq[Row] = {
+    val ids = edges.flatMap { case (a, b) => Seq(a, b) }.filter(_ != null).distinct.sorted(order)
+    val index = ids.zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(v: Int): Int = {
+      var root = v
+      while (parent(root) != root) root = parent(root)
+      var c = v
+      while (parent(c) != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      if (a != null && b != null) {
+        val (ra, rb) = (find(index(a)), find(index(b)))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+    val labelled = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    val nullPartners = edges.collect {
+      case (null, b) if b != null => find(index(b))
+      case (a, null) if a != null => find(index(a))
+    }
+    if (!edges.exists { case (a, b) => a == null || b == null }) labelled
+    else labelled :+ Row(null, if (nullPartners.isEmpty) null else ids(nullPartners.min))
+  }
+
+  /** Connected components by iterative min-label propagation
+    * (Pregel-lite), repeated until Σlabel stops falling: the
+    * distributed path of [[nearDupClusters]], with the same output.
+    * One iteration:
     *  1. union-min: `labels ∪ (edges ⋈ labels)` grouped by id, so each
     *     id takes the least of its own label and its neighbours' in one
     *     aggregate (no separate neighbour-min and left join);
@@ -461,7 +538,7 @@ object DedupLsh {
     * labels — never a quietly split component.
     *
     * @param reliableCheckpoints checkpoint durability for the
-    *   iterative loop. `None` (default) = reliable `df.checkpoint()`
+    *   iterative loop. `None` = reliable `df.checkpoint()`
     *   exactly when the SparkContext has a checkpoint dir configured,
     *   else executor-local checkpoints. Local checkpoints live in
     *   executor block managers: fastest, right for `local[*]` and
@@ -472,9 +549,14 @@ object DedupLsh {
     *   state with zero code change here; `Some(true)`/`Some(false)`
     *   force either mode. Both modes converge to identical labels
     *   (spec-asserted). */
-  def nearDupClusters(pairs: DataFrame, maxIter: Int = 10,
-                      reliableCheckpoints: Option[Boolean] = None): DataFrame = {
+  private[graft] def labelPropagation(pairs: DataFrame, maxIter: Int,
+                                      reliableCheckpoints: Option[Boolean]): DataFrame = {
     import org.apache.spark.storage.StorageLevel
+    // the Σlabel convergence test below is exact and monotone only on
+    // integral labels; a string id would fail its decimal cast (or,
+    // outside ANSI mode, cast to NULL and "converge" after 2 rounds)
+    require(Seq("id_a", "id_b").forall(c => integral(pairs.schema(c).dataType)),
+      s"labelPropagation needs integral ids, got ${pairs.select("id_a", "id_b").schema.simpleString}")
     val reliable = reliableCheckpoints.getOrElse(
       pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)
     def ck(df: DataFrame): DataFrame =

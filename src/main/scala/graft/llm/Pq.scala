@@ -86,9 +86,9 @@ object Pq {
     * integer argmin, identical (d asc, cell_id asc) tie-break. */
   def trainCodebooks(v: DataFrame, m: Int = 8, numCells: Int = 16,
                      iters: Int = 2): DataFrame = {
-    require(m.toLong * numCells <= Similarity.MaxDriverCentroids,
+    require(m.toLong * numCells <= Similarity.MaxDriverRows,
       s"trainCodebooks keeps m·numCells = ${m.toLong * numCells} centroid rows on the " +
-        s"driver between iterations; the bound is ${Similarity.MaxDriverCentroids}")
+        s"driver between iterations; the bound is ${Similarity.MaxDriverRows}")
     val spark = v.sparkSession
     graft.functions.NearestCell.register(spark)
     import spark.implicits._

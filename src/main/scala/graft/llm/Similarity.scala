@@ -23,12 +23,14 @@ object Similarity {
 
   val Scale = 1000000L
 
-  /** Bound on the centroid rows k-means training keeps on the driver
-    * between iterations ([[kmeansCodebookQ]], [[Pq.trainCodebooks]]).
-    * Each row is a boxed vector (about 1.6 KB at the default 64
-    * dims), so the bound keeps that copy, and the one-row broadcast
-    * operand rebuilt from it each iteration, near 100 MB. */
-  val MaxDriverCentroids: Long = 1L << 16
+  /** Bound on the rows an operator keeps on the driver: the centroid
+    * rows k-means training holds between iterations
+    * ([[kmeansCodebookQ]], [[Pq.trainCodebooks]]), and the pair list
+    * [[DedupLsh.nearDupClusters]] solves there. A centroid row is a
+    * boxed vector (about 1.6 KB at the default 64 dims), so the bound
+    * keeps that copy, and the one-row broadcast operand rebuilt from
+    * it each iteration, near 100 MB; a pair row is two ids. */
+  val MaxDriverRows: Long = 1L << 16
 
   /** One codebook cell of the [[centsArrayFrameCosLocal]] broadcast
     * operand, with `c2 = Σcv²`: the `array<struct<cell_id, cv, c2>>`
@@ -266,9 +268,9 @@ object Similarity {
     // local rows, never a re-executed training chain).
     def collectCents(df: DataFrame): Seq[(Long, Seq[Long])] =
       df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq.sortBy(_._1)
-    require(numCells <= MaxDriverCentroids,
+    require(numCells <= MaxDriverRows,
       s"kmeansCodebookQ keeps numCells = $numCells centroid rows on the driver " +
-        s"between iterations; the bound is $MaxDriverCentroids")
+        s"between iterations; the bound is $MaxDriverRows")
     var cents = collectCents(v.filter(col("vec_id") < numCells)
       .select(col("vec_id").as("cell_id"), col("nv").as("cv")))
     for (_ <- 0 until iters) {

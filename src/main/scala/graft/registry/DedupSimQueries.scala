@@ -82,7 +82,7 @@ object DedupSimQueries {
         .orderBy("id")
     },
     // x8b — x8 against the STAGED pair artifact (see
-    // stagedNearDupPairs): label propagation reads the materialized
+    // stagedNearDupPairs): the cluster step reads the materialized
     // pair list, never the raw text. Same oracle as x8 — the staging
     // round-trip must be value-invisible.
     "x8b_clusters_staged" -> { (s, dir) =>

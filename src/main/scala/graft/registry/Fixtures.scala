@@ -7,19 +7,23 @@ import org.apache.spark.sql.SparkSession
   * scratch root and the one build-once memo every query family uses. */
 private[registry] object Fixtures {
 
-  /** `name` under the per-corpus scratch root: the sf dir's basename
+  /** The name of everything built per corpus: the sf dir's basename
     * for readability plus a short digest of its absolute path, because
     * two corpora sharing a basename (/data/a/sf0.01 vs /data/b/sf0.01)
-    * must never share a fixture — a basename-only root would silently
-    * hand corpus B the files built from corpus A. Callers lead `name`
-    * with their family (`io/`, `cov/`, `stream/`, `llm/`), so no two
-    * families share a directory. */
-  def scratch(dir: String, name: String): String = {
+    * must never share a fixture — a basename-only name would silently
+    * hand corpus B what was built from corpus A. */
+  def corpusTag(dir: String): String = {
     val f = new java.io.File(dir).getAbsoluteFile
-    val tag = java.security.MessageDigest.getInstance("MD5")
+    val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(f.getPath.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${sys.props("java.io.tmpdir")}/graft_scratch/${f.getName}-$tag/$name"
+    s"${f.getName}-$digest"
   }
+
+  /** `name` under the per-corpus scratch root ([[corpusTag]]). Callers
+    * lead `name` with their family (`io/`, `cov/`, `stream/`, `llm/`),
+    * so no two families share a directory. */
+  def scratch(dir: String, name: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_scratch/${corpusTag(dir)}/$name"
 
   /** Paths built per session. The session object itself is the key,
     * held weakly (a closed session's entry goes with it) and compared

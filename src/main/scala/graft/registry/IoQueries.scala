@@ -88,7 +88,7 @@ object IoQueries {
     "s12_jdbc_incremental" -> { (s, dir) =>
       val ord = Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-      val url = graft.io.Jdbc.seedOnce(ord, s"db_${new java.io.File(dir).getName}", "orders",
+      val url = graft.io.Jdbc.seedOnce(ord, s"db_${Fixtures.corpusTag(dir)}", "orders",
         "o_orderstatus VARCHAR(8)")
       val maxKey = ord.agg(max("o_orderkey")).head().getLong(0)
       graft.io.Jdbc.readPartitioned(s, url, "orders", "o_orderkey", 1L, maxKey + 1, 4)

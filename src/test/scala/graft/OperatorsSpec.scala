@@ -1594,17 +1594,18 @@ class OperatorsSpec extends SparkSpec {
     // maxIter=10 suffices for diameter 20; localCheckpoint keeps every
     // iteration's plan O(1) deep (no nested-join analysis blowup)
     val chain = (0L until 20L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = graft.llm.DedupLsh.nearDupClusters(chain)
+    val got = graft.llm.DedupLsh.labelPropagation(chain, 10, None)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == (0L to 20L).map(i => i -> 0L))
   }
 
   test("Cluster assignment: a 1000-node path converges; a 3000-node path fails loudly at the cap") {
     def path(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ok = graft.llm.DedupLsh.nearDupClusters(path(1000L))
+    val ok = graft.llm.DedupLsh.labelPropagation(path(1000L), 10, None)
     assert(ok.select(countDistinct("cluster"), min("cluster"), count(lit(1)))
       .as[(Long, Long, Long)].head() == ((1L, 1L, 1000L)))
-    val e = intercept[IllegalStateException](graft.llm.DedupLsh.nearDupClusters(path(3000L)))
+    val e = intercept[IllegalStateException](
+      graft.llm.DedupLsh.labelPropagation(path(3000L), 10, None))
     assert(e.getMessage.contains("did not converge") && e.getMessage.contains("10 iterations")
       && e.getMessage.contains("Σlabel by"), e.getMessage)
   }
@@ -1619,16 +1620,93 @@ class OperatorsSpec extends SparkSpec {
     spark.sparkContext.setCheckpointDir(dir)
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L)).toDF("id_a", "id_b")
-    val local = graft.llm.DedupLsh
-      .nearDupClusters(pairs, reliableCheckpoints = Some(false))
+    val local = graft.llm.DedupLsh.labelPropagation(pairs, 10, Some(false))
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    val reliable = graft.llm.DedupLsh
-      .nearDupClusters(pairs, reliableCheckpoints = Some(true))
+    val reliable = graft.llm.DedupLsh.labelPropagation(pairs, 10, Some(true))
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(reliable == local)
     // reliable mode actually wrote checkpoint files
     val wrote = new java.io.File(dir).listFiles()
     assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint data written")
+  }
+
+  test("Cluster assignment: the driver path labels random graphs exactly as the loop does") {
+    import org.apache.spark.sql.DataFrame
+    // a random multigraph with self-pairs, repeated pairs, both edge
+    // directions and isolated two-node pairs, its ids mapped by `id`
+    def graph[T](seed: Long, id: Int => T): Seq[(T, T)] = {
+      val rnd = new scala.util.Random(seed)
+      val nodes = Seq.fill(60)(rnd.nextInt(1000)).distinct
+      val random = Seq.fill(45)((nodes(rnd.nextInt(nodes.size)), nodes(rnd.nextInt(nodes.size))))
+      val extra = random.take(5) ++ random.take(5).map(_.swap) ++
+        nodes.take(3).map(n => (n, n)) ++ Seq((2001, 2002), (2003, 2004))
+      rnd.shuffle(random ++ extra).map { case (a, b) => (id(a), id(b)) }
+    }
+    def rows(df: DataFrame) = df.collect().map(r => (r.get(0), r.get(1))).toSet
+    def driver(pairs: DataFrame): DataFrame = {
+      val out = graft.llm.DedupLsh.nearDupClusters(pairs)
+      assert(out.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      out
+    }
+    def same(pairs: DataFrame): Set[(Any, Any)] = {
+      val (got, loop) = (driver(pairs), graft.llm.DedupLsh.labelPropagation(pairs, 30, None))
+      assert(got.schema == loop.schema, s"${got.schema} vs ${loop.schema}")
+      assert(rows(got) == rows(loop))
+      rows(got)
+    }
+    // the loop takes integral ids only, so string ids run it on their
+    // rank in the order Spark itself sorts them
+    def sameAsRanked(pairs: Seq[(String, String)]): Set[(Any, Any)] = {
+      val sorted = pairs.flatMap(p => Seq(p._1, p._2)).toDF("id").distinct()
+        .orderBy("id").as[String].collect()
+      val rank = sorted.zipWithIndex.toMap
+      val loop = graft.llm.DedupLsh.labelPropagation(
+        pairs.map { case (a, b) => (rank(a), rank(b)) }.toDF("id_a", "id_b"), 30, None)
+        .as[(Int, Int)].collect().map { case (i, c) => (sorted(i), sorted(c)) }.toSet[(Any, Any)]
+      val got = rows(driver(pairs.toDF("id_a", "id_b")))
+      assert(got == loop)
+      got
+    }
+    for (seed <- 1L to 2L) {
+      same(graph(seed, _.toLong).toDF("id_a", "id_b"))
+      same(graph(seed, identity).toDF("id_a", "id_b"))
+      sameAsRanked(graph(seed, i => s"doc-$i"))
+    }
+    // Spark orders strings by their UTF-8 bytes: U+FF21 sorts before
+    // U+1F600, although its UTF-16 code unit sorts after the surrogate
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    assert(sameAsRanked(Seq((emoji, fw))) == Set(fw -> fw, emoji -> fw))
+    assert(intercept[IllegalArgumentException](graft.llm.DedupLsh.labelPropagation(
+      Seq(("a", "b")).toDF("id_a", "id_b"), 10, None)).getMessage.contains("integral ids"))
+    // a NULL id joins no component; it takes the least cluster among
+    // its non-NULL partners, or NULL without one
+    val withNull = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)),
+      (Some(5L), Some(6L)), (Some(8L), Some(9L))).toDF("id_a", "id_b")
+    assert(same(withNull) == Set[(Any, Any)](1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L,
+      8L -> 8L, 9L -> 8L, (null, 1L)))
+    assert(same(Seq[(Option[Long], Option[Long])]((None, None), (Some(3L), Some(4L)))
+      .toDF("id_a", "id_b")) == Set[(Any, Any)](3L -> 3L, 4L -> 3L, (null, null)))
+  }
+
+  test("Cluster assignment: one pair above the driver bound takes the loop and fails loudly at the cap") {
+    // bound + 1 pairs form a path of bound + 2 nodes, far beyond what
+    // 10 label-propagation iterations can close
+    val n = Similarity.MaxDriverRows + 1
+    val path = spark.range(1L, n + 1).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val e = intercept[IllegalStateException](graft.llm.DedupLsh.nearDupClusters(path, maxIter = 10))
+    assert(e.getMessage.contains("did not converge") && e.getMessage.contains("10 iterations"),
+      e.getMessage)
+  }
+
+  test("Cluster assignment: a cached pair list under the driver bound costs at most 2 jobs") {
+    val pairs = (0L until 2000L).map(i => (i, (i * 7919L) % 2000L)).toDF("id_a", "id_b")
+      .repartition(4).cache()
+    try {
+      pairs.count()
+      val (got, jobs) = withJobCount(graft.llm.DedupLsh.nearDupClusters(pairs).collect())
+      assert(got.length == 2000 && jobs <= 2, s"${got.length} rows, $jobs jobs")
+    } finally pairs.unpersist(blocking = true)
   }
 
   test("Flatten: recursive dotted leaves, odd names, arrays stay leaves") {

@@ -101,4 +101,22 @@ class FixturesSpec extends SparkSpec {
       assert(ids == (0L until 40L).map(idBase + _), s"corpus $tag streamed another corpus's events")
     }
   }
+
+  test("two sf dirs sharing a basename each seed their own s12 JDBC database") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_same_basename_jdbc")
+    val corpora = Seq("a" -> 200L, "b" -> 400L).map { case (tag, n) =>
+      val dir = root.resolve(tag).resolve("sf_same").toString
+      (1L to n).map(k => (k, k % 7, "O", 100.0 * k, new java.sql.Timestamp(1700000000000L + k * 60000L)))
+        .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
+        .write.parquet(s"$dir/orders.parquet")
+      (tag, n, dir)
+    }
+    // a, b, then a again: each must read the orders of its own dir
+    (corpora :+ corpora.head).foreach { case (tag, n, dir) =>
+      val keys = IoQueries.queries("s12_jdbc_incremental")(spark, dir)
+        .select("o_orderkey").as[Long].collect().toSeq
+      assert(keys == (101L to n), s"corpus $tag read another corpus's JDBC table")
+    }
+  }
 }

@@ -5,8 +5,8 @@
 # suite — and r14 stamped a marker that two further code commits then
 # outran. This script makes "suite green" a PRECONDITION of the snapshot
 # instead of a convention:
-#   1. it runs the full ScalaTest suite and refuses (exit 1) on any
-#      failure;
+#   1. it runs the full ScalaTest suite, then the benchmark's pytest
+#      suite (perfbench/tests), and refuses (exit 1) on any failure;
 #   2. on success it writes SUITE_GREEN.md recording the run (HEAD,
 #      date, the suite's own derived counts — never hand-counted) PLUS a
 #      content digest of src/ + build.sbt as it was tested;
@@ -79,6 +79,20 @@ if [ "$REPLACED" -ne 0 ]; then
   exit 1
 fi
 
+# the benchmark's own tests (seeded inputs, the DuckDB checks): a
+# green Scala suite does not exercise them. No cache or bytecode is
+# written, so the run leaves perfbench/ as it found it.
+PYLOG=$(mktemp /tmp/suite_gate_py.XXXXXX.log)
+PYTHONDONTWRITEBYTECODE=1 python3 -m pytest -q -p no:cacheprovider perfbench/tests >"$PYLOG" 2>&1
+PYSTATUS=$?
+PYSUMMARY=$(tail -1 "$PYLOG")
+if [ $PYSTATUS -ne 0 ]; then
+  echo "[suite_gate] RED — perfbench/tests failed (log: $PYLOG)"
+  echo "[suite_gate] $PYSUMMARY"
+  grep -E "^(FAILED|ERROR)" "$PYLOG" | head -20
+  exit 1
+fi
+
 cat > SUITE_GREEN.md <<EOF
 # Suite gate
 
@@ -97,9 +111,10 @@ certifies; its parent is the recorded HEAD plus the digested worktree.
 - src digest: $DIGEST
 - $SUMMARY
 - $SUITES
+- perfbench/tests (pytest): $PYSUMMARY
 
 Counts above are the suite's own output — derived, not hand-maintained
 (round-13 verdict item 4).
 EOF
-echo "[suite_gate] GREEN — $SUMMARY"
+echo "[suite_gate] GREEN — $SUMMARY; perfbench/tests: $PYSUMMARY"
 echo "[suite_gate] wrote SUITE_GREEN.md (src digest $DIGEST)"

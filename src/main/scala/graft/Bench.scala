@@ -129,6 +129,12 @@ object Bench {
       System.gc()
       (qs.drop(off) ++ qs.take(off)).foreach { case (n, f) => timeOne(n, f) }
     }
+    // codegen churn over the sweeps: Janino compiles (a cache miss
+    // each) and their compile time, both JVM-wide counters
+    def codegenNow(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+    val codegen0 = codegenNow()
     for (sweep <- 0 until runs) sweepOver(queries, sweep, runs)
     // extra rotated sweeps for the HEAVY TAIL only (round-12 verdict:
     // contended-box flapping concentrated in the >2 s cluster — broad
@@ -142,6 +148,7 @@ object Bench {
       samples(n).nonEmpty && samples(n).min > slowThresh
     }
     for (sweep <- 0 until extraRuns; if slow.nonEmpty) sweepOver(slow, sweep, extraRuns)
+    val codegen1 = codegenNow()
     val results = queries.map { case (name, _) =>
       val xs = samples(name)
       name -> (if (xs.nonEmpty) xs.min else -1.0)
@@ -183,7 +190,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val env =
-      s"""{"load_avg_1m":${fmt(loadAvg)},"cpus":$cpus,"anchor_cpu_shuffle_sec":${fmt(anchorSec)},"anchor_ref_sec":${fmt(AnchorRefSec)},"anchor_ratio":${fmt(anchorRatio)}}"""
+      s"""{"load_avg_1m":${fmt(loadAvg)},"cpus":$cpus,"anchor_cpu_shuffle_sec":${fmt(anchorSec)},"anchor_ref_sec":${fmt(AnchorRefSec)},"anchor_ratio":${fmt(anchorRatio)},"codegen_compiles":${codegen1._1 - codegen0._1},"codegen_compile_s":${fmt((codegen1._2 - codegen0._2) / 1e9)}}"""
     val full =
       s"""{"metric":"total","value":${fmt(total)},"value_normalized":${fmt(total / anchorRatio)},"unit":"sec","runs":$runs,"slow_extra_runs":$extraRuns,"slow_thresh_sec":$slowThresh,"n_slow":${slow.size},"slow_samples":$slowSamples,"agg":"min-across-sweeps","env":$env,"queries":$qs,"queries_normalized":$qsNorm,"queries_stats":$qsStats,"sf":"$sfDir"}"""
     println(full)

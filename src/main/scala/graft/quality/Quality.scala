@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * Design: every *data* metric (null counts A3, default violations A4,
   * duplicate rows D2/A11, clean-success rates A6, volume A7) is folded
-  * into ONE aggregate pass over the frame — a single shuffle-free
-  * partial+final hash aggregate — instead of the reference's one
-  * full-frame scan per check. Schema checks (A5 array-ness, A8 dtype
-  * expectations, A9 schema diff, P8 rename mapping) are metadata-only:
-  * they read `df.schema`, never the data.
+  * into ONE aggregate over the frame, which scans it once, instead of
+  * the reference's one full-frame scan per check. It is not a single
+  * job: the duplicate count's `count_distinct` plans an expand
+  * aggregate with two exchanges (see [[metrics]]). Schema checks (A5
+  * array-ness, A8 dtype expectations, A9 schema diff, P8 rename
+  * mapping) are metadata-only: they read `df.schema`, never the data.
   */
 object Quality {
 
@@ -26,7 +27,9 @@ object Quality {
   )
 
   /** Build the single-pass metric frame: one row, one column per
-    * metric, all BIGINT/DOUBLE. Runs exactly one Spark job. */
+    * metric, all BIGINT/DOUBLE. With `dupKeys` set, `count_distinct`
+    * plans two exchanges (an expand aggregate), so under AQE the frame
+    * runs 3 Spark jobs: one per exchange stage and the final one. */
   def metrics(df: DataFrame, spec: ReportSpec): DataFrame = {
     val nulls = spec.nullCols.map(c =>
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c"))

@@ -180,7 +180,9 @@ class OperatorsSpec extends SparkSpec {
       nullCols = Seq("c1"), defaults = Map("c2" -> lit("x")),
       dupKeys = Seq("c1"),
       cleanRules = Seq(Quality.CleanRule("a_ish", "c1", col("c1") === "a"))))
-    val r = m.head()
+    // count_distinct over the dup keys: two exchange stages plus the final job
+    val (r, jobs) = withJobCount(m.head())
+    assert(jobs == 3, s"Quality.metrics with dupKeys ran $jobs jobs")
     assert(r.getAs[Long]("null_c1") == 1L)
     assert(r.getAs[Long]("viol_c2") == 1L)
     assert(r.getAs[Long]("dup_rows") == 1L) // "a" appears twice

@@ -102,7 +102,7 @@ object Bench {
     // optional regex filter for targeted perf iteration, e.g.
     // SPARK_GRAFT_BENCH_ONLY='^(t4|x7)' — full sweep when unset
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val queries = SparkEntry.registry.map(q => q.name -> q.run).sortBy(_._1)
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
     val samples = collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {

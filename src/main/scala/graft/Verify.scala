@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registered query's result →
+  * parquet, plus its oracle SQL in oracle_sql.json, for the driver's
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -34,11 +35,12 @@ object Verify {
     // over query names; unset = full sweep (what the driver runs)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.r)
     def wanted(name: String) = only.forall(_.findFirstIn(name).isDefined)
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val picked = SparkEntry.registry.filter(query => wanted(query.name))
+    picked.foreach { query =>
+      try query.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${query.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
       }
       // operators that persist at internal fan-out points cannot
       // unpersist before returning; clear between queries so blocks
@@ -57,8 +59,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = picked.map(query => s"${q(query.name)}: ${q(query.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1039,10 +1039,11 @@ object IO {
     * metadata RPCs, so concurrency is pure latency-hiding;
     * `FileSystem` instances are thread-safe by Hadoop contract).
     * LOCAL file:// deletes stay serial: they are CPU-bound syscalls
-    * (~300 µs each, probe_fold_phases_50k.sc), there is no latency to
-    * hide, and the pool measured ~1.5× SLOWER there (lock contention
-    * in the checksummed local FS). Every pooled task settles before
-    * the first failure propagates (later failures suppressed onto it)
+    * (~300 µs each, PROBES.md "Fold wall by phase at 50k segments"),
+    * there is no latency to hide, and the pool measured ~1.5× SLOWER
+    * there (lock contention in the checksummed local FS). Every pooled
+    * task settles before the first failure propagates (later failures
+    * suppressed onto it)
     * — a throw mid-pool must not leave in-flight deletes racing the
     * caller's marker removal. That includes a thread INTERRUPT (r19
     * ADVICE: an uncaught InterruptedException mid-loop returned with
@@ -1311,7 +1312,15 @@ object IO {
   /** Restore a directory from a half-completed [[replaceDir]] swap: a
     * crash between the two renames leaves the data at `path.__swap_old`
     * and nothing at `path`. Any reader of a swap-managed table calls
-    * this first (replaceDir itself does). No-op when `path` exists. */
+    * this first (replaceDir itself does). No-op when `path` exists.
+    *
+    * Concurrent heals are safe: a reader whose rename loses the race
+    * re-checks that the artifact is live and proceeds. One benign race
+    * with an in-flight swap: a reader's heal firing INSIDE the
+    * builder's rename window can restore the old artifact before the
+    * builder's second rename, which then fails its `require` loudly.
+    * The live artifact is the intact previous build, nothing is lost,
+    * and retrying the build succeeds. */
   def recoverSwap(spark: SparkSession, path: String): Unit = {
     val f = fs(spark, path)
     val old = new Path(s"$path.__swap_old")
@@ -1333,8 +1342,12 @@ object IO {
     * [[recoverSwap]] restores the latter on the next access. Hadoop
     * rename reports failure by RETURNING false, so every rename is
     * checked — an unflagged failed rename would nest tmp inside the
-    * still-existing target. Shared by compact() and the streaming
-    * upsert sink so the crash-window reasoning lives in one place. */
+    * still-existing target. Shared by compact(), the streaming upsert
+    * sink and [[Staging.publish]]'s rename mode, so the crash-window
+    * reasoning lives in one place. The watermark control table
+    * ([[graft.incremental.Watermark.writeTable]]) keeps its own
+    * staged/old naming, which is part of that table's recovery
+    * contract. */
   def replaceDir(spark: SparkSession, path: String)(write: String => Unit): Unit = {
     val f = fs(spark, path)
     val tmp = s"$path.__swap_tmp"

@@ -78,14 +78,22 @@ object IoQueries {
   private def eventsSlim(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).select("event_id", "user_id", "event_type")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val EV_SLIM = "SELECT event_id, user_id, event_type FROM events"
+
+  // last in the object: the oracles interpolate the SQL fragments above
+  val queries: Seq[Query] = Seq(
     // real JDBC source path (S1/S2 against embedded Derby): seed the
     // orders table into the database once, then an incremental load —
     // post-watermark, price-capped rows only — through a key-range
     // partitioned JDBC read; both predicates push into the remote SQL
     // (spec asserts PushedFilters + partition count). o_orderdate is
     // emitted as epoch micros so the oracle compare is tz-proof.
-    "s12_jdbc_incremental" -> { (s, dir) =>
+    Query("s12_jdbc_incremental",
+      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+        |       epoch_us(o_orderdate) AS od_us
+        |FROM orders
+        |WHERE o_orderkey > 100 AND o_totalprice < 150000.0
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val ord = Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
       val url = graft.io.Jdbc.seedOnce(ord, s"db_${Fixtures.corpusTag(dir)}", "orders",
@@ -101,7 +109,8 @@ object IoQueries {
     // scraped-data deliveries actually arrive in; Spark's text sources
     // decompress transparently, but gzip is NOT splittable — one task
     // per .gz file, so real pipelines keep delivery files shard-sized)
-    "s15_gzip_json_roundtrip" -> { (s, dir) =>
+    Query("s15_gzip_json_roundtrip",
+      "SELECT event_id, user_id, event_type FROM events ORDER BY event_id") { (s, dir) =>
       val p = scratch(dir, "io/gzip")
       Tables.events(s, dir).select("event_id", "user_id", "event_type")
         .write.mode("overwrite").option("compression", "gzip").json(p)
@@ -113,7 +122,10 @@ object IoQueries {
     // without `value` and a new batch with it, read as one table via
     // mergeSchema (the footer-union read an append-only lake needs when
     // columns arrive over time); old rows surface NULL for the new column
-    "s14_schema_evolution" -> { (s, dir) =>
+    Query("s14_schema_evolution",
+      """SELECT event_id, user_id, event_type,
+        |       CASE WHEN event_id % 2 = 1 THEN value END AS value
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       val p = scratch(dir, "io/evolve")
       val ev = Tables.events(s, dir)
       ev.filter(col("event_id") % 2 === 0)
@@ -126,7 +138,9 @@ object IoQueries {
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
     },
-    "s13_orc_roundtrip" -> { (s, dir) =>
+    Query("s13_orc_roundtrip",
+      """SELECT event_id, user_id, event_type, value
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       val p = scratch(dir, "io/orc")
       IO.writeOrc(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"), p)
       IO.readOrc(s, p).orderBy("event_id")
@@ -134,7 +148,9 @@ object IoQueries {
     // K11 — compaction: 40 deliberately-tiny files rewritten to
     // ~256 KB-target files; the oracle proves content survives the
     // rewrite bit-for-bit, the spec asserts the file-count collapse
-    "k11_compaction" -> { (s, dir) =>
+    Query("k11_compaction",
+      """SELECT event_id, user_id, event_type, value
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       val p = scratch(dir, "io/compact")
       Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")
         .repartition(40)
@@ -142,7 +158,11 @@ object IoQueries {
       IO.compact(s, p, targetBytes = 256 * 1024L)
       s.read.parquet(p).orderBy("event_id")
     },
-    "j1_enrich_broadcast" -> { (s, dir) =>
+    Query("j1_enrich_broadcast",
+      """SELECT p_brand, COUNT(*) AS n,
+        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS qty
+        |FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin) { (s, dir) =>
       val joined = Ingest.enrich(Tables.lineitem(s, dir), Tables.part(s, dir),
         "l_partkey", "p_partkey")
       joined
@@ -151,7 +171,11 @@ object IoQueries {
           sum(floor(col("l_quantity")).cast("long")).as("qty"))
         .orderBy("p_brand")
     },
-    "p4_hash_sample" -> { (s, dir) =>
+    Query("p4_hash_sample",
+      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber
+        |FROM lineitem
+        |WHERE md5(CAST(l_orderkey AS VARCHAR) || '#' || CAST(l_linenumber AS VARCHAR)) < '1a'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       // engine-portable 10 % sample: md5-gated membership replays
       // bit-for-bit in DuckDB (the seeded-RNG twin Rows.seededSample is
       // engine-specific; its replay-determinism is spec-asserted)
@@ -159,7 +183,11 @@ object IoQueries {
         .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"))
         .orderBy("l_orderkey", "l_linenumber")
     },
-    "p10_stratified_sample" -> { (s, dir) =>
+    Query("p10_stratified_sample",
+      """SELECT doc_id, lang FROM documents
+        |WHERE md5(CAST(doc_id AS VARCHAR)) <
+        |  (CASE WHEN lang = 'en' THEN '33' WHEN lang = 'de' THEN '0d' ELSE '80' END)
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // per-language keep fractions (en 20%, de 5%, rest 50%) — the
       // corpus-balancing step of a curation pipeline, membership
       // replayable by key hash
@@ -168,7 +196,12 @@ object IoQueries {
         .select("doc_id", "lang")
         .orderBy("doc_id")
     },
-    "p11_split_assign" -> { (s, dir) =>
+    Query("p11_split_assign",
+      """SELECT doc_id, lang,
+        |  CASE WHEN md5(CAST(doc_id AS VARCHAR)) < '0ccc' THEN 'val'
+        |       WHEN md5(CAST(doc_id AS VARCHAR)) < '1999' THEN 'test'
+        |       ELSE 'train' END AS split
+        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // deterministic, backfill-stable train/val/test assignment:
       // membership is a pure key-hash property, so re-running over a
       // grown corpus never moves an old row between splits
@@ -177,7 +210,15 @@ object IoQueries {
         .select("doc_id", "lang", "split")
         .orderBy("doc_id")
     },
-    "p13_group_sample" -> { (s, dir) =>
+    // the salted two-stage rank is value-invisible: the oracle is the
+    // naive single window it replaces
+    Query("p13_group_sample",
+      """SELECT doc_id, lang, CAST(sample_rank AS INTEGER) AS sample_rank FROM (
+        |  SELECT doc_id, lang,
+        |    ROW_NUMBER() OVER (PARTITION BY lang
+        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS sample_rank
+        |  FROM documents)
+        |WHERE sample_rank <= 20 ORDER BY lang, sample_rank""".stripMargin) { (s, dir) =>
       // EXACTLY 20 docs per language (p10's fraction gate is
       // binomially noisy on skewed strata): the k smallest md5(key)
       // per group via the salted two-stage rank — a hot language
@@ -187,7 +228,13 @@ object IoQueries {
         .select("doc_id", "lang", "sample_rank")
         .orderBy("lang", "sample_rank")
     },
-    "p12_variant_extract" -> { (s, dir) =>
+    // the oracle replays the JSON-path extraction on the raw string —
+    // a wrong variant parse, path walk, or cast diverges
+    Query("p12_variant_extract",
+      """SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k
+        |FROM events
+        |WHERE CAST(json_extract(props, '$.k') AS BIGINT) % 7 = 0
+        |ORDER BY event_id""".stripMargin) { (s, dir) =>
       // the events table's free-form JSON property bag through Spark
       // 4's VARIANT type: one binary parse, typed path extraction,
       // filter on the extracted value — all codegen, all narrow
@@ -196,7 +243,8 @@ object IoQueries {
         .select("event_id", "k")
         .orderBy("event_id")
     },
-    "p5_bool_coercion" -> { (s, dir) =>
+    Query("p5_bool_coercion",
+      "SELECT event_id, (value > 50.0) AS is_big FROM events ORDER BY event_id") { (s, dir) =>
       val withStr = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"),
           when(col("value") > 50.0, "true").otherwise("false").as("is_big"))
@@ -204,11 +252,17 @@ object IoQueries {
         .select("event_id", "is_big")
         .orderBy("event_id")
     },
-    "p6_uuid_string" -> { (s, dir) =>
+    Query("p6_uuid_string",
+      """SELECT event_id, CAST(user_id AS VARCHAR) AS user_id, event_type
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       Rows.stringifyColumns(eventsSlim(s, dir), Seq("user_id"))
         .orderBy("event_id")
     },
-    "p7_ts_parse" -> { (s, dir) =>
+    Query("p7_ts_parse",
+      """SELECT event_id,
+        |  CAST(epoch_us(strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'),
+        |       '%Y-%m-%d %H:%M:%S')) // 1000000 AS BIGINT) AS parsed_sec
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       val strs = Tables.events(s, dir)
         .select(col("event_id"), date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"))
       strs
@@ -218,7 +272,12 @@ object IoQueries {
         .select(col("event_id"), col("parsed").cast("long").as("parsed_sec"))
         .orderBy("event_id")
     },
-    "p9_flatten_nested" -> { (s, dir) =>
+    Query("p9_flatten_nested",
+      """SELECT event_id,
+        |  event_type AS "meta.detail.event_type",
+        |  value AS "meta.detail.value",
+        |  user_id AS "meta.user_id"
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       // recursive struct flattener over a real nested-JSON source: write
       // two-level structs, read back (spark.read.json infers the nested
       // StructType — the typed twin of per-cell json.loads), flatten to
@@ -230,17 +289,18 @@ object IoQueries {
       IO.writeJsonLines(nested, p)
       graft.ops.Flatten.flatten(IO.readJsonAuto(s, p)).orderBy("event_id")
     },
-    "s3_json_roundtrip" -> { (s, dir) =>
+    Query("s3_json_roundtrip", s"$EV_SLIM ORDER BY event_id") { (s, dir) =>
       val p = scratch(dir, "io/jsonlines")
       IO.writeJsonLines(eventsSlim(s, dir), p)
       IO.readJsonAuto(s, p).select("event_id", "user_id", "event_type").orderBy("event_id")
     },
-    "k2_json_array_roundtrip" -> { (s, dir) =>
+    Query("k2_json_array_roundtrip", s"$EV_SLIM ORDER BY event_id") { (s, dir) =>
       val p = scratch(dir, "io/jsonarray")
       IO.writeJsonArray(eventsSlim(s, dir).orderBy("event_id"), p)
       IO.readJsonAuto(s, p).select("event_id", "user_id", "event_type").orderBy("event_id")
     },
-    "s4_csv_roundtrip" -> { (s, dir) =>
+    Query("s4_csv_roundtrip",
+      "SELECT event_id, user_id, event_type, value FROM events ORDER BY event_id") { (s, dir) =>
       val p = scratch(dir, "io/csv")
       IO.writeCsv(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"), p)
       // inferSchema narrows small ints to int32; restore 64-bit ids
@@ -249,7 +309,7 @@ object IoQueries {
           col("user_id").cast("long").as("user_id"), col("event_type"), col("value"))
         .orderBy("event_id")
     },
-    "s5_glob_union" -> { (s, dir) =>
+    Query("s5_glob_union", s"$EV_SLIM ORDER BY event_id") { (s, dir) =>
       val p = scratch(dir, "io/glob")
       val ev = eventsSlim(s, dir)
       IO.writeJsonLines(ev.filter(col("event_id") % 2 === 0), s"$p/even.json")
@@ -258,7 +318,8 @@ object IoQueries {
       s.read.json(s"$p/*.json/*.json")
         .select("event_id", "user_id", "event_type").orderBy("event_id")
     },
-    "k4_parquet_roundtrip" -> { (s, dir) =>
+    Query("k4_parquet_roundtrip",
+      "SELECT event_id, user_id, event_type, value FROM events ORDER BY event_id") { (s, dir) =>
       val p = scratch(dir, "io/parquet")
       IO.writeParquet(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"), p)
       s.read.parquet(p).orderBy("event_id")
@@ -276,7 +337,10 @@ object IoQueries {
     // files pre-exist. The oracle re-derives (name, byte length,
     // base64 payload) from the documents table, so content is
     // hash-compared end to end, not just counted.
-    "s16_binaryfile_ingest" -> { (s, dir) =>
+    // s16 replays the fixture derivation, not the files: name, BYTE
+    // length and base64 payload recomputed from the documents table —
+    // a content-level compare of what binaryFile actually read
+    Query("s16_binaryfile_ingest", BinFilesSql) { (s, dir) =>
       val p = binFilesFixture(s, dir)
       s.read.format("binaryFile").load(s"$p/*.bin")
         .select(element_at(split(col("path"), "/"), -1).as("fname"),
@@ -301,7 +365,9 @@ object IoQueries {
     // manifest segments here exercise the append-only accumulation;
     // same content-level oracle as s16 — the planner must be
     // byte-invisible.
-    "s18_manifest_ingest" -> { (s, dir) =>
+    // s18 plans from the manifest instead of the file index — the
+    // planner must be byte-invisible, same shared content oracle
+    Query("s18_manifest_ingest", BinFilesSql) { (s, dir) =>
       IO.readBinaryFromManifest(s, binManifestFixture(s, dir))
         .select(col("fname"), col("length"),
           base64(col("content")).as("content_b64"))
@@ -318,7 +384,9 @@ object IoQueries {
     // compaction deletes segments, which must not perturb the shared
     // s18/st18 fixture); the oracle is the shared byte-content SQL:
     // compaction must be byte-invisible to readers.
-    "s19_manifest_compact" -> { (s, dir) =>
+    // s19 folds manifest segments into the parquet checkpoint —
+    // compaction must be byte-invisible too, same shared oracle
+    Query("s19_manifest_compact", BinFilesSql) { (s, dir) =>
       import s.implicits._
       val p = binFilesFixture(s, dir)
       val man = scratch(dir, "io/bin_manifest_compact")
@@ -339,7 +407,9 @@ object IoQueries {
           base64(col("content")).as("content_b64"))
         .orderBy("fname")
     },
-    "s17_binary_pack" -> { (s, dir) =>
+    // s17 packs the same fixture the s16 source reads — byte-invisible
+    // by contract, so the oracle is shared verbatim
+    Query("s17_binary_pack", BinFilesSql) { (s, dir) =>
       val p = binFilesFixture(s, dir)
       val dest = scratch(dir, "io/binpacked")
       IO.packBinaryDir(s, s"$p/*.bin", dest)
@@ -348,7 +418,9 @@ object IoQueries {
           base64(col("content")).as("content_b64"))
         .orderBy("fname")
     },
-    "s10_watermark_lookup" -> { (s, dir) =>
+    Query("s10_watermark_lookup",
+      """SELECT event_id, epoch_us(ts) AS ts_us FROM events
+        |WHERE epoch_us(ts) > 1704175200000000 ORDER BY event_id""".stripMargin) { (s, dir) =>
       val csv = scratch(dir, "io/wm_lookup")
       Watermark.writeTable(s, csv,
         Seq(Watermark.Entry("events", "1704175200000000", "ts_us")))
@@ -357,7 +429,14 @@ object IoQueries {
       Watermark.incrementalScan(src, wm.updateColumn, wm.watermarkValue)
         .select("event_id", "ts_us").orderBy("event_id")
     },
-    "k6_watermark_update" -> { (s, dir) =>
+    Query("k6_watermark_update",
+      """SELECT * FROM (
+        |  SELECT 'events' AS table_name,
+        |         CAST(MAX(epoch_us(ts)) AS VARCHAR) AS watermark_value,
+        |         'ts_us' AS update_column
+        |  FROM events
+        |  UNION ALL SELECT 'other', '0', 'x'
+        |) ORDER BY table_name""".stripMargin) { (s, dir) =>
       import s.implicits._
       val csv = scratch(dir, "io/wm_update")
       Watermark.writeTable(s, csv,
@@ -370,7 +449,9 @@ object IoQueries {
         .toDF("table_name", "watermark_value", "update_column")
         .orderBy("table_name")
     },
-    "s11_file_discovery" -> { (s, dir) =>
+    Query("s11_file_discovery",
+      s"""SELECT event_id, user_id, event_type FROM events
+         |WHERE strftime(ts, '%Y%m%d') > '20240101' ORDER BY event_id""".stripMargin) { (s, dir) =>
       // one partitioned write job (not one job per dated slice), then
       // driver-side metadata renames into the reference's
       // {base}/{yyyyMMdd}/{yyyyMMddHHmmss}_{entity}.json layout
@@ -400,7 +481,9 @@ object IoQueries {
       s.read.json(files: _*)
         .select("event_id", "user_id", "event_type").orderBy("event_id")
     },
-    "e1_incremental_ingest" -> { (s, dir) =>
+    Query("e1_incremental_ingest",
+      """SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us FROM events
+        |WHERE epoch_us(ts) > 1704175200000000 ORDER BY event_id""".stripMargin) { (s, dir) =>
       val csv = scratch(dir, "io/wm_e1")
       Watermark.writeTable(s, csv,
         Seq(Watermark.Entry("events", "1704175200000000", "ts_us")))
@@ -411,7 +494,11 @@ object IoQueries {
         .select("event_id", "user_id", "event_type", "ts_us")
         .orderBy("event_id")
     },
-    "e3_batch_ingest" -> { (s, dir) =>
+    Query("e3_batch_ingest",
+      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_quantity
+        |FROM lineitem
+        |WHERE md5(CAST(l_orderkey AS VARCHAR) || '#' || CAST(l_linenumber AS VARCHAR)) < '1a'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       // CSV source materialized from lineitem, then the full E3 chain
       // with the hash-gated sample so membership (not just row count)
       // is oracle-checkable; CSV inference narrows ints → restore 64-bit
@@ -424,189 +511,7 @@ object IoQueries {
           col("l_linenumber").cast("long").as("l_linenumber"), col("l_quantity"))
         .orderBy("l_orderkey", "l_linenumber")
     },
-    "k7_quality_report" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val spec = Quality.ReportSpec(
-        nullCols = Seq("event_id", "event_type"),
-        defaults = Map("event_type" -> lit("view")),
-        dupKeys = Seq("user_id", "event_type"),
-        cleanRules = Seq(
-          Quality.CleanRule("value_pos", "value", col("value") > 0.0),
-          Quality.CleanRule("props_json", "props", col("props").startsWith("{")))
-      )
-      Ingest.qualityCheck(ev, spec, scratch(dir, "io/report") + "/report.json",
-        Map("event_id" -> "bigint", "event_type" -> "string"))
-    },
-    "a8_dtype_check" -> { (s, dir) =>
-      import s.implicits._
-      Quality
-        .dtypeCheck(Tables.events(s, dir),
-          Map("event_id" -> "bigint", "event_type" -> "string",
-            "value" -> "double", "missing_col" -> "string"))
-        .toDF("column_name", "expected", "actual", "ok")
-        .orderBy("column_name")
-    },
-    "a9_schema_diff" -> { (s, dir) =>
-      import s.implicits._
-      val src = Tables.customer(s, dir)
-      val transformed = src.drop("c_mktsegment", "c_acctbal")
-      Quality.schemaDiff(src, transformed).toDF("missing_col").orderBy("missing_col")
-    },
-    // K13 — range-clustered write: disjoint sorted user_id ranges per
-    // file, then a selective read back — parquet min-max stats prune
-    // the non-matching files (spec asserts the disjointness; the
-    // oracle proves the roundtrip + filter fidelity)
-    "k13_clustered_write" -> { (s, dir) =>
-      val p = scratch(dir, "io/clustered")
-      IO.writeClustered(
-        Tables.events(s, dir).select("event_id", "user_id", "event_type"),
-        p, nFiles = 8, col("user_id"), col("event_id"))
-      s.read.parquet(p)
-        .filter(col("user_id") < 50L)
-        .orderBy("event_id")
-    },
-    // K14 — Z-ORDER clustered write: files sorted by the interleaved
-    // (user_id, value-bucket) Morton code, so min-max stats prune
-    // selective filters on EITHER dimension (k13's 1-D sort prunes
-    // only its leading key). The oracle proves roundtrip + filter
-    // fidelity on the SECOND dimension; the spec proves the per-file
-    // bounding boxes actually shrink.
-    "k14_zorder_write" -> { (s, dir) =>
-      val p = scratch(dir, "io/zorder")
-      IO.writeZOrdered(
-        Tables.events(s, dir).select("event_id", "user_id", "value"),
-        p, nFiles = 8,
-        pmod(col("user_id"), lit(65536L)),
-        pmod(floor(col("value") * 100).cast("long"), lit(65536L)))
-      s.read.parquet(p)
-        .filter(col("value") >= 99.0)
-        .orderBy("event_id")
-    }
-  )
-
-  private val EV_SLIM = "SELECT event_id, user_id, event_type FROM events"
-
-  val oracles: Map[String, String] = Map(
-    "k13_clustered_write" ->
-      """SELECT event_id, user_id, event_type FROM events
-        |WHERE user_id < 50 ORDER BY event_id""".stripMargin,
-    "k14_zorder_write" ->
-      """SELECT event_id, user_id, value FROM events
-        |WHERE value >= 99.0 ORDER BY event_id""".stripMargin,
-    "s15_gzip_json_roundtrip" ->
-      "SELECT event_id, user_id, event_type FROM events ORDER BY event_id",
-    "s14_schema_evolution" ->
-      """SELECT event_id, user_id, event_type,
-        |       CASE WHEN event_id % 2 = 1 THEN value END AS value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "s13_orc_roundtrip" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "k11_compaction" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "s12_jdbc_incremental" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |       epoch_us(o_orderdate) AS od_us
-        |FROM orders
-        |WHERE o_orderkey > 100 AND o_totalprice < 150000.0
-        |ORDER BY o_orderkey""".stripMargin,
-    "j1_enrich_broadcast" ->
-      """SELECT p_brand, COUNT(*) AS n,
-        |       CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS qty
-        |FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "p4_hash_sample" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber
-        |FROM lineitem
-        |WHERE md5(CAST(l_orderkey AS VARCHAR) || '#' || CAST(l_linenumber AS VARCHAR)) < '1a'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "e3_batch_ingest" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_quantity
-        |FROM lineitem
-        |WHERE md5(CAST(l_orderkey AS VARCHAR) || '#' || CAST(l_linenumber AS VARCHAR)) < '1a'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "p10_stratified_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE md5(CAST(doc_id AS VARCHAR)) <
-        |  (CASE WHEN lang = 'en' THEN '33' WHEN lang = 'de' THEN '0d' ELSE '80' END)
-        |ORDER BY doc_id""".stripMargin,
-    // the salted two-stage rank is value-invisible: the oracle is the
-    // naive single window it replaces
-    "p13_group_sample" ->
-      """SELECT doc_id, lang, CAST(sample_rank AS INTEGER) AS sample_rank FROM (
-        |  SELECT doc_id, lang,
-        |    ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS sample_rank
-        |  FROM documents)
-        |WHERE sample_rank <= 20 ORDER BY lang, sample_rank""".stripMargin,
-    // the oracle replays the JSON-path extraction on the raw string —
-    // a wrong variant parse, path walk, or cast diverges
-    "p12_variant_extract" ->
-      """SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k
-        |FROM events
-        |WHERE CAST(json_extract(props, '$.k') AS BIGINT) % 7 = 0
-        |ORDER BY event_id""".stripMargin,
-    "p11_split_assign" ->
-      """SELECT doc_id, lang,
-        |  CASE WHEN md5(CAST(doc_id AS VARCHAR)) < '0ccc' THEN 'val'
-        |       WHEN md5(CAST(doc_id AS VARCHAR)) < '1999' THEN 'test'
-        |       ELSE 'train' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "p5_bool_coercion" ->
-      "SELECT event_id, (value > 50.0) AS is_big FROM events ORDER BY event_id",
-    "p6_uuid_string" ->
-      """SELECT event_id, CAST(user_id AS VARCHAR) AS user_id, event_type
-        |FROM events ORDER BY event_id""".stripMargin,
-    "p7_ts_parse" ->
-      """SELECT event_id,
-        |  CAST(epoch_us(strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'),
-        |       '%Y-%m-%d %H:%M:%S')) // 1000000 AS BIGINT) AS parsed_sec
-        |FROM events ORDER BY event_id""".stripMargin,
-    "p9_flatten_nested" ->
-      """SELECT event_id,
-        |  event_type AS "meta.detail.event_type",
-        |  value AS "meta.detail.value",
-        |  user_id AS "meta.user_id"
-        |FROM events ORDER BY event_id""".stripMargin,
-    "s3_json_roundtrip" -> s"$EV_SLIM ORDER BY event_id",
-    "k2_json_array_roundtrip" -> s"$EV_SLIM ORDER BY event_id",
-    "s4_csv_roundtrip" ->
-      "SELECT event_id, user_id, event_type, value FROM events ORDER BY event_id",
-    "s5_glob_union" -> s"$EV_SLIM ORDER BY event_id",
-    "k4_parquet_roundtrip" ->
-      "SELECT event_id, user_id, event_type, value FROM events ORDER BY event_id",
-    // s16 replays the fixture derivation, not the files: name, BYTE
-    // length and base64 payload recomputed from the documents table —
-    // a content-level compare of what binaryFile actually read
-    "s16_binaryfile_ingest" -> BinFilesSql,
-    // s18 plans from the manifest instead of the file index — the
-    // planner must be byte-invisible, same shared content oracle
-    "s18_manifest_ingest" -> BinFilesSql,
-    // s19 folds manifest segments into the parquet checkpoint —
-    // compaction must be byte-invisible too, same shared oracle
-    "s19_manifest_compact" -> BinFilesSql,
-    // s17 packs the same fixture the s16 source reads — byte-invisible
-    // by contract, so the oracle is shared verbatim
-    "s17_binary_pack" -> BinFilesSql,
-    "s10_watermark_lookup" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us FROM events
-        |WHERE epoch_us(ts) > 1704175200000000 ORDER BY event_id""".stripMargin,
-    "k6_watermark_update" ->
-      """SELECT * FROM (
-        |  SELECT 'events' AS table_name,
-        |         CAST(MAX(epoch_us(ts)) AS VARCHAR) AS watermark_value,
-        |         'ts_us' AS update_column
-        |  FROM events
-        |  UNION ALL SELECT 'other', '0', 'x'
-        |) ORDER BY table_name""".stripMargin,
-    "s11_file_discovery" ->
-      s"""SELECT event_id, user_id, event_type FROM events
-         |WHERE strftime(ts, '%Y%m%d') > '20240101' ORDER BY event_id""".stripMargin,
-    "e1_incremental_ingest" ->
-      """SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us FROM events
-        |WHERE epoch_us(ts) > 1704175200000000 ORDER BY event_id""".stripMargin,
-    "k7_quality_report" ->
+    Query("k7_quality_report",
       """SELECT *,
         |  CASE WHEN total_value_pos > 0
         |       THEN 100.0 * valid_value_pos / total_value_pos END AS rate_value_pos,
@@ -624,16 +529,75 @@ object IoQueries {
         |    CAST(COUNT(*) - COUNT(DISTINCT (user_id, event_type)) AS BIGINT) AS dup_rows,
         |    COUNT(*) AS n_rows,
         |    CAST(6 AS BIGINT) AS n_cols
-        |  FROM events)""".stripMargin,
-    "a8_dtype_check" ->
+        |  FROM events)""".stripMargin) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+      val spec = Quality.ReportSpec(
+        nullCols = Seq("event_id", "event_type"),
+        defaults = Map("event_type" -> lit("view")),
+        dupKeys = Seq("user_id", "event_type"),
+        cleanRules = Seq(
+          Quality.CleanRule("value_pos", "value", col("value") > 0.0),
+          Quality.CleanRule("props_json", "props", col("props").startsWith("{")))
+      )
+      Ingest.qualityCheck(ev, spec, scratch(dir, "io/report") + "/report.json",
+        Map("event_id" -> "bigint", "event_type" -> "string"))
+    },
+    Query("a8_dtype_check",
       """SELECT * FROM (VALUES
         |  ('event_id', 'bigint', 'bigint', TRUE),
         |  ('event_type', 'string', 'string', TRUE),
         |  ('missing_col', 'string', 'missing', FALSE),
         |  ('value', 'double', 'double', TRUE))
-        |AS t(column_name, expected, actual, ok) ORDER BY column_name""".stripMargin,
-    "a9_schema_diff" ->
+        |AS t(column_name, expected, actual, ok) ORDER BY column_name""".stripMargin) { (s, dir) =>
+      import s.implicits._
+      Quality
+        .dtypeCheck(Tables.events(s, dir),
+          Map("event_id" -> "bigint", "event_type" -> "string",
+            "value" -> "double", "missing_col" -> "string"))
+        .toDF("column_name", "expected", "actual", "ok")
+        .orderBy("column_name")
+    },
+    Query("a9_schema_diff",
       """SELECT * FROM (VALUES ('c_acctbal'), ('c_mktsegment'))
-        |AS t(missing_col) ORDER BY missing_col""".stripMargin
+        |AS t(missing_col) ORDER BY missing_col""".stripMargin) { (s, dir) =>
+      import s.implicits._
+      val src = Tables.customer(s, dir)
+      val transformed = src.drop("c_mktsegment", "c_acctbal")
+      Quality.schemaDiff(src, transformed).toDF("missing_col").orderBy("missing_col")
+    },
+    // K13 — range-clustered write: disjoint sorted user_id ranges per
+    // file, then a selective read back — parquet min-max stats prune
+    // the non-matching files (spec asserts the disjointness; the
+    // oracle proves the roundtrip + filter fidelity)
+    Query("k13_clustered_write",
+      """SELECT event_id, user_id, event_type FROM events
+        |WHERE user_id < 50 ORDER BY event_id""".stripMargin) { (s, dir) =>
+      val p = scratch(dir, "io/clustered")
+      IO.writeClustered(
+        Tables.events(s, dir).select("event_id", "user_id", "event_type"),
+        p, nFiles = 8, col("user_id"), col("event_id"))
+      s.read.parquet(p)
+        .filter(col("user_id") < 50L)
+        .orderBy("event_id")
+    },
+    // K14 — Z-ORDER clustered write: files sorted by the interleaved
+    // (user_id, value-bucket) Morton code, so min-max stats prune
+    // selective filters on EITHER dimension (k13's 1-D sort prunes
+    // only its leading key). The oracle proves roundtrip + filter
+    // fidelity on the SECOND dimension; the spec proves the per-file
+    // bounding boxes actually shrink.
+    Query("k14_zorder_write",
+      """SELECT event_id, user_id, value FROM events
+        |WHERE value >= 99.0 ORDER BY event_id""".stripMargin) { (s, dir) =>
+      val p = scratch(dir, "io/zorder")
+      IO.writeZOrdered(
+        Tables.events(s, dir).select("event_id", "user_id", "value"),
+        p, nFiles = 8,
+        pmod(col("user_id"), lit(65536L)),
+        pmod(floor(col("value") * 100).cast("long"), lit(65536L)))
+      s.read.parquet(p)
+        .filter(col("value") >= 99.0)
+        .orderBy("event_id")
+    }
   )
 }

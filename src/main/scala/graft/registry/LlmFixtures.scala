@@ -10,8 +10,7 @@ import TextQueries.{StopSql, tokSql, ngramSql}
 /** Shared fixtures behind the LLM-pipeline query families: the
   * synthetic near-dup corpora, the staged artifacts (built once per
   * session through [[Fixtures.staged]]), and the DuckDB SQL
-  * snippet builders every family's oracle composes. Extracted from
-  * LlmQueries in the round-11 mechanical split. */
+  * snippet builders every family's oracle composes. */
 private[registry] object LlmFixtures {
 
   /** Read a staged artifact with crash-window availability on either

@@ -9,8 +9,7 @@ import LlmFixtures._
 import TextQueries.StopSql
 
 /** e-family: the composed end-to-end pipelines (e4 curation manifest,
-  * e5 incremental flagship). Extracted verbatim from LlmQueries
-  * (round-11 mechanical split); shared fixtures in [[LlmFixtures]]. */
+  * e5 incremental flagship); shared fixtures in [[LlmFixtures]]. */
 object PipelineQueries {
 
   /** e6's exact-dedup stage, shared by the query and the staged-LM
@@ -36,7 +35,7 @@ object PipelineQueries {
     (readStaged(s, path, "counts"), readStaged(s, path, "totals"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // e4 — the multimodal curation MANIFEST, the whole engine in one
     // plan: score (lang-ID, quality, tokens) → threshold filter →
     // exact content dedup keeping the min-id canonical (one digest
@@ -44,7 +43,51 @@ object PipelineQueries {
     // survivors (narrow mapPartitions each) → thin id-keyed feature
     // joins. The survivor table persists across its three consumers
     // and releases on the caller's first action (Caching contract).
-    "e4_curation_manifest" -> { (s, dir) =>
+    // full-replay of the e4 composition: same scoring CTEs as y5,
+    // dedup keyed on md5(text) (all copies share text, so arg_min
+    // carries the canonical row's scores), media features in the
+    // m4/m5 closed forms keyed by the surviving ids
+    Query("e4_curation_manifest",
+      s"""WITH t AS (
+         |  SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS ts FROM documents),
+         |h AS (
+         |  SELECT doc_id, text, ts, ${langHits(de)} AS hd, ${langHits(en)} AS he,
+         |    ${langHits(fr)} AS hf
+         |  FROM t),
+         |scored AS (
+         |  SELECT doc_id, text,
+         |    CASE WHEN hd >= he AND hd >= hf AND hd > 0 THEN 'de'
+         |         WHEN he >= hf AND he > 0 THEN 'en'
+         |         WHEN hf > 0 THEN 'fr'
+         |         ELSE 'und' END AS lang_pred,
+         |    least(CAST(len(ts) AS DOUBLE) / 50.0, 1.0) *
+         |    (1.0 - CAST(len(list_filter(ts, t -> list_contains($StopSql, t))) AS DOUBLE)
+         |           / CAST(len(ts) AS DOUBLE)) AS score,
+         |    CAST(len(ts) AS BIGINT) AS n_tokens
+         |  FROM h),
+         |filtered AS (
+         |  SELECT * FROM scored
+         |  WHERE lang_pred != 'und' AND score > 0.2 AND n_tokens >= 5),
+         |survivors AS (
+         |  SELECT min(doc_id) AS doc_id, arg_min(lang_pred, doc_id) AS lang_pred,
+         |    arg_min(score, doc_id) AS score, arg_min(n_tokens, doc_id) AS n_tokens,
+         |    CAST(COUNT(*) AS BIGINT) AS n_copies
+         |  FROM filtered GROUP BY md5(text)),
+         |media AS (
+         |  SELECT doc_id,
+         |    CAST(16 + doc_id % 17 AS BIGINT) AS w,
+         |    CAST(16 + (3 * doc_id + 5) % 13 AS BIGINT) AS h,
+         |    CAST(doc_id % 256 AS BIGINT) AS a,
+         |    CAST((7 * doc_id + 13) % 256 AS BIGINT) AS b,
+         |    CAST(256 + (5 * doc_id + 7) % 128 AS BIGINT) AS nf,
+         |    CAST(8000 * (1 + doc_id % 3) AS BIGINT) AS sr
+         |  FROM survivors)
+         |SELECT s.doc_id, s.lang_pred, s.score, s.n_tokens, s.n_copies,
+         |  CAST((m.h * ((m.w // 2) * m.a + (m.w - m.w // 2) * m.b) * 1000)
+         |    // (m.w * m.h) AS BIGINT) AS img_mean_milli,
+         |  CAST((m.nf * 1000) // m.sr AS BIGINT) AS audio_ms,
+         |  '${graft.llm.Multimodal.PayloadImpl}' AS encoder_impl
+         |FROM survivors s JOIN media m USING (doc_id) ORDER BY s.doc_id""".stripMargin) { (s, dir) =>
       val scored = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"),
           TextAnalysis.langId(col("text")).as("lang_pred"),
@@ -104,7 +147,73 @@ object PipelineQueries {
     // rebuild-on-first-call wipes stale appends, re-appending the same
     // vectors re-asserts the same cells (read distinct), and re-merging
     // the same batch is a keep-latest no-op (the st12 replay property).
-    "e5_incremental_pipeline" -> { (s, dir) =>
+    // e5 — every stage of the incremental pipeline replayed: batch
+    // synthesis, digest anti-join (bloom is exact), banded near-dup
+    // sweep (x14's CTEs), k-means cell routing (x7's CTEs), and the
+    // per-language state fold; the upserted-table read-back equals
+    // the survivor set by keep-latest idempotence.
+    Query("e5_incremental_pipeline",
+      s"""WITH v AS (
+         |  SELECT vec_id, ${qvSql("embedding")} AS nv FROM embeddings),
+         |c0 AS (SELECT vec_id AS cell_id, nv AS cv FROM v WHERE vec_id < 16),
+         |${kmeansIterSql("c0", "a1", "c1")},
+         |${kmeansIterSql("c1", "a2", "c2")},
+         |batch0 AS (
+         |  SELECT d.doc_id,
+         |    CASE (d.doc_id // 5) % 3 WHEN 0 THEN d.text WHEN 1 THEN d.text || ' v2'
+         |      ELSE 'fresh entry ' || CAST(d.doc_id AS VARCHAR) || ' carries wholly novel content alpha' || CAST(d.doc_id AS VARCHAR) || ' beta gamma delta' END AS text,
+         |    d.lang
+         |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
+         |  WHERE d.doc_id % 5 = 0),
+         |batch AS (
+         |  SELECT doc_id + 20000 AS doc_id, text, lang, md5(text) AS digest FROM batch0),
+         |exact_new AS (
+         |  SELECT * FROM batch b
+         |  WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE md5(d.text) = b.digest)),
+         |nsh AS (
+         |  SELECT doc_id AS id, $shSql AS sh
+         |  FROM (SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS tk FROM exact_new)
+         |  WHERE len($shSql) > 0),
+         |bsh AS (
+         |  SELECT doc_id AS id, $shSql AS sh
+         |  FROM (SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS tk FROM documents)
+         |  WHERE len($shSql) > 0),
+         |nbands AS (
+         |  SELECT id, sh, unnest($bands4) AS band
+         |  FROM (SELECT id, sh, $minhash12 AS sig FROM nsh)),
+         |bbands AS (
+         |  SELECT id, sh, unnest($bands4) AS band
+         |  FROM (SELECT id, sh, $minhash12 AS sig FROM bsh)),
+         |ndhits AS (
+         |  SELECT DISTINCT n.id FROM nbands n JOIN bbands b USING (band)
+         |  WHERE CAST(len(list_intersect(n.sh, b.sh)) AS DOUBLE) /
+         |        CAST(len(list_distinct(list_concat(n.sh, b.sh))) AS DOUBLE) >= 0.5),
+         |survivors AS (
+         |  SELECT doc_id, lang, digest,
+         |    CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens
+         |  FROM exact_new WHERE doc_id NOT IN (SELECT id FROM ndhits)),
+         |cells AS (
+         |  SELECT doc_id, cell_id FROM (
+         |    SELECT sq.doc_id, c.cell_id,
+         |      row_number() OVER (PARTITION BY sq.doc_id
+         |        ORDER BY ${cosineSql("sq.nv", "c.cv")} DESC, c.cell_id) AS rnk
+         |    FROM (SELECT s.doc_id, vv.nv FROM survivors s
+         |          JOIN v vv ON vv.vec_id = s.doc_id - 20000) sq
+         |    CROSS JOIN c2 c)
+         |  WHERE rnk = 1),
+         |state AS (
+         |  SELECT lang, CAST(SUM(cnt) AS BIGINT) AS lang_docs,
+         |         CAST(SUM(tok) AS BIGINT) AS lang_tokens FROM (
+         |    SELECT lang, COUNT(*) AS cnt,
+         |      SUM(CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT)) AS tok
+         |    FROM documents GROUP BY lang
+         |    UNION ALL
+         |    SELECT lang, COUNT(*), SUM(n_tokens) FROM survivors GROUP BY lang)
+         |  GROUP BY lang)
+         |SELECT s.doc_id, s.lang, s.n_tokens, s.digest, c.cell_id,
+         |       st.lang_docs, st.lang_tokens
+         |FROM survivors s JOIN cells c USING (doc_id) JOIN state st USING (lang)
+         |ORDER BY s.doc_id""".stripMargin) { (s, dir) =>
       val idxDir = scratch(dir, "llm/e5_ivf_index")
       val tableDir = scratch(dir, "llm/e5_doc_table")
       val docs = Tables.documents(s, dir).select("doc_id", "text", "lang")
@@ -183,7 +292,67 @@ object PipelineQueries {
     // digest exchange; the LM is one term-keyed join; the bucket
     // assign is a broadcast join. Deployment swaps the unigram proxy
     // for a KenLM scorer; every stage around it is the real pipeline.
-    "e6_ccnet_curation" -> { (s, dir) =>
+    // e6 — full replay: dedup (arg_min canonical), the y1 langid
+    // CASE, the y13 unigram micro-nat CTEs, histogram tertile cuts
+    // (3·cum >= n is the exact-integer ceil(n/3) test), CASE bucket
+    Query("e6_ccnet_curation",
+      s"""WITH kept AS (
+         |  SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text,
+         |    CAST(COUNT(*) AS BIGINT) AS n_copies
+         |  FROM documents GROUP BY md5(text)),
+         |t AS (SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS ts
+         |      FROM kept),
+         |lang AS (
+         |  SELECT doc_id,
+         |    CASE WHEN hd >= he AND hd >= hf AND hd > 0 THEN 'de'
+         |         WHEN he >= hf AND he > 0 THEN 'en'
+         |         WHEN hf > 0 THEN 'fr'
+         |         ELSE 'und' END AS lang_pred
+         |  FROM (SELECT doc_id, ${langHits(de)} AS hd, ${langHits(en)} AS he,
+         |          ${langHits(fr)} AS hf FROM t)),
+         |tf AS (
+         |  SELECT doc_id, term, COUNT(*) AS tf FROM (
+         |    SELECT doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS term
+         |    FROM kept)
+         |  GROUP BY doc_id, term),
+         |cnt AS (SELECT term, SUM(tf) AS cnt FROM tf GROUP BY term),
+         |tot AS (SELECT SUM(cnt) AS total FROM cnt),
+         |lm AS (
+         |  SELECT tf.doc_id, SUM(tf.tf) AS n_tokens,
+         |    SUM(tf.tf * CAST(floor(ln(CAST(cnt.cnt AS DOUBLE) / tot.total) * 1e6)
+         |      AS BIGINT)) AS lp
+         |  FROM tf JOIN cnt USING (term) CROSS JOIN tot GROUP BY tf.doc_id),
+         |sc AS (
+         |  SELECT k.doc_id, k.n_copies, l.lang_pred,
+         |    COALESCE(lm.n_tokens, 0) AS n_tokens,
+         |    CASE WHEN COALESCE(lm.n_tokens, 0) > 0
+         |         THEN (-lm.lp) // lm.n_tokens END AS ppl_micro
+         |  FROM kept k JOIN lang l USING (doc_id) LEFT JOIN lm USING (doc_id)),
+         |hist AS (SELECT lang_pred, ppl_micro, COUNT(*) AS c FROM sc
+         |         WHERE ppl_micro IS NOT NULL GROUP BY lang_pred, ppl_micro),
+         |cum AS (
+         |  SELECT lang_pred, ppl_micro,
+         |    SUM(c) OVER (PARTITION BY lang_pred ORDER BY ppl_micro) AS cum,
+         |    SUM(c) OVER (PARTITION BY lang_pred) AS n
+         |  FROM hist),
+         |cuts AS (
+         |  SELECT lang_pred,
+         |    MIN(CASE WHEN cum * 3 >= n THEN ppl_micro END) AS c1,
+         |    MIN(CASE WHEN cum * 3 >= 2 * n THEN ppl_micro END) AS c2
+         |  FROM cum GROUP BY lang_pred),
+         |b AS (
+         |  SELECT sc.*,
+         |    CASE WHEN ppl_micro IS NULL THEN 'tail'
+         |         WHEN ppl_micro <= c1 THEN 'head'
+         |         WHEN ppl_micro <= c2 THEN 'middle'
+         |         ELSE 'tail' END AS bucket
+         |  FROM sc LEFT JOIN cuts USING (lang_pred))
+         |SELECT lang_pred, bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+         |  CAST(SUM(n_copies) AS BIGINT) AS n_copies,
+         |  CAST(MIN(ppl_micro) AS BIGINT) AS min_ppl,
+         |  CAST(MAX(ppl_micro) AS BIGINT) AS max_ppl
+         |FROM b GROUP BY lang_pred, bucket ORDER BY lang_pred, bucket""".stripMargin) { (s, dir) =>
       val kept = e6Kept(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the LM stage serves from the STAGED model (trained once per
@@ -209,182 +378,6 @@ object PipelineQueries {
           max(col("ppl_micro")).as("max_ppl"))
         .orderBy("lang_pred", "bucket")
       graft.Caching.releaseAfterFirstUse(out, kept)
-    },
-  )
-
-  def oracles: Map[String, String] = Map(
-      // e6 — full replay: dedup (arg_min canonical), the y1 langid
-      // CASE, the y13 unigram micro-nat CTEs, histogram tertile cuts
-      // (3·cum >= n is the exact-integer ceil(n/3) test), CASE bucket
-      "e6_ccnet_curation" ->
-        s"""WITH kept AS (
-           |  SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text,
-           |    CAST(COUNT(*) AS BIGINT) AS n_copies
-           |  FROM documents GROUP BY md5(text)),
-           |t AS (SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS ts
-           |      FROM kept),
-           |lang AS (
-           |  SELECT doc_id,
-           |    CASE WHEN hd >= he AND hd >= hf AND hd > 0 THEN 'de'
-           |         WHEN he >= hf AND he > 0 THEN 'en'
-           |         WHEN hf > 0 THEN 'fr'
-           |         ELSE 'und' END AS lang_pred
-           |  FROM (SELECT doc_id, ${langHits(de)} AS hd, ${langHits(en)} AS he,
-           |          ${langHits(fr)} AS hf FROM t)),
-           |tf AS (
-           |  SELECT doc_id, term, COUNT(*) AS tf FROM (
-           |    SELECT doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS term
-           |    FROM kept)
-           |  GROUP BY doc_id, term),
-           |cnt AS (SELECT term, SUM(tf) AS cnt FROM tf GROUP BY term),
-           |tot AS (SELECT SUM(cnt) AS total FROM cnt),
-           |lm AS (
-           |  SELECT tf.doc_id, SUM(tf.tf) AS n_tokens,
-           |    SUM(tf.tf * CAST(floor(ln(CAST(cnt.cnt AS DOUBLE) / tot.total) * 1e6)
-           |      AS BIGINT)) AS lp
-           |  FROM tf JOIN cnt USING (term) CROSS JOIN tot GROUP BY tf.doc_id),
-           |sc AS (
-           |  SELECT k.doc_id, k.n_copies, l.lang_pred,
-           |    COALESCE(lm.n_tokens, 0) AS n_tokens,
-           |    CASE WHEN COALESCE(lm.n_tokens, 0) > 0
-           |         THEN (-lm.lp) // lm.n_tokens END AS ppl_micro
-           |  FROM kept k JOIN lang l USING (doc_id) LEFT JOIN lm USING (doc_id)),
-           |hist AS (SELECT lang_pred, ppl_micro, COUNT(*) AS c FROM sc
-           |         WHERE ppl_micro IS NOT NULL GROUP BY lang_pred, ppl_micro),
-           |cum AS (
-           |  SELECT lang_pred, ppl_micro,
-           |    SUM(c) OVER (PARTITION BY lang_pred ORDER BY ppl_micro) AS cum,
-           |    SUM(c) OVER (PARTITION BY lang_pred) AS n
-           |  FROM hist),
-           |cuts AS (
-           |  SELECT lang_pred,
-           |    MIN(CASE WHEN cum * 3 >= n THEN ppl_micro END) AS c1,
-           |    MIN(CASE WHEN cum * 3 >= 2 * n THEN ppl_micro END) AS c2
-           |  FROM cum GROUP BY lang_pred),
-           |b AS (
-           |  SELECT sc.*,
-           |    CASE WHEN ppl_micro IS NULL THEN 'tail'
-           |         WHEN ppl_micro <= c1 THEN 'head'
-           |         WHEN ppl_micro <= c2 THEN 'middle'
-           |         ELSE 'tail' END AS bucket
-           |  FROM sc LEFT JOIN cuts USING (lang_pred))
-           |SELECT lang_pred, bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-           |  CAST(SUM(n_copies) AS BIGINT) AS n_copies,
-           |  CAST(MIN(ppl_micro) AS BIGINT) AS min_ppl,
-           |  CAST(MAX(ppl_micro) AS BIGINT) AS max_ppl
-           |FROM b GROUP BY lang_pred, bucket ORDER BY lang_pred, bucket""".stripMargin,
-      // e5 — every stage of the incremental pipeline replayed: batch
-      // synthesis, digest anti-join (bloom is exact), banded near-dup
-      // sweep (x14's CTEs), k-means cell routing (x7's CTEs), and the
-      // per-language state fold; the upserted-table read-back equals
-      // the survivor set by keep-latest idempotence.
-      "e5_incremental_pipeline" ->
-        s"""WITH v AS (
-           |  SELECT vec_id, ${qvSql("embedding")} AS nv FROM embeddings),
-           |c0 AS (SELECT vec_id AS cell_id, nv AS cv FROM v WHERE vec_id < 16),
-           |${kmeansIterSql("c0", "a1", "c1")},
-           |${kmeansIterSql("c1", "a2", "c2")},
-           |batch0 AS (
-           |  SELECT d.doc_id,
-           |    CASE (d.doc_id // 5) % 3 WHEN 0 THEN d.text WHEN 1 THEN d.text || ' v2'
-           |      ELSE 'fresh entry ' || CAST(d.doc_id AS VARCHAR) || ' carries wholly novel content alpha' || CAST(d.doc_id AS VARCHAR) || ' beta gamma delta' END AS text,
-           |    d.lang
-           |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-           |  WHERE d.doc_id % 5 = 0),
-           |batch AS (
-           |  SELECT doc_id + 20000 AS doc_id, text, lang, md5(text) AS digest FROM batch0),
-           |exact_new AS (
-           |  SELECT * FROM batch b
-           |  WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE md5(d.text) = b.digest)),
-           |nsh AS (
-           |  SELECT doc_id AS id, $shSql AS sh
-           |  FROM (SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS tk FROM exact_new)
-           |  WHERE len($shSql) > 0),
-           |bsh AS (
-           |  SELECT doc_id AS id, $shSql AS sh
-           |  FROM (SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS tk FROM documents)
-           |  WHERE len($shSql) > 0),
-           |nbands AS (
-           |  SELECT id, sh, unnest($bands4) AS band
-           |  FROM (SELECT id, sh, $minhash12 AS sig FROM nsh)),
-           |bbands AS (
-           |  SELECT id, sh, unnest($bands4) AS band
-           |  FROM (SELECT id, sh, $minhash12 AS sig FROM bsh)),
-           |ndhits AS (
-           |  SELECT DISTINCT n.id FROM nbands n JOIN bbands b USING (band)
-           |  WHERE CAST(len(list_intersect(n.sh, b.sh)) AS DOUBLE) /
-           |        CAST(len(list_distinct(list_concat(n.sh, b.sh))) AS DOUBLE) >= 0.5),
-           |survivors AS (
-           |  SELECT doc_id, lang, digest,
-           |    CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens
-           |  FROM exact_new WHERE doc_id NOT IN (SELECT id FROM ndhits)),
-           |cells AS (
-           |  SELECT doc_id, cell_id FROM (
-           |    SELECT sq.doc_id, c.cell_id,
-           |      row_number() OVER (PARTITION BY sq.doc_id
-           |        ORDER BY ${cosineSql("sq.nv", "c.cv")} DESC, c.cell_id) AS rnk
-           |    FROM (SELECT s.doc_id, vv.nv FROM survivors s
-           |          JOIN v vv ON vv.vec_id = s.doc_id - 20000) sq
-           |    CROSS JOIN c2 c)
-           |  WHERE rnk = 1),
-           |state AS (
-           |  SELECT lang, CAST(SUM(cnt) AS BIGINT) AS lang_docs,
-           |         CAST(SUM(tok) AS BIGINT) AS lang_tokens FROM (
-           |    SELECT lang, COUNT(*) AS cnt,
-           |      SUM(CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT)) AS tok
-           |    FROM documents GROUP BY lang
-           |    UNION ALL
-           |    SELECT lang, COUNT(*), SUM(n_tokens) FROM survivors GROUP BY lang)
-           |  GROUP BY lang)
-           |SELECT s.doc_id, s.lang, s.n_tokens, s.digest, c.cell_id,
-           |       st.lang_docs, st.lang_tokens
-           |FROM survivors s JOIN cells c USING (doc_id) JOIN state st USING (lang)
-           |ORDER BY s.doc_id""".stripMargin,
-      // full-replay of the e4 composition: same scoring CTEs as y5,
-      // dedup keyed on md5(text) (all copies share text, so arg_min
-      // carries the canonical row's scores), media features in the
-      // m4/m5 closed forms keyed by the surviving ids
-      "e4_curation_manifest" ->
-        s"""WITH t AS (
-           |  SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS ts FROM documents),
-           |h AS (
-           |  SELECT doc_id, text, ts, ${langHits(de)} AS hd, ${langHits(en)} AS he,
-           |    ${langHits(fr)} AS hf
-           |  FROM t),
-           |scored AS (
-           |  SELECT doc_id, text,
-           |    CASE WHEN hd >= he AND hd >= hf AND hd > 0 THEN 'de'
-           |         WHEN he >= hf AND he > 0 THEN 'en'
-           |         WHEN hf > 0 THEN 'fr'
-           |         ELSE 'und' END AS lang_pred,
-           |    least(CAST(len(ts) AS DOUBLE) / 50.0, 1.0) *
-           |    (1.0 - CAST(len(list_filter(ts, t -> list_contains($StopSql, t))) AS DOUBLE)
-           |           / CAST(len(ts) AS DOUBLE)) AS score,
-           |    CAST(len(ts) AS BIGINT) AS n_tokens
-           |  FROM h),
-           |filtered AS (
-           |  SELECT * FROM scored
-           |  WHERE lang_pred != 'und' AND score > 0.2 AND n_tokens >= 5),
-           |survivors AS (
-           |  SELECT min(doc_id) AS doc_id, arg_min(lang_pred, doc_id) AS lang_pred,
-           |    arg_min(score, doc_id) AS score, arg_min(n_tokens, doc_id) AS n_tokens,
-           |    CAST(COUNT(*) AS BIGINT) AS n_copies
-           |  FROM filtered GROUP BY md5(text)),
-           |media AS (
-           |  SELECT doc_id,
-           |    CAST(16 + doc_id % 17 AS BIGINT) AS w,
-           |    CAST(16 + (3 * doc_id + 5) % 13 AS BIGINT) AS h,
-           |    CAST(doc_id % 256 AS BIGINT) AS a,
-           |    CAST((7 * doc_id + 13) % 256 AS BIGINT) AS b,
-           |    CAST(256 + (5 * doc_id + 7) % 128 AS BIGINT) AS nf,
-           |    CAST(8000 * (1 + doc_id % 3) AS BIGINT) AS sr
-           |  FROM survivors)
-           |SELECT s.doc_id, s.lang_pred, s.score, s.n_tokens, s.n_copies,
-           |  CAST((m.h * ((m.w // 2) * m.a + (m.w - m.w // 2) * m.b) * 1000)
-           |    // (m.w * m.h) AS BIGINT) AS img_mean_milli,
-           |  CAST((m.nf * 1000) // m.sr AS BIGINT) AS audio_ms,
-           |  '${graft.llm.Multimodal.PayloadImpl}' AS encoder_impl
-           |FROM survivors s JOIN media m USING (doc_id) ORDER BY s.doc_id""".stripMargin,
+    }
   )
 }

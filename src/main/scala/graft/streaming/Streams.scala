@@ -58,16 +58,18 @@ object Streams {
     * counts all grow with stream history or key cardinality, so at
     * 100× stream state the heap provider is the first OOM while
     * RocksDB pages state to native memory + local disk and its JVM
-    * footprint stays flat (probe: tools/probes/probe_state_store_10x
-    * .sc). transformWithState additionally REQUIRES RocksDB.
+    * footprint stays flat (PROBES.md, "State-scale probe: heap grows
+    * with state, RocksDB stays flat"). transformWithState additionally
+    * REQUIRES RocksDB.
     *
-    * The cost side, measured honestly (probe_stream_wall_10x.sc, r17
-    * verdict #6): the RocksDB tax is PER STATE ROW, not a per-trigger
+    * The cost side, measured honestly (PROBES.md, "Streaming
+    * wall-clock A/B at 10x state"): the RocksDB tax is PER STATE ROW, not a per-trigger
     * constant — at 1× join state the A/B is parity (8.9 vs 8.7 s),
     * at 10× the stream-stream join reads 39-57 s vs heap's 15-19 s
     * (~2.5-3.5×), insensitive to trigger count, changelog mode, block
     * cache, and write buffer (all probed); the dedup shape pays only
-    * ~1.2×. The r19 grid (probe_rocksdb_knobs_10x.sc) closed the
+    * ~1.2×. The r19 grid (PROBES.md, "RocksDB knob grid at 10x
+    * state") closed the
     * remaining Spark-exposed knobs — memtable count/size, maxOpenFiles,
     * compactOnCommit, formatVersion (Spark exposes no direct
     * bloom-policy knob) — all inside box noise across two sweeps:
@@ -164,7 +166,8 @@ object Streams {
     * state volume. Probed pins under the RocksDB default, stream-
     * stream self-join shape: ~1e5 state rows → p8
     * (probe_st8_rocksdb_trim.sc: p1 27.2 / p4 7.9 / p8 5.5 / p16 6.6 /
-    * p32 ~16 s), ~1e6 → p16 (probe_st8_partitions_10x.sc: p16 36-43 s
+    * p32 ~16 s), ~1e6 → p16 (PROBES.md, "st8 state-partition U-curve
+    * RE-TESTED at 10x state": p16 36-43 s
     * beats p8 45-47 s in both sweeps, p1 ~330 s). The rule: partitions
     * DOUBLE PER DECADE of state above the 1e5 anchor (log-spaced
     * growth matches the minimum drifting right slower than linearly),

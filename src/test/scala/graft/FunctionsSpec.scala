@@ -208,22 +208,18 @@ class NearestCellSpec extends SparkSpec {
   }
 }
 
-/** Registry contract (round-12 verdict item 3): every registered query
-  * MUST carry a DuckDB oracle — t14 shipped a round with err=no_oracle
-  * because nothing enforced this. An intentionally oracle-free query
-  * must be listed in `allowedNoOracle` (currently none) to pass. */
+/** Registry contract: a [[graft.registry.Query]] carries its oracle, so
+  * no query can lack one and no oracle can be orphaned; what is left to
+  * check is that each name is declared once. */
 class RegistryInvariantSpec extends AnyFunSuite {
 
-  private val allowedNoOracle: Set[String] = Set.empty
-
-  test("every SparkEntry query has an oracleSql entry") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- allowedNoOracle
-    assert(missing.isEmpty,
-      s"queries without a DuckDB oracle (add one or allowlist deliberately): $missing")
-  }
-
-  test("no orphan oracles (oracle key without a registered query)") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql entries with no query: $orphans")
+  test("a name registered twice fails the registry build, naming it") {
+    def q(name: String) = graft.registry.Query(name, "SELECT 1")((s, _) => s.emptyDataFrame)
+    val err = intercept[IllegalArgumentException](
+      graft.registry.Query.unique(Seq(q("a1"), q("z9_twice"), q("b2"), q("z9_twice"))))
+    assert(err.getMessage.contains("z9_twice"), err.getMessage)
+    assert(!err.getMessage.contains("a1") && !err.getMessage.contains("b2"), err.getMessage)
+    // the shipped registry builds, and its name-keyed views drop nothing
+    assert(SparkEntry.oracleSql.size == SparkEntry.registry.size)
   }
 }

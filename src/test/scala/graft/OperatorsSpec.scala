@@ -393,7 +393,7 @@ class OperatorsSpec extends SparkSpec {
     Seq(dir, dir + ".__swap_old", dir + ".__swap_tmp").foreach(p =>
       fs.delete(new org.apache.hadoop.fs.Path(p), true))
     def readV(): Seq[Int] = spark.read.parquet(dir).as[Int].collect().toSeq
-    graft.io.Staging.atomicSwap(spark, dir) { tmp =>
+    graft.io.IO.replaceDir(spark, dir) { tmp =>
       Seq(1).toDF("v").write.parquet(tmp)
     }
     assert(readV() == Seq(1))
@@ -401,27 +401,27 @@ class OperatorsSpec extends SparkSpec {
     // the live artifact byte-identical (the SaveMode.Overwrite hazard
     // this helper exists to remove: overwrite deletes live FIRST)
     intercept[RuntimeException] {
-      graft.io.Staging.atomicSwap(spark, dir) { tmp =>
+      graft.io.IO.replaceDir(spark, dir) { tmp =>
         Seq(2).toDF("v").write.parquet(tmp)
         throw new RuntimeException("build died mid-rebuild")
       }
     }
     assert(readV() == Seq(1), "failed rebuild must not touch the live artifact")
     // a successful rebuild replaces the whole artifact
-    graft.io.Staging.atomicSwap(spark, dir) { tmp =>
+    graft.io.IO.replaceDir(spark, dir) { tmp =>
       Seq(3).toDF("v").write.parquet(tmp)
     }
     assert(readV() == Seq(3))
     // crash between the two renames leaves (live missing, __swap_old
     // present) — the ONLY lossy-looking state — and both the next
-    // swap and an explicit recover() heal it
+    // swap and an explicit recoverSwap() heal it
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + ".__swap_old")))
-    graft.io.Staging.recover(spark, dir)
+    graft.io.IO.recoverSwap(spark, dir)
     assert(readV() == Seq(3), "recover must restore the pre-crash artifact")
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + ".__swap_old")))
-    graft.io.Staging.atomicSwap(spark, dir) { tmp =>
+    graft.io.IO.replaceDir(spark, dir) { tmp =>
       Seq(4).toDF("v").write.parquet(tmp)
     }
     assert(readV() == Seq(4))
@@ -538,7 +538,7 @@ class OperatorsSpec extends SparkSpec {
     val root4 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned4"
     Seq(root4, root4 + ".__swap_old", root4 + ".__swap_tmp").foreach(p =>
       fs.delete(new Path(p), true))
-    st.atomicSwap(spark, root4) { tmp => Seq(10).toDF("v").write.parquet(tmp) }
+    graft.io.IO.replaceDir(spark, root4) { tmp => Seq(10).toDF("v").write.parquet(tmp) }
     assert(st.resolveRead(spark, root4) == root4, "rename layout resolves in place")
     val vNew = st.publishVersioned(spark, root4) { d => Seq(11).toDF("v").write.parquet(d) }
     assert(vNew == 1L)

@@ -990,7 +990,7 @@ class StreamingSpec extends SparkSpec {
     assert(Streams.suggestedStatePartitions(100000L) == 8,
       "1e5 state rows is the probed p8 pin (probe_st8_rocksdb_trim.sc)")
     assert(Streams.suggestedStatePartitions(1000000L) == 16,
-      "1e6 state rows is the probed p16 pin (probe_st8_partitions_10x.sc)")
+      "1e6 state rows is the probed p16 pin (PROBES.md, st8 U-curve at 10x state)")
     // below the anchor the per-trigger commit constant dominates: p8 floor
     assert(Streams.suggestedStatePartitions(0L) == 8)
     assert(Streams.suggestedStatePartitions(10000L) == 8)

@@ -2,7 +2,7 @@ package graft.registry
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** The registry's one fixture memo ([[Fixtures.staged]]) and scratch
   * root ([[Fixtures.scratch]]): a failed build stays rebuildable, a
@@ -88,10 +88,10 @@ class FixturesSpec extends SparkSpec {
     // a, b, then a again: b must not read a's fixtures, nor a b's
     val results = (corpora :+ corpora.head).map { case (tag, idBase, dir) =>
       val texts = Seq("s16_binaryfile_ingest", "s18_manifest_ingest").map { q =>
-        IoQueries.queries(q)(spark, dir).select("content_b64").as[String].collect().toSeq
+        SparkEntry.queries(q)(spark, dir).select("content_b64").as[String].collect().toSeq
           .map(b => new String(java.util.Base64.getDecoder.decode(b), "UTF-8")).sorted
       }
-      val ids = StreamQueries.queries("st1_stream_file_source")(spark, dir)
+      val ids = SparkEntry.queries("st1_stream_file_source")(spark, dir)
         .select("entry_id").as[Long].collect().toSeq.sorted
       (tag, idBase, texts, ids)
     }
@@ -114,7 +114,7 @@ class FixturesSpec extends SparkSpec {
     }
     // a, b, then a again: each must read the orders of its own dir
     (corpora :+ corpora.head).foreach { case (tag, n, dir) =>
-      val keys = IoQueries.queries("s12_jdbc_incremental")(spark, dir)
+      val keys = SparkEntry.queries("s12_jdbc_incremental")(spark, dir)
         .select("o_orderkey").as[Long].collect().toSeq
       assert(keys == (101L to n), s"corpus $tag read another corpus's JDBC table")
     }

@@ -87,14 +87,5 @@ for n in names:
     if r != "OK":
         fails += 1
     print(f"{'PASS' if r == 'OK' else 'FAIL':4} {n}: {r}")
-# queries registered without oracle: just check output exists & rows>0
-for d in sorted(glob.glob(f"{OUT}/*/")):
-    n = d.rstrip("/").split("/")[-1]
-    if n not in oracle:
-        files = glob.glob(f"{d}/*.parquet")
-        rows = sum(pd.read_parquet(f).shape[0] for f in files) if files else 0
-        print(f"{'PASS' if rows > 0 else 'FAIL':4} {n}: rows-only rows={rows}")
-        if rows == 0:
-            fails += 1
 print(f"\n{len(names)} oracle queries, {fails} failures")
 sys.exit(1 if fails else 0)

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Fault-injection probe for graft.io.Staging.atomicSwap: kill -9 a JVM
+# Fault-injection probe for graft.io.IO.replaceDir: kill -9 a JVM
 # mid-rebuild (after the staged write, during the build function) and
 # verify the live artifact survives byte-for-byte, the orphaned .staged
 # is cleaned by the next build, and the rebuild publishes normally.

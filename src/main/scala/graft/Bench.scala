@@ -38,11 +38,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same contract as Verify: SPARK_GRAFT_PUBLISH_MODE=versioned runs
-    // the sweep with every staged artifact publishing/resolving under
-    // the object-store protocol — the A/B that prices resolveRead on
-    // the serving hot path (PROBES round-15)
-    graft.io.Staging.applyPublishModeFromEnv(spark)
     // SPARK_GRAFT_STATE_STORE=heap|rocksdb: the st-family A/B knob —
     // rocksdb is the engine default, heap reverts to Spark's
     // HDFSBackedStateStoreProvider for comparison

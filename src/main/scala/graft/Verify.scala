@@ -20,12 +20,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_PUBLISH_MODE=versioned runs the WHOLE registry under
-    // the object-store publish protocol (graft.io.Staging.publish):
-    // every staged artifact builds as version dirs + manifest and every
-    // reader resolves it — the end-to-end proof that one conf flips the
-    // engine without moving a value (the oracle compare is unchanged).
-    graft.io.Staging.applyPublishModeFromEnv(spark)
     // state-store A/B knob, same contract as Bench: heap reverts the
     // engine's RocksDB default to Spark's heap-backed provider
     sys.env.get("SPARK_GRAFT_STATE_STORE")

@@ -34,49 +34,23 @@ import org.apache.spark.sql.functions._
   *
   * Durability contract (the reference's raw overwrite has none:
   * a crash mid-rewrite loses every table's watermark): [[writeTable]]
-  * stages the new CSV beside the live one and swaps it in with
-  * directory renames — `live → old`, `staged → live`, drop `old` —
-  * and [[readTable]] completes an interrupted swap from whichever
-  * side survived. A crash at ANY point leaves either the previous or
-  * the new watermark readable, never a torn/absent table; the
-  * previous value merely re-reads one batch (at-least-once, the safe
-  * direction). SINGLE WRITER assumed — concurrent [[update]]s
+  * writes the new CSV beside the live table and swaps it in through
+  * [[graft.io.IO.replaceDir]], the engine's one directory swap, and
+  * [[readTable]] heals a swap that crashed between its renames with
+  * [[graft.io.IO.recoverSwap]]. A crash at ANY point leaves either the
+  * previous or the new watermark readable, never a torn/absent table;
+  * the previous value merely re-reads one batch (at-least-once, the
+  * safe direction). SINGLE WRITER assumed — concurrent [[update]]s
   * read-modify-write and can lose each other's rows, same as the
   * reference's design; one control table belongs to one scheduler.
-  * Readers participate in recovery ([[readTable]] completes an
-  * interrupted swap), so a reader racing a LIVE writer could roll
-  * back its in-flight swap — serialize reads with writes under that
-  * same scheduler; recovery is for crash remains, not concurrency.
+  * Readers participate in recovery, so a reader racing a LIVE writer
+  * could roll back its in-flight swap — serialize reads with writes
+  * under that same scheduler; recovery is for crash remains, not
+  * concurrency.
   */
 object Watermark {
 
   case class Entry(tableName: String, watermarkValue: String, updateColumn: String)
-
-  private def stagedPath(path: String) = path.stripSuffix("/") + ".__staged__"
-  private def oldPath(path: String)    = path.stripSuffix("/") + ".__old__"
-
-  /** Complete an interrupted [[writeTable]] swap; returns the live
-    * path's FileSystem for reuse. Idempotent, driver-side, O(1). */
-  private def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(oldPath(path))
-    if (!f.exists(live) && f.exists(old)) {
-      // died between `live → old` and `staged → live`: roll back.
-      // Hadoop rename reports most failures by RETURNING FALSE, not
-      // throwing — an unchecked false here would leave no live table
-      // and the caller none the wiser.
-      require(f.rename(old, live), s"watermark recovery rename failed: $old -> $live")
-    } else if (f.exists(old)) {
-      // died before dropping `old`: the new table is live, finish
-      f.delete(old, true)
-    }
-    // a leftover staged dir is from a crash before the swap began (or
-    // mid-write): never referenced, safe to drop
-    val staged = new org.apache.hadoop.fs.Path(stagedPath(path))
-    if (f.exists(staged)) f.delete(staged, true)
-  }
 
   private val Header = "table_name,watermark_value,update_column"
 
@@ -84,9 +58,9 @@ object Watermark {
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Read the control CSV into memory (it is tiny by construction),
-    * completing any interrupted swap first. Driver-side text read. */
+    * healing an interrupted swap first. Driver-side text read. */
   def readTable(spark: SparkSession, path: String): Seq[Entry] = {
-    recoverSwap(spark, path)
+    IO.recoverSwap(spark, path)
     val f = fsOf(spark, path)
     require(f.exists(new Path(path)), s"no watermark table at $path")
     val parts = f.listStatus(new Path(path)).map(_.getPath)
@@ -125,38 +99,24 @@ object Watermark {
       writeTable(spark, path, updated)
     }
 
-  /** Crash-safe overwrite: stage the new CSV, then swap it live with
-    * two directory renames (see the durability contract above). A
-    * plain `SaveMode.Overwrite` deletes the live table before the new
-    * files commit — a crash in that window loses every watermark.
-    * Driver-side text write of one part file; no Spark job. */
+  /** Crash-safe overwrite: write the new CSV beside the live table,
+    * then swap it in with [[graft.io.IO.replaceDir]] (see the
+    * durability contract above). A plain `SaveMode.Overwrite` deletes
+    * the live table before the new files commit — a crash in that
+    * window loses every watermark. Driver-side text write of one part
+    * file; no Spark job. */
   def writeTable(spark: SparkSession, path: String, entries: Seq[Entry]): Unit = {
     for (e <- entries; v <- Seq(e.tableName, e.watermarkValue, e.updateColumn))
       require(v != null && !v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'),
         s"watermark field ${Option(v).map("'" + _ + "'").getOrElse("null")} of " +
           s"${e.tableName} cannot be stored unquoted (no comma, double quote or line break)")
-    recoverSwap(spark, path)
-    val staged = stagedPath(path)
-    val f = fsOf(spark, path)
-    val out = f.create(new Path(staged, "part-00000.csv"), true)
-    try out.write(
-      (Header +: entries.map(e => s"${e.tableName},${e.watermarkValue},${e.updateColumn}"))
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    val live = new Path(path)
-    val old = new Path(oldPath(path))
-    // Hadoop rename reports most failures by RETURNING FALSE, not
-    // throwing. Unchecked, a failed `staged -> live` after `live ->
-    // old` succeeded would let the delete below destroy the LAST copy
-    // of every table's watermark — the exact loss this swap protocol
-    // exists to prevent. So: require each rename, and delete `old`
-    // only after confirming the live path actually exists.
-    if (f.exists(live))
-      require(f.rename(live, old), s"watermark swap rename failed: $live -> $old")
-    require(f.rename(new Path(staged), live),
-      s"watermark swap rename failed: $staged -> $live")
-    require(f.exists(live), s"watermark swap left no live table at $live")
-    f.delete(old, true)
+    IO.replaceDir(spark, path) { tmp =>
+      val out = fsOf(spark, tmp).create(new Path(tmp, "part-00000.csv"), true)
+      try out.write(
+        (Header +: entries.map(e => s"${e.tableName},${e.watermarkValue},${e.updateColumn}"))
+          .mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
   }
 
   /** S2/P2 — incremental scan: rows strictly past the watermark. With a

@@ -175,12 +175,12 @@ object IO {
     * 100k tiny files re-read at 176k files/s packed vs 18k files/s
     * through binaryFile and 0.4–1.2k files/s streamed — the per-file
     * listing/open cost is paid ONCE here and never again downstream).
-    * One binaryFile pass, published through [[Staging.publish]] so the
-    * table rename-swaps on HDFS or version-publishes on object stores
-    * like every staged artifact; read it back with
-    * [[readPackedBinary]]. Default is SHUFFLE-FREE: each scan task
-    * (the source bin-packs ~`maxPartitionBytes` of small files per
-    * task) writes one output file, so output files arrive
+    * One binaryFile pass, published through [[Staging.publish]] like
+    * every staged artifact: each pack is a new immutable version, and a
+    * reader sees the previous complete table until the manifest flips;
+    * read it back with [[readPackedBinary]]. Default is SHUFFLE-FREE:
+    * each scan task (the source bin-packs ~`maxPartitionBytes` of small
+    * files per task) writes one output file, so output files arrive
     * ~`maxPartitionBytes`-sized with zero payload movement — at 100 TB
     * a `repartition` here would push every landing byte through
     * shuffle disk for nothing (round-15 review finding). Pass `nFiles`
@@ -216,8 +216,8 @@ object IO {
     }
   }
 
-  /** Read back a [[packBinaryDir]] table, resolving whichever publish
-    * protocol wrote it (crash-window availability — Staging contract). */
+  /** Read back a [[packBinaryDir]] table: the live published version
+    * ([[Staging.resolveRead]]), complete whatever pack is in flight. */
   def readPackedBinary(spark: SparkSession, dest: String): DataFrame =
     spark.read.parquet(Staging.resolveRead(spark, dest))
 
@@ -1312,7 +1312,8 @@ object IO {
   /** Restore a directory from a half-completed [[replaceDir]] swap: a
     * crash between the two renames leaves the data at `path.__swap_old`
     * and nothing at `path`. Any reader of a swap-managed table calls
-    * this first (replaceDir itself does). No-op when `path` exists.
+    * this first (replaceDir itself does). No-op when `path` exists. A
+    * trailing slash on `path` names the same directory.
     *
     * Concurrent heals are safe: a reader whose rename loses the race
     * re-checks that the artifact is live and proceeds. One benign race
@@ -1321,7 +1322,8 @@ object IO {
     * builder's second rename, which then fails its `require` loudly.
     * The live artifact is the intact previous build, nothing is lost,
     * and retrying the build succeeds. */
-  def recoverSwap(spark: SparkSession, path: String): Unit = {
+  def recoverSwap(spark: SparkSession, dir: String): Unit = {
+    val path = dir.stripSuffix("/")
     val f = fs(spark, path)
     val old = new Path(s"$path.__swap_old")
     if (!f.exists(new Path(path)) && f.exists(old)) {
@@ -1342,13 +1344,14 @@ object IO {
     * [[recoverSwap]] restores the latter on the next access. Hadoop
     * rename reports failure by RETURNING false, so every rename is
     * checked — an unflagged failed rename would nest tmp inside the
-    * still-existing target. Shared by compact(), the streaming upsert
-    * sink and [[Staging.publish]]'s rename mode, so the crash-window
-    * reasoning lives in one place. The watermark control table
-    * ([[graft.incremental.Watermark.writeTable]]) keeps its own
-    * staged/old naming, which is part of that table's recovery
-    * contract. */
-  def replaceDir(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    * still-existing target. The engine's one directory swap: compact(),
+    * the streaming upsert sink and the watermark control table
+    * ([[graft.incremental.Watermark.writeTable]]) all replace through
+    * it, so the crash-window reasoning lives in one place. A trailing
+    * slash on `path` names the same directory; the side directories
+    * always sit beside it, never inside it. */
+  def replaceDir(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val path = dir.stripSuffix("/")
     val f = fs(spark, path)
     val tmp = s"$path.__swap_tmp"
     val old = s"$path.__swap_old"

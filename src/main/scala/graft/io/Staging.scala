@@ -3,133 +3,55 @@ package graft.io
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Crash-safe ATOMIC overwrite of a staged-artifact directory — the
-  * [[graft.incremental.Watermark.writeTable]] two-rename swap (K6)
-  * generalized for the model/index artifacts of the
-  * train-once/serve-many families (PQ/IVF indexes, SemDeDup cells,
-  * BPE/DSIR/NB models, band/bucket/fingerprint tables).
+/** Crash-safe publish of a staged-artifact directory: the model and
+  * index artifacts of the train-once/serve-many families (PQ/IVF
+  * indexes, SemDeDup cells, BPE/DSIR/NB models, band/bucket/fingerprint
+  * tables).
   *
   * Why plain `SaveMode.Overwrite` is not enough for a SHARED artifact:
   * it deletes the live directory before the new job's files commit, so
   * (a) a reader during the rebuild window sees a missing or partial
-  * artifact (the raw path-not-found the PQ stamp guard can only
-  * REPORT), and (b) a crash mid-rebuild destroys the previous artifact
+  * artifact, and (b) a crash mid-rebuild destroys the previous artifact
   * — the "once" in train-once/serve-many is gone and every consumer
   * blocks on a full retrain.
   *
-  * Protocol, per artifact ROOT (multi-table artifacts — a PQ index's
-  * centroids + codes + stamp — swap as ONE unit, so a reader can never
-  * pair centroids from one build with codes from another):
-  *   1. heal a previous crash: live missing + old-copy present →
-  *      rename it back (the only crash window leaves exactly that state);
-  *   2. `build` writes the COMPLETE artifact under a tmp dir BESIDE the target;
-  *   3. swap: live → old-copy, tmp → live — each rename
-  *      `require`d, because Hadoop rename reports most failures by
-  *      RETURNING FALSE (the Watermark lesson: an unchecked failed
-  *      second rename would let step 4 delete the last copy);
-  *   4. delete the old copy.
+  * One protocol, per artifact ROOT (multi-table artifacts — a PQ
+  * index's centroids + codes + stamp — publish as ONE version, so a
+  * reader can never pair centroids from one build with codes from
+  * another):
   *
-  * A reader sees the complete previous artifact up to the instant of
-  * the same-filesystem directory rename and the complete new artifact
-  * after it. If a build CRASHES between the two renames, serving reads
-  * fail fast (no live path) until the next build — or an explicit
-  * [[recover]] — restores the previous artifact; nothing is ever torn.
-  * Single-writer per artifact root is assumed (the registry's
-  * `Fixtures.staged` memo / global-lock conventions); the swap protects
-  * READERS, it does not arbitrate concurrent writers.
+  *   <root>/v=000001/...          complete artifact build (immutable once
+  *                                published; multi-table trees included)
+  *   <root>/v=000001/_PUBLISHED   marker written LAST — a version dir
+  *                                without it is a torn/abandoned build
+  *   <root>/LATEST                tiny manifest naming the live version
   *
-  * Filesystem contract, stated honestly for the 100 TB deployment:
-  * the rename-swap protocol relies on directory rename being atomic
-  * and O(1), which holds on HDFS and POSIX filesystems. On S3-like
-  * object stores rename is a COPY + DELETE — O(artifact bytes) and
-  * not atomic — so there the right publish is a pointer one level up:
-  * [[publishVersioned]] writes `<path>/v=<build-id>/` and then
-  * updates a small `LATEST` manifest the readers resolve. Both
-  * publishes produce the same artifact layout INSIDE the live
-  * directory; [[resolveRead]] auto-detects which protocol wrote an
-  * artifact root, so every serving path works against either. Select
-  * per session with `spark.graft.staging.publishMode` = `rename`
-  * (default) | `versioned` — [[publish]] dispatches on it, and EVERY
-  * staged builder in the engine (IVF/PQ indexes, SemDeDup cells,
-  * NB/DSIR/BPE/unigram-LM models, band/bucket/span/fingerprint
-  * tables) publishes through it, with every reader resolving through
-  * [[resolveRead]] — one conf flips the whole engine to the
-  * object-store protocol. */
+  * [[publish]] builds into a fresh version dir, marks it, flips the
+  * manifest and retires versions older than live + 1 predecessor;
+  * every reader goes through [[resolveRead]]. Readers resolve a version
+  * ONCE and then read immutable files: no reader ever observes a
+  * directory renamed out from under it, a reader that resolved just
+  * before a publish keeps its complete version on disk until the NEXT
+  * publish, and the only mutation per publish is one small-manifest
+  * update — O(1) in artifact bytes on any store, HDFS, POSIX or an
+  * S3-like object store where directory rename is a copy + delete. The
+  * manifest update is a tmp-file + rename(OVERWRITE)
+  * ([[IO.atomicWriteSmallFile]]); a reader that catches it torn or
+  * missing falls back to the max _PUBLISHED version scan, which is
+  * always a complete artifact. Crash anywhere: before _PUBLISHED leaves
+  * an inert unpublished dir (the next publish's GC sweeps it); after
+  * _PUBLISHED but before the manifest update leaves LATEST on the
+  * previous complete version until the next publish (or a
+  * fallback-scan reader) advances it. The cost is one predecessor
+  * version kept on disk beside the live one.
+  *
+  * Single writer per artifact root (the registry's `Fixtures.staged`
+  * memo / global-lock conventions): the protocol protects READERS, it
+  * does not arbitrate concurrent writers. */
 object Staging {
-
-  /** Session knob selecting the publish protocol for [[publish]]:
-    * `rename` (two-rename directory swap — HDFS/POSIX) or `versioned`
-    * (version dirs + manifest pointer — object-store-safe). */
-  val PublishModeKey = "spark.graft.staging.publishMode"
-
-  /** Driver-main helper: apply `SPARK_GRAFT_PUBLISH_MODE` from the
-    * environment to the session conf — shared by Bench and Verify so
-    * the env-var/conf-key pairing lives in one place. */
-  def applyPublishModeFromEnv(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_PUBLISH_MODE")
-      .foreach(m => spark.conf.set(PublishModeKey, m))
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Protocol-dispatching publish: the builder contract of
-    * [[IO.replaceDir]] (write the COMPLETE artifact — single- or
-    * multi-table — under the directory you are handed), with the
-    * publish step chosen by [[PublishModeKey]]. Serving paths read
-    * through [[resolveRead]] and never care which mode wrote.
-    *
-    * `mode` pins the protocol for THIS artifact explicitly — a builder
-    * that must publish versioned (e.g. a registry path proving the
-    * object-store protocol) passes `Some("versioned")` instead of
-    * mutating the session-wide conf around the call, which would leak
-    * the protocol into any staged build running concurrently on the
-    * same session (round-15 ADVICE). `None` = session conf decides.
-    *
-    * `gcKeep` is the versioned protocol's retention cadence (round-15
-    * verdict item 5): after each successful publish, versions older
-    * than live plus `gcKeep` published predecessors are dropped —
-    * without it every re-publish over the same root accumulates a full
-    * artifact copy forever, storage-doubling per rebuild on exactly
-    * the object-store layout built for 100 TB. The default keep=1
-    * retains live + 1 predecessor, so a reader that resolved just
-    * before the publish still has its complete version on disk (the
-    * reader-grace lag [[gcVersions]] documents); pass `None` to opt
-    * out with a stated reason (e.g. an external snapshot/audit
-    * retention policy owns the root). No-op under rename mode, whose
-    * swap already retires the previous build. */
-  def publish(spark: SparkSession, path: String,
-              mode: Option[String] = None,
-              gcKeep: Option[Int] = Some(1))(build: String => Unit): Unit =
-    mode.getOrElse(spark.conf.get(PublishModeKey, "rename")) match {
-      case "versioned" => publishVersioned(spark, path, gcKeep)(build): Unit
-      case "rename"    => IO.replaceDir(spark, path)(build)
-      case other => throw new IllegalArgumentException(
-        s"$PublishModeKey must be 'rename' or 'versioned', got '$other'")
-    }
-
-  // ---- object-store-safe versioned publish (round-14 verdict item 1) ----
-  //
-  // Layout under the artifact root:
-  //   <root>/v=000001/...          complete artifact build (immutable once
-  //                                published; multi-table trees included)
-  //   <root>/v=000001/_PUBLISHED   marker written LAST — a version dir
-  //                                without it is a torn/abandoned build
-  //   <root>/LATEST                tiny manifest naming the live version
-  //
-  // Why this is the 100 TB/object-store shape: readers resolve a version
-  // ONCE and then read immutable files — no reader ever observes a
-  // directory being renamed out from under it, and the only mutation per
-  // publish is one small-manifest update, O(1) in artifact bytes on any
-  // store (vs the rename-swap's copy+delete of the WHOLE artifact on
-  // S3-likes). The manifest update itself is a tmp-file + rename(OVERWRITE)
-  // — atomic on HDFS/POSIX via FileContext; on S3-likes the manifest copy
-  // window is microseconds over bytes, and a reader that catches it torn
-  // or missing falls back to the max _PUBLISHED version scan, which is
-  // always a complete artifact. Crash anywhere: before _PUBLISHED leaves
-  // an inert unpublished dir (GC-able); after _PUBLISHED but before the
-  // manifest update leaves LATEST on the previous complete version until
-  // the next publish (or a fallback-scan reader) advances it. Single
-  // writer per root, as everywhere in Staging.
 
   private val VersionFmt = "v=%06d"
   private def versionDir(root: String, v: Long): String =
@@ -185,18 +107,20 @@ object Staging {
   }
 
   /** Build-then-publish a new version: `build` writes the complete
-    * artifact into a fresh `<root>/v=<n>/` (n = max existing + 1, so a
-    * crashed build's number is never reused), the `_PUBLISHED` marker
-    * commits it, and the LATEST manifest flips readers to it. On any
-    * build failure the live artifact is untouched and the partial
-    * version dir stays unpublished (invisible to readers; [[gcVersions]]
-    * sweeps it). `gcKeep` (default 1) runs [[gcVersions]] after the
-    * manifest flip — see [[publish]] for the retention contract;
-    * `None` skips GC. Returns the published version. */
-  def publishVersioned(spark: SparkSession, root: String,
-                       gcKeep: Option[Int] = Some(1))(build: String => Unit): Long = {
+    * artifact (single- or multi-table) into a fresh `<root>/v=<n>/`
+    * (n = max existing + 1, so a crashed build's number is never
+    * reused), the `_PUBLISHED` marker commits it, and the LATEST
+    * manifest flips readers to it. On any build failure the live
+    * artifact is untouched and the partial version dir stays
+    * unpublished (invisible to readers; [[gcVersions]] sweeps it).
+    * After the flip, [[gcVersions]] keeps live + 1 predecessor: without
+    * it every re-publish over the same root would keep a full artifact
+    * copy forever, and keeping one predecessor is the reader-grace lag
+    * — a reader that resolved just before this publish still has its
+    * complete version on disk. Returns the published version. */
+  def publish(spark: SparkSession, root: String)(build: String => Unit): Long = {
     val f = fs(spark, root)
-    IO.recoverSwap(spark, root) // heal a crashed rename-swap before adopting
+    IO.recoverSwap(spark, root) // heal a crashed swap of a rename-layout root before adopting it
     f.mkdirs(new Path(root))
     adoptRenameLayout(f, root)
     val v = listVersions(f, root).lastOption.getOrElse(0L) + 1L
@@ -207,24 +131,24 @@ object Staging {
       s"versioned publish: build left nothing at $dir")
     f.create(new Path(s"$dir/_PUBLISHED"), true).close()
     writeManifest(spark, f, root, v)
-    // retention cadence: GC AFTER the manifest points at v, so the
-    // sweep can only ever retire versions two publishes stale (live is
-    // v, keep=1 retains v-1) — the reader-grace window is structural
-    gcKeep.foreach(k => gcVersions(spark, root, keep = k))
+    // GC AFTER the manifest points at v, so the sweep can only ever
+    // retire versions two publishes stale (live is v, keep=1 retains
+    // v-1) — the reader-grace window is structural
+    gcVersions(spark, root, keep = 1)
     v
   }
 
-  /** Migrate a rename-layout artifact in place on the FIRST versioned
-    * publish over its root: every non-reserved root entry (the old
-    * build's tables/files) moves — rename-only — into `v=000000` with
-    * a _PUBLISHED marker, so the previous build stays the live
-    * fallback until the new version publishes and GC retires it like
-    * any predecessor. Without this, flipping publishMode over an
-    * existing root would strand the old artifact's data files at the
-    * root forever — invisible to gcVersions, silently doubling storage
-    * (round-15 review finding). Readers of the OLD layout racing the
-    * migration see the same window a rename-swap already has;
-    * single-writer per root, as everywhere in Staging. */
+  /** Migrate a rename-layout artifact — a root that older builds
+    * published in place with a two-rename directory swap — on the FIRST
+    * publish over it: every non-reserved root entry (the old build's
+    * tables/files) moves, rename-only, into `v=000000` with a
+    * _PUBLISHED marker, so the previous build stays the live fallback
+    * until the new version publishes and GC retires it like any
+    * predecessor. Without this the old artifact's data files would sit
+    * at the root forever, invisible to gcVersions, silently doubling
+    * storage. A reader of the old layout racing the migration can see
+    * a moved-away file, as it could during the old swap; single writer
+    * per root, as everywhere in Staging. */
   private def adoptRenameLayout(f: FileSystem, root: String): Unit = {
     if (listVersions(f, root).isEmpty && !f.exists(new Path(s"$root/LATEST"))) {
       // ".LATEST.tmp" is the shared atomic-write helper's tmp name
@@ -256,21 +180,19 @@ object Staging {
       v.toString.getBytes("UTF-8"))
 
   /** Resolve the directory a reader should scan for the artifact at
-    * `root`, whichever protocol published it — the single read-side
-    * entry point of the staging family:
-    *   - versioned layout (a LATEST manifest or any `v=*` dir):
-    *     the live version's directory; loud error if nothing is
-    *     published yet (a torn first build must not read as an
-    *     empty artifact);
-    *   - rename-swap layout: `root` itself, after healing a crashed
-    *     swap ([[recover]] — the crash-window-availability contract).
-    * Layout detection is from the root's contents, not session config:
-    * a reader must resolve what the WRITER published, and mixed fleets
-    * mid-migration read both. `v=*` directories and `LATEST` are
-    * RESERVED names at an artifact root — a rename-swap artifact whose
-    * own content created them (e.g. a table hive-partitioned on a
-    * column literally named `v`) would be misdetected as versioned;
-    * no engine artifact does, and new ones must not. */
+    * `root` — the single read-side entry point of the staging family:
+    *   - a root with a LATEST manifest or any `v=*` dir: the live
+    *     version's directory; loud error if nothing is published yet
+    *     (a torn first build must not read as an empty artifact);
+    *   - a root with neither, which older builds published in place
+    *     with a two-rename swap: `root` itself, after healing a swap
+    *     that crashed between its renames ([[IO.recoverSwap]]). The
+    *     next [[publish]] over it adopts that build as `v=000000`.
+    * Layout detection is from the root's contents: `v=*` directories
+    * and `LATEST` are RESERVED names at an artifact root — an artifact
+    * whose own content created them (e.g. a table hive-partitioned on
+    * a column literally named `v`) would be misdetected; no engine
+    * artifact does, and new ones must not. */
   def resolveRead(spark: SparkSession, root: String): String = {
     val f = fs(spark, root)
     IO.recoverSwap(spark, root)
@@ -289,8 +211,9 @@ object Staging {
     * below live — including unpublished (torn/abandoned) build dirs.
     * Never touches the live version, anything newer (an in-flight
     * build's dir), or the manifest. In-flight readers of a
-    * just-retired version are why `keep` defaults to 1 — run GC on a
-    * lag, not inside the publish. Returns the deleted versions. */
+    * just-retired version are why `keep` defaults to 1: [[publish]]
+    * runs it with keep=1 after each flip, so a version is deleted only
+    * once two newer ones have published. Returns the deleted versions. */
   def gcVersions(spark: SparkSession, root: String, keep: Int = 1): Seq[Long] = {
     require(keep >= 0, "keep must be >= 0")
     val f = fs(spark, root)

@@ -475,7 +475,7 @@ object Corpus {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val raw = tf.groupBy("term").agg(sum(col("tf")).as("c_raw"))
     val tgt = tf.filter(col("__tgt")).groupBy("term").agg(sum(col("tf")).as("c_tgt"))
-    // vocab + totals swap live as ONE unit (graft.io.Staging), and the
+    // vocab + totals publish as ONE version (graft.io.Staging), and the
     // totals are derived from the WRITTEN staged vocab — the pair can
     // neither drift nor be read torn
     graft.io.Staging.publish(docs.sparkSession, path) { tmp =>
@@ -785,10 +785,8 @@ object Corpus {
   /** Read back a staged BPE model as the ordered merge-pair sequence
     * [[bpeEncode]] consumes. Rank order IS the model — applying merges
     * out of order encodes differently — so the read sorts explicitly
-    * rather than trusting file order. Resolves the live artifact first
-    * — crashed-swap heal or versioned-manifest resolve, whichever
-    * protocol published it (the crash-window-availability convention
-    * every staged reader follows — round-14 ADVICE). */
+    * rather than trusting file order. Resolves the live published
+    * version first, the convention every staged reader follows. */
   def loadBpeModel(spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] =
     spark.read.parquet(graft.io.Staging.resolveRead(spark, path))
       .orderBy("rank")

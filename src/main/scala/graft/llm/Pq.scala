@@ -202,7 +202,7 @@ object Pq {
     graft.functions.LongArrayDot.register(corpus.sparkSession)
     val unitNorm = Similarity.isUnitNormQ(v)
     val cents = trainCodebooks(v, m, numCells, iters)
-    // the three tables swap live as ONE unit (graft.io.Staging): a
+    // the three tables publish as ONE version (graft.io.Staging): a
     // reader can never pair centroids from one build with codes or a
     // stamp from another, and a crashed rebuild keeps the old index
     graft.io.Staging.publish(corpus.sparkSession, indexDir) { tmp =>
@@ -242,10 +242,11 @@ object Pq {
 
   /** A rebuild may change the stamp — drop every cached verdict for
     * the LIVE index path so the next query re-reads the fresh params.
-    * Called after the atomic swap (writeParams itself targets the
-    * staging directory, whose path never appears in the memo). */
+    * Called after the publish (writeParams itself targets the new
+    * version's directory before it is live). */
   private def purgeValidated(indexDir: String): Unit =
-    // both key shapes: "<root>|..." (rename-swap) and "<root>/v=N|..."
+    // both key shapes: "<root>|..." (a root an older build published
+    // in place) and "<root>/v=N|..."
     validatedParams.keySet().removeIf(k =>
       k.startsWith(indexDir + "|") || k.startsWith(indexDir + "/"))
 
@@ -261,25 +262,25 @@ object Pq {
     * one getFileStatus for the stamp mtime; milliseconds on an object
     * store, microseconds locally. A serving loop that wants even that
     * off the per-call path resolves once per batch and pins the
-    * returned dir. The mtime is part of the key so a rebuild by
-    * ANOTHER process (or, under the versioned layout, a rebuild moving
-    * the live dir itself) invalidates the stale verdict — the exact
-    * silent-ADC-drop window the guard exists to close. */
+    * returned dir. The live `v=N` dir is part of the key, so a rebuild
+    * moves every reader to a fresh key; the mtime also invalidates a
+    * verdict when a legacy in-place root is rewritten by ANOTHER
+    * process — the exact silent-ADC-drop window the guard exists to
+    * close. */
   private val validatedParams =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Boolean]]()
 
-  /** Returns the RESOLVED live artifact directory (the root itself
-    * under the rename-swap layout, the live `v=N` dir under the
-    * versioned one — [[graft.io.Staging.resolveRead]]) plus the
+  /** Returns the RESOLVED live artifact directory (the live `v=N` dir,
+    * or the root itself for a root an older build published in place
+    * — [[graft.io.Staging.resolveRead]]) plus the
     * build's `unit_norm` stamp (None on a pre-norm-stamp external
     * build); readers scan the index tables under the resolved dir,
     * never under the raw root, and the metric-mixing serve paths gate
     * on the stamp via [[requireUnitNorm]]. */
   private def requireParamMatch(spark: org.apache.spark.sql.SparkSession,
                                 indexDir: String, m: Int): (String, Option[Boolean]) = {
-    // crash-window availability on either publish protocol: heal a
-    // crashed rename-swap, or resolve the live published version
-    // (graft.io.Staging contract)
+    // resolve the live published version once; every table read
+    // below goes under it (graft.io.Staging contract)
     val live = graft.io.Staging.resolveRead(spark, indexDir)
     val stampPath = new org.apache.hadoop.fs.Path(s"$live/index_params")
     val fs = stampPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -613,7 +614,7 @@ object Pq {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val unitNorm = Similarity.isUnitNormQ(v)
     val (coarse, pqCents, codes) = buildCodes(v, m, numCells, coarseCells, iters)
-    // all four tables swap live as ONE unit (see buildAdcIndex)
+    // all four tables publish as ONE version (see buildAdcIndex)
     graft.io.Staging.publish(corpus.sparkSession, indexDir) { tmp =>
       coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
       pqCents.write.mode("overwrite").parquet(s"$tmp/pq_centroids")

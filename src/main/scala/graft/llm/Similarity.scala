@@ -334,7 +334,7 @@ object Similarity {
     // over the already-persisted frame.
     val unitNorm = isUnitNormQ(v)
     val cents = kmeansCodebookQ(v, numCells, iters)
-    // centroids + members swap live as ONE unit (graft.io.Staging): a
+    // centroids + members publish as ONE version (graft.io.Staging): a
     // query can never assign against one build's codebook and scan
     // another build's members, and a crashed rebuild keeps the old
     // index serving
@@ -367,39 +367,33 @@ object Similarity {
   def appendToIvfIndex(newCorpus: DataFrame, indexDir: String): Unit = {
     val spark = newCorpus.sparkSession
     graft.functions.LongArrayDot.register(spark)
-    // an append against a CRASHED (not in-flight) rebuild must not
-    // CREATE a members-only live directory (Spark makes missing
-    // parents), which would wedge the next rebuild's staged→live
-    // rename — recover the crashed swap first, then refuse to append
-    // to an index with no codebook (round-14 self-review finding).
-    // The guard is a check-then-act, NOT an arbiter: the Staging
-    // contract is single-writer per artifact root, and a CONCURRENT
-    // append racing a rebuild's swap window is unsupported — the check
-    // can pass just before the rebuild's live→old rename, after which
-    // this append recreates a codebook-less live dir (or, on
-    // rename-into-existing-dir filesystems, nests the rebuild inside
-    // it) and its rows can vanish with __swap_old (round-14 ADVICE).
-    // Serialize appends and rebuilds externally (the registry's
-    // Fixtures.staged memo does; a cluster deployment uses its scheduler's
-    // per-artifact mutual exclusion). Under the VERSIONED layout the
-    // append lands in the LIVE version's member table: an append is by
-    // nature a mutation of the live build (immutability there is a
-    // publish-vs-rebuild property, not an append ban), and the next
-    // rebuild starts a fresh version that re-assigns everything.
-    // Stated honestly: the append itself is NOT crash-atomic on either
-    // layout — a killed append can leave a committed SUBSET of the new
-    // member files visible (parquet append has no all-or-nothing
-    // commit), and a retry re-appends already-landed rows. A pipeline
-    // that needs exactly-once ingest into the index routes batches
-    // through its own idempotence key (e.g. re-check max appended
-    // vec_id before retrying) or rebuilds; the swap/versioned
-    // protocols guarantee atomic PUBLISHES, not atomic appends.
+    // The append lands in the LIVE version's member table: an append
+    // is by nature a mutation of the live build (a version's
+    // immutability is a publish-vs-rebuild property, not an append
+    // ban), and the next rebuild publishes a fresh version that
+    // re-assigns everything. An index with no codebook is refused
+    // before any member is written (Spark makes missing parents, so an
+    // unchecked append would create a members-only directory). The
+    // guard is a check-then-act, NOT an arbiter: the Staging contract
+    // is single-writer per artifact root, and an append racing a
+    // rebuild is unsupported — it lands in the version that was live
+    // when it resolved, and the rebuild's new version never sees those
+    // rows. Serialize appends and rebuilds externally (the registry's
+    // Fixtures.staged memo does; a cluster deployment uses its
+    // scheduler's per-artifact mutual exclusion). Stated honestly: the
+    // append itself is NOT crash-atomic — a killed append can leave a
+    // committed SUBSET of the new member files visible (parquet append
+    // has no all-or-nothing commit), and a retry re-appends
+    // already-landed rows. A pipeline that needs exactly-once ingest
+    // into the index routes batches through its own idempotence key
+    // (e.g. re-check max appended vec_id before retrying) or rebuilds;
+    // the publish is atomic, an append is not.
     val live = graft.io.Staging.resolveRead(spark, indexDir)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$live/centroids")),
       s"IVF index at $indexDir has no centroids — build it with buildIvfIndex " +
-        "before appending (or a rebuild is mid-swap; retry)")
+        "before appending")
     val cents = readCentroids(spark, live)
     val v = spread(newCorpus).select(col("vec_id"), quantize(col("embedding")).as("nv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -472,10 +466,8 @@ object Similarity {
                       minCandidates: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.LongArrayDot.register(spark)
-    // crash-window availability on either publish protocol: heal a
-    // crashed rename-swap or resolve the live published version
-    // (graft.io.Staging contract); all table reads go under the
-    // resolved live directory
+    // resolve the live published version once (graft.io.Staging
+    // contract); all table reads go under the resolved live directory
     val live = graft.io.Staging.resolveRead(spark, indexDir)
     val cents = readCentroids(spark, live)
     val scoredQ = queries
@@ -880,7 +872,6 @@ object Similarity {
     * serve-time knob, deliberately NOT baked into the artifact. */
   def stageSemanticCells(corpus: DataFrame, path: String,
                          numCells: Option[Int] = None, iters: Int = 2,
-                         publishMode: Option[String] = None,
                          corpusSize: Option[Long] = None): Unit = {
     graft.functions.LongArrayDot.register(corpus.sparkSession)
     // one scan+quantize serves training AND the assignment, exactly
@@ -892,13 +883,7 @@ object Similarity {
     val cells = numCells.getOrElse(
       derivedNumCells(corpusSize.getOrElse(v.count())))
     val cents = kmeansCodebookQ(v, cells, iters)
-    // publish through the protocol-dispatching entry point: rename-swap
-    // on HDFS/POSIX, versioned-dir + manifest on object stores.
-    // `publishMode` pins the protocol for THIS artifact (the x17b
-    // registry path proves the versioned round-trip without flipping
-    // session conf under concurrent builders — round-15 ADVICE);
-    // None = spark.graft.staging.publishMode decides.
-    graft.io.Staging.publish(corpus.sparkSession, path, publishMode) { tmp =>
+    graft.io.Staging.publish(corpus.sparkSession, path) { tmp =>
       assignCellsQ(v, cents)
         .withColumn("num_cells", lit(cells))
         .withColumn("iters", lit(iters))
@@ -919,10 +904,8 @@ object Similarity {
   def semanticDedupStaged(spark: SparkSession, path: String,
                           threshold: Double = 0.99): DataFrame = {
     graft.functions.LongArrayDot.register(spark)
-    // resolveRead detects the publish protocol from the root's layout:
-    // rename-swap roots heal a crashed swap and read in place,
-    // versioned roots read the live version dir (crash-window
-    // availability either way — graft.io.Staging contract)
+    // read the live published version (graft.io.Staging contract): a
+    // re-publish mid-sweep never moves files out from under this read
     val assigned = spark.read.parquet(
       graft.io.Staging.resolveRead(spark, path))
     val a = assigned.select(col("cell_id"), col("vec_id").as("id_a"), col("nv").as("nv_a"))

@@ -484,24 +484,11 @@ object DedupSimQueries {
     // the stage/serve round-trip must be value-invisible. threshold
     // stays a serve-time knob (SemDeDup's paper sweeps it), which is
     // exactly why the split pays: many thresholds, one training run.
-    // This family is the engine's reference user of the OBJECT-STORE
-    // publish protocol (round-14 verdict item 1): the build runs with
-    // publishMode=versioned, so the artifact lands as v=NNNNNN dirs +
-    // a LATEST manifest instead of a directory rename-swap, and the
-    // serving read resolves the live version — the oracle then proves
-    // the versioned round-trip value-invisible end to end.
-    // identical semantics through the staged-assignment round-trip
     Query("x17b_semantic_dedup_staged", X17SemanticSql) { (s, dir) =>
       val path = scratch(dir, "llm/semantic_cells")
       staged(s, path) {
-        // protocol pinned per-artifact (publishMode param), never by
-        // flipping session conf around the call — a concurrent staged
-        // build on the same session must not be dragged onto the
-        // versioned protocol mid-window (round-15 ADVICE). Post-publish
-        // GC (keep=1) runs inside Staging.publish, so each session's
-        // build retires the version before last automatically.
         Similarity.stageSemanticCells(corpusEmb(s, dir), path,
-          numCells = Some(16), iters = 2, publishMode = Some("versioned"))
+          numCells = Some(16), iters = 2)
       }
       Similarity.semanticDedupStaged(s, path, threshold = 0.99).orderBy("vec_id")
     },

@@ -350,7 +350,7 @@ object IoQueries {
     // s17 — packed landing table: the round-15 probe's mitigation as a
     // first-class operator. One binaryFile pass packs the small-file
     // landing zone into a bounded parquet payload table (crash-safe
-    // publish, either protocol); every downstream read then runs at
+    // versioned publish); every downstream read then runs at
     // parquet speed instead of re-paying per-file listing/open costs
     // (measured 176k vs 18k files/s at 100k files — PROBES round-15).
     // Same content-level oracle as s16: packing must be byte-invisible.

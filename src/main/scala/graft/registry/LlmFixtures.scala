@@ -13,14 +13,13 @@ import TextQueries.{StopSql, tokSql, ngramSql}
   * snippet builders every family's oracle composes. */
 private[registry] object LlmFixtures {
 
-  /** Read a staged artifact with crash-window availability on either
-    * publish protocol: [[graft.io.Staging.resolveRead]] heals a
-    * crashed rename-swap or resolves the live published version, the
-    * same convention the prebuilt PQ/IVF readers and
-    * semanticDedupStaged follow (round-14 ADVICE — the BPE/DSIR
-    * fixture reads skipped it). `root` is the PUBLISH UNIT (the
-    * Staging.publish path); multi-table artifacts pass the subpath to
-    * read via `sub`. */
+  /** Read a staged artifact from its live published version
+    * ([[graft.io.Staging.resolveRead]]), the same convention the
+    * prebuilt PQ/IVF readers and semanticDedupStaged follow: a
+    * re-publish never moves the resolved version's files, and a torn
+    * first build fails loudly instead of reading empty. `root` is the
+    * PUBLISH UNIT (the Staging.publish path); multi-table artifacts
+    * pass the subpath to read via `sub`. */
   def readStaged(s: SparkSession, root: String, sub: String = ""): DataFrame = {
     val live = graft.io.Staging.resolveRead(s, root)
     s.read.parquet(if (sub.isEmpty) live else s"$live/$sub")
@@ -81,7 +80,7 @@ private[registry] object LlmFixtures {
     staged(s, path) {
       val (terms, classes) = Classifier.trainNaiveBayesModel(
         Tables.documents(s, dir), "doc_id", "text", nbSeedLabel)
-      // terms + classes swap live as ONE unit (graft.io.Staging): the
+      // terms + classes publish as ONE version (graft.io.Staging): the
       // artifact-sync check can then only ever see one build's pair
       graft.io.Staging.publish(s, path) { tmp =>
         terms.write.mode("overwrite").parquet(s"$tmp/terms")

@@ -954,8 +954,9 @@ class CorpusSpec extends SparkSpec {
     val dir = s"${sys.props("java.io.tmpdir")}/graft_test_y21b_dsir"
     graft.streaming.Streams.deleteDir(spark, dir)
     graft.llm.Corpus.stageDsirModel(train, "doc_id", "text", col("lang") === "en", dir)
-    val vocab = spark.read.parquet(s"$dir/vocab")
-    val totals = spark.read.parquet(s"$dir/totals")
+    val live = graft.io.Staging.resolveRead(spark, dir)
+    val vocab = spark.read.parquet(s"$live/vocab")
+    val totals = spark.read.parquet(s"$live/totals")
     // the totals artifact is DERIVED from the written vocab (one
     // re-read), so the two tables cannot disagree
     val t = totals.collect()(0)
@@ -994,8 +995,9 @@ class CorpusSpec extends SparkSpec {
     val dir = s"${sys.props("java.io.tmpdir")}/graft_test_unigram_lm"
     graft.streaming.Streams.deleteDir(spark, dir)
     graft.llm.Corpus.stageUnigramLm(docs, "doc_id", "text", dir)
-    val counts = spark.read.parquet(s"$dir/counts")
-    val totals = spark.read.parquet(s"$dir/totals")
+    val live = graft.io.Staging.resolveRead(spark, dir)
+    val counts = spark.read.parquet(s"$live/counts")
+    val totals = spark.read.parquet(s"$live/totals")
     // the total is DERIVED from the written counts (the stageDsirModel
     // convention) — the pair cannot disagree
     assert(totals.collect()(0).getLong(0) ==

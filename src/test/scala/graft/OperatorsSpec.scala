@@ -66,24 +66,36 @@ class OperatorsSpec extends SparkSpec {
     val csv = s"$base/wm"
     Watermark.writeTable(spark, csv, Seq(Watermark.Entry("t", "100", "v")))
 
-    // crash between `live -> old` and `staged -> live`: only old exists
-    f.rename(new Path(csv), new Path(s"$csv.__old__"))
-    assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "100",
-      "rollback from __old__ failed")
-    assert(f.exists(new Path(csv)) && !f.exists(new Path(s"$csv.__old__")))
+    val old = new Path(s"$csv.__swap_old")
+    val tmp = new Path(s"$csv.__swap_tmp")
 
-    // crash after `staged -> live` but before dropping old: both exist,
+    // crash between `live -> old` and `tmp -> live`: only old exists
+    f.rename(new Path(csv), old)
+    assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "100",
+      "rollback from .__swap_old failed")
+    assert(f.exists(new Path(csv)) && !f.exists(old))
+
+    // crash after `tmp -> live` but before dropping old: both exist,
     // live (the NEWER table) must win
     Watermark.writeTable(spark, csv, Seq(Watermark.Entry("t", "200", "v")))
-    f.mkdirs(new Path(s"$csv.__old__"))
+    f.mkdirs(old)
     assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "200")
-    assert(!f.exists(new Path(s"$csv.__old__")))
 
-    // crash mid-stage: leftover __staged__ is dropped, live untouched
-    f.mkdirs(new Path(s"$csv.__staged__"))
+    // crash mid-write: a leftover tmp is never read, live untouched
+    f.mkdirs(tmp)
+    assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "200")
     Watermark.update(spark, csv, "t", Some("300"))
     assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "300")
-    assert(!f.exists(new Path(s"$csv.__staged__")))
+    // the next write drops both stale side directories
+    assert(!f.exists(old) && !f.exists(tmp))
+
+    // only `.__swap_old` is healed: a copy parked under any other name
+    // (a side directory of some other swap) with no live table is not
+    // adopted, and the read fails loudly instead of serving it
+    f.rename(new Path(csv), new Path(s"$csv.bak"))
+    val e = intercept[IllegalArgumentException](Watermark.lookup(spark, csv, "t"))
+    assert(e.getMessage.contains("no watermark table"), e.getMessage)
+    f.delete(new Path(base), true)
   }
 
   test("S11: file discovery honors yyyyMMddHHmmss boundaries") {
@@ -385,7 +397,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("Staging.atomicSwap: failed rebuild keeps the live artifact; crash between renames heals on the next swap") {
+  test("IO.replaceDir: failed rebuild keeps the live artifact; crash between renames heals on the next swap") {
     import spark.implicits._
     val dir = s"${sys.props("java.io.tmpdir")}/graft_test_atomic_swap"
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -430,7 +442,33 @@ class OperatorsSpec extends SparkSpec {
       "swap must clean up its side directories")
   }
 
-  test("Staging.publishVersioned: manifest flips readers atomically; crashes leave a complete live artifact; GC never touches it") {
+  test("IO.replaceDir and Watermark.writeTable accept a trailing slash: contents replaced, no side directories left") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val base = s"${sys.props("java.io.tmpdir")}/graft_test_trailing_slash"
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(base), true)
+    val dir = s"$base/table"
+    Seq(1, 2).foreach(v => graft.io.IO.replaceDir(spark, dir + "/") { tmp =>
+      Seq(v).toDF("v").write.parquet(tmp)
+    })
+    assert(spark.read.parquet(dir).as[Int].collect().toSeq == Seq(2))
+    assert(graft.io.IO.compact(spark, dir + "/", 1L << 20)._2 == 1)
+    assert(spark.read.parquet(dir).as[Int].collect().toSeq == Seq(2))
+    val wm = s"$base/wm"
+    Seq("1", "2").foreach(v =>
+      Watermark.writeTable(spark, wm + "/", Seq(Watermark.Entry("t", v, "v"))))
+    assert(Watermark.lookup(spark, wm + "/", "t").get.watermarkValue == "2")
+    // a swap that crashed between its renames heals through the slash too
+    assert(fs.rename(new Path(wm), new Path(s"$wm.__swap_old")))
+    assert(Watermark.lookup(spark, wm + "/", "t").get.watermarkValue == "2")
+    val side = Seq(base, dir, wm).flatMap(d => fs.listStatus(new Path(d)).toSeq)
+      .map(_.getPath.getName).filter(_.contains(".__swap_"))
+    assert(side.isEmpty, s"swap side directories left behind: ${side.mkString(", ")}")
+    fs.delete(new Path(base), true)
+  }
+
+  test("Staging.publish: manifest flips readers atomically; crashes leave a complete live artifact; GC never touches it") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     val st = graft.io.Staging
@@ -440,20 +478,20 @@ class OperatorsSpec extends SparkSpec {
     def readLive(): Seq[Int] =
       spark.read.parquet(st.resolveRead(spark, root)).as[Int].collect().toSeq
     // v1 publishes and resolves
-    val v1 = st.publishVersioned(spark, root) { d => Seq(1).toDF("v").write.parquet(d) }
+    val v1 = st.publish(spark, root) { d => Seq(1).toDF("v").write.parquet(d) }
     assert(v1 == 1L && readLive() == Seq(1))
     // a CONCURRENT READER that resolved before the next publish keeps a
-    // complete immutable directory — the property the rename-swap lacks
-    // on object stores (nothing is ever renamed out from under it)
+    // complete immutable directory (nothing is ever renamed out from
+    // under it, which a directory swap cannot promise on object stores)
     val pinnedV1 = st.resolveRead(spark, root)
-    val v2 = st.publishVersioned(spark, root) { d => Seq(2).toDF("v").write.parquet(d) }
+    val v2 = st.publish(spark, root) { d => Seq(2).toDF("v").write.parquet(d) }
     assert(v2 == 2L && readLive() == Seq(2))
     assert(spark.read.parquet(pinnedV1).as[Int].collect().toSeq == Seq(1),
       "a reader pinned to the previous version must still see it complete")
     // a build that dies before its _PUBLISHED marker is invisible: the
     // live artifact is untouched and the torn dir's number is never reused
     intercept[RuntimeException] {
-      st.publishVersioned(spark, root) { d =>
+      st.publish(spark, root) { d =>
         Seq(99).toDF("v").write.parquet(d)
         throw new RuntimeException("build died before publish")
       }
@@ -466,7 +504,7 @@ class OperatorsSpec extends SparkSpec {
     // resolves a retained version: the just-retired predecessor
     // survives exactly one more publish (the reader-grace lag).
     val pinnedV2 = st.resolveRead(spark, root)
-    val v4 = st.publishVersioned(spark, root) { d => Seq(4).toDF("v").write.parquet(d) }
+    val v4 = st.publish(spark, root) { d => Seq(4).toDF("v").write.parquet(d) }
     assert(v4 == 4L, s"torn v3 must not be reused, got $v4")
     assert(readLive() == Seq(4))
     assert(spark.read.parquet(pinnedV2).as[Int].collect().toSeq == Seq(2),
@@ -488,7 +526,7 @@ class OperatorsSpec extends SparkSpec {
     val out2 = fs.create(new Path(s"$root/LATEST"), true)
     out2.write("3".getBytes("UTF-8")); out2.close()
     assert(readLive() == Seq(4), "manifest naming an unpublished dir must fall back")
-    st.publishVersioned(spark, root) { d => Seq(5).toDF("v").write.parquet(d) }
+    st.publish(spark, root) { d => Seq(5).toDF("v").write.parquet(d) }
     assert(readLive() == Seq(5))
     // the publish cadence already GC'd: live=5 retains {4, 5}, v2 was
     // retired by this publish — an explicit sweep finds nothing left,
@@ -496,51 +534,28 @@ class OperatorsSpec extends SparkSpec {
     assert(st.gcVersions(spark, root, keep = 1) == Seq.empty)
     assert(readLive() == Seq(5))
     assert(fs.exists(new Path(s"$root/v=000004")) && !fs.exists(new Path(s"$root/v=000002")))
-    // gcKeep=None opts the publish out of the cadence (the stated-
-    // reason escape hatch for audit/snapshot retention policies)
-    st.publishVersioned(spark, root, gcKeep = None) { d =>
-      Seq(6).toDF("v").write.parquet(d)
-    }
-    assert(readLive() == Seq(6))
-    assert(fs.exists(new Path(s"$root/v=000004")) && fs.exists(new Path(s"$root/v=000005")),
-      "gcKeep=None must leave every published predecessor on disk")
-    // publish() dispatches on the session conf; bad values are loud
-    val modeKey = st.PublishModeKey
-    spark.conf.set(modeKey, "versioned")
-    try {
-      val root2 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned2"
-      fs.delete(new Path(root2), true)
-      st.publish(spark, root2) { d => Seq(7).toDF("v").write.parquet(d) }
-      assert(fs.exists(new Path(s"$root2/v=000001/_PUBLISHED")),
-        "publish() under versioned mode must write the versioned layout")
-      assert(spark.read.parquet(st.resolveRead(spark, root2)).as[Int].collect().toSeq == Seq(7))
-      spark.conf.set(modeKey, "nonsense")
-      intercept[IllegalArgumentException] {
-        st.publish(spark, root2) { d => Seq(8).toDF("v").write.parquet(d) }
-      }
-    } finally spark.conf.unset(modeKey)
     // a versioned root where the FIRST build tore (dirs, none published)
     // must refuse to resolve rather than read an empty artifact
     val root3 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned3"
     fs.delete(new Path(root3), true)
     intercept[RuntimeException] {
-      st.publishVersioned(spark, root3) { d =>
+      st.publish(spark, root3) { d =>
         Seq(1).toDF("v").write.parquet(d)
         throw new RuntimeException("first build died")
       }
     }
     val e = intercept[IllegalStateException] { st.resolveRead(spark, root3) }
     assert(e.getMessage.contains("none published"), e.getMessage)
-    // flipping an existing rename-layout root to versioned ADOPTS the
-    // old build as v=000000 — rename-only, nothing stranded at the root
-    // for gcVersions to miss — and readers keep resolving through the
-    // migration
+    // the first publish over a rename-layout root (one an older build
+    // swapped in place) ADOPTS the old build as v=000000 — rename-only,
+    // nothing stranded at the root for gcVersions to miss — and readers
+    // keep resolving through the migration
     val root4 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned4"
     Seq(root4, root4 + ".__swap_old", root4 + ".__swap_tmp").foreach(p =>
       fs.delete(new Path(p), true))
     graft.io.IO.replaceDir(spark, root4) { tmp => Seq(10).toDF("v").write.parquet(tmp) }
     assert(st.resolveRead(spark, root4) == root4, "rename layout resolves in place")
-    val vNew = st.publishVersioned(spark, root4) { d => Seq(11).toDF("v").write.parquet(d) }
+    val vNew = st.publish(spark, root4) { d => Seq(11).toDF("v").write.parquet(d) }
     assert(vNew == 1L)
     assert(spark.read.parquet(st.resolveRead(spark, root4)).as[Int].collect().toSeq == Seq(11))
     assert(spark.read.parquet(s"$root4/v=000000").as[Int].collect().toSeq == Seq(10),
@@ -568,7 +583,7 @@ class OperatorsSpec extends SparkSpec {
         array(sin((col("id") + lit(shift)).cast("double")),
           cos((col("id") + lit(shift)).cast("double"))).as("embedding"))
     graft.llm.Similarity.stageSemanticCells(corpus(0), root,
-      numCells = Some(4), publishMode = Some("versioned"))
+      numCells = Some(4))
     // resolve NOW (v1), collect LATER — the overlap under test
     val inFlight = graft.llm.Similarity.semanticDedupStaged(spark, root,
       threshold = 0.999)
@@ -578,7 +593,7 @@ class OperatorsSpec extends SparkSpec {
     // second publish over the same root: flips LATEST to v2 and runs
     // the keep=1 GC cadence inside Staging.publish
     graft.llm.Similarity.stageSemanticCells(corpus(7), root,
-      numCells = Some(4), publishMode = Some("versioned"))
+      numCells = Some(4))
     assert(inFlight.select("vec_id").as[Long].collect().toSet == direct,
       "the in-flight read must survive the re-publish + GC and stay value-identical")
     // fresh reads resolve the NEW version
@@ -591,7 +606,7 @@ class OperatorsSpec extends SparkSpec {
     // a third publish retires v1 (two publishes stale) — the
     // structural reader-grace window, asserted at the artifact root
     graft.llm.Similarity.stageSemanticCells(corpus(13), root,
-      numCells = Some(4), publishMode = Some("versioned"))
+      numCells = Some(4))
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(s"$root/v=000001")),
       "v1 must be GC'd after two further publishes")
@@ -1359,7 +1374,9 @@ class OperatorsSpec extends SparkSpec {
     assert(packed.collect().toSeq == direct.collect().toSeq,
       "packing must be byte-invisible")
     // bounded splittable output: the whole point of the pack
-    val parts = fs.globStatus(new Path(s"$dest/part-*")).length
+    def partFiles(d: String): Int =
+      fs.globStatus(new Path(s"${graft.io.Staging.resolveRead(spark, d)}/part-*")).length
+    val parts = partFiles(dest)
     assert(parts <= 2 && parts >= 1, s"expected <=2 parquet files, got $parts")
     // the scale default is SHUFFLE-FREE: output files = scan tasks (the
     // source bin-packs small files per task, capped by the session's
@@ -1368,7 +1385,7 @@ class OperatorsSpec extends SparkSpec {
     val dest2 = s"$dest-noshuffle"
     fs.delete(new Path(dest2), true)
     graft.io.IO.packBinaryDir(spark, s"$src/*.bin", dest2)
-    val parts2 = fs.globStatus(new Path(s"$dest2/part-*")).length
+    val parts2 = partFiles(dest2)
     assert(parts2 < 25 && parts2 >= 1,
       s"25 tiny files must bin-pack into fewer output files, got $parts2")
     assert(graft.io.IO.readPackedBinary(spark, dest2).count() == 25L)
@@ -1381,31 +1398,27 @@ class OperatorsSpec extends SparkSpec {
 
   test("versioned-published IVF index: prebuilt query + append resolve the live version dir (multi-table artifact)") {
     import org.apache.hadoop.fs.Path
-    val st = graft.io.Staging
     val emb = spark.range(40)
       .select(col("id").as("vec_id"),
         transform(sequence(lit(1), lit(8)),
           j => ((col("id") % 9) * 7 + j * 3).cast("double") / lit(100.0)).as("embedding"))
-    val dirR = s"${sys.props("java.io.tmpdir")}/graft_test_ivf_rename"
     val dirV = s"${sys.props("java.io.tmpdir")}/graft_test_ivf_versioned"
     val fs = new Path(dirV).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(dirR, dirR + ".__swap_old", dirR + ".__swap_tmp", dirV).foreach(p =>
-      fs.delete(new Path(p), true))
-    Similarity.buildIvfIndex(emb, dirR, numCells = 4, iters = 1)
-    spark.conf.set(st.PublishModeKey, "versioned")
-    try Similarity.buildIvfIndex(emb, dirV, numCells = 4, iters = 1)
-    finally spark.conf.unset(st.PublishModeKey)
-    // the versioned build lands centroids + members under ONE published
-    // version dir — the multi-table artifact publishes as one unit on
-    // the object-store protocol exactly as it swaps as one unit on HDFS
+    fs.delete(new Path(dirV), true)
+    Similarity.buildIvfIndex(emb, dirV, numCells = 4, iters = 1)
+    // the build lands centroids + members under ONE published version
+    // dir — the multi-table artifact publishes as one unit
     assert(fs.exists(new Path(s"$dirV/v=000001/_PUBLISHED")) &&
       fs.exists(new Path(s"$dirV/v=000001/centroids")) &&
       fs.exists(new Path(s"$dirV/v=000001/members")), "versioned layout missing")
     val q = emb.filter(col("vec_id") < 3)
-    def run(d: String) = Similarity.ivfTopKPrebuilt(spark, d, q, k = 5, nProbe = 2)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(run(dirV) == run(dirR),
-      "versioned-published index must serve identically to the rename-swap one")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "neighbor_id", "cosine")
+        .as[(Long, Int, Long, Double)].collect().toSet
+    val inline = Similarity.ivfTopK(emb, q, k = 5, numCells = 4, nProbe = 2,
+      centroids = Some(Similarity.kmeansCodebook(emb, numCells = 4, iters = 1)))
+    assert(rowsOf(Similarity.ivfTopKPrebuilt(spark, dirV, q, k = 5, nProbe = 2)) == rowsOf(inline),
+      "the versioned-published index must serve what inline IVF computes")
     // append routes into the LIVE version's member table
     val batch = spark.range(100, 103)
       .select(col("id").as("vec_id"),
@@ -2348,20 +2361,22 @@ class OperatorsSpec extends SparkSpec {
 
     // append guards (round-14 self-review): appending to a path with no
     // index must fail with a named error, not CREATE a members-only
-    // directory that would wedge a rebuild's staged→live rename…
+    // directory…
     val e = intercept[IllegalArgumentException] {
       Similarity.appendToIvfIndex(odd,
         s"${sys.props("java.io.tmpdir")}/graft_test_ivf_nonexistent")
     }
     assert(e.getMessage.contains("no centroids"), e.getMessage)
-    // …and an append arriving in a crashed swap's window must recover
-    // the previous index first, then append into it normally
+    // …and an append arriving at a root parked by a crashed directory
+    // swap must recover the root first, then append into its live
+    // version normally
     val fsIdx = new org.apache.hadoop.fs.Path(idx2)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fsIdx.rename(new org.apache.hadoop.fs.Path(idx2),
       new org.apache.hadoop.fs.Path(idx2 + ".__swap_old")))
     Similarity.appendToIvfIndex(odd, idx2)
-    assert(fsIdx.exists(new org.apache.hadoop.fs.Path(s"$idx2/centroids")),
+    assert(fsIdx.exists(new org.apache.hadoop.fs.Path(
+      s"${graft.io.Staging.resolveRead(spark, idx2)}/centroids")),
       "append must heal the crashed swap before writing")
   }
 

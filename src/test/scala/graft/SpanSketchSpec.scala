@@ -271,15 +271,16 @@ class SpanSketchSpec extends SparkSpec {
       // overwriting the stamp parquet directly (bypassing writeParams'
       // same-JVM purge) — the stamp mtime moves, so the previously
       // validated m=8 verdict is NOT reused and the drift fails loudly
+      val live = graft.io.Staging.resolveRead(spark, idx)
       Seq((16, 16, 0)).toDF("m", "num_cells", "coarse_cells")
-        .coalesce(1).write.mode("overwrite").parquet(s"$idx/index_params")
+        .coalesce(1).write.mode("overwrite").parquet(s"$live/index_params")
       val e2 = intercept[IllegalArgumentException] {
         Pq.adcTopKPrebuilt(spark, idx, emb.filter(col("vec_id") === 7L), k = 5)
       }
       assert(e2.getMessage.contains("built with m=16"), e2.getMessage)
       // a stamp-less index (external / pre-stamp builder) names the
       // real remedy instead of a raw parquet path-not-found
-      graft.streaming.Streams.deleteDir(spark, s"$idx/index_params")
+      graft.streaming.Streams.deleteDir(spark, s"$live/index_params")
       val e3 = intercept[IllegalArgumentException] {
         Pq.adcTopKPrebuilt(spark, idx, emb.filter(col("vec_id") === 7L), k = 5)
       }

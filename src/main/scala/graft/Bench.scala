@@ -38,11 +38,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATE_STORE=heap|rocksdb: the st-family A/B knob —
-    // rocksdb is the engine default, heap reverts to Spark's
-    // HDFSBackedStateStoreProvider for comparison
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(m => spark.conf.set(graft.streaming.Streams.StateStoreModeKey, m))
     // warm-up: exercise scan + window + aggregate + sort codegen paths
     // so JVM/codegen startup isn't billed to the first timed query
     locally {

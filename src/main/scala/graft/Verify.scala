@@ -20,10 +20,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // state-store A/B knob, same contract as Bench: heap reverts the
-    // engine's RocksDB default to Spark's heap-backed provider
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(m => spark.conf.set(graft.streaming.Streams.StateStoreModeKey, m))
     new java.io.File(outDir).mkdirs()
     // dev-loop filter (same contract as SPARK_GRAFT_BENCH_ONLY): regex
     // over query names; unset = full sweep (what the driver runs)

@@ -355,6 +355,10 @@ object IO {
     * way. */
   private val ReleasedHolder = "released"
 
+  /** The `holder` field of a lock marker's JSON body. */
+  private def holderOf(txt: String): Option[String] =
+    """"holder"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
+
   private def foldHolderId: String =
     s"${java.net.InetAddress.getLocalHost.getHostName}:" +
       s"pid${java.lang.ProcessHandle.current().pid()}"
@@ -430,8 +434,7 @@ object IO {
       finally out.close()
       if (overwrite || !lockCreateIsAtomic(f)) {
         Thread.sleep(lockSettleMs(f))
-        val back = """"holder"\s*:\s*"([^"]*)"""".r
-          .findFirstMatchIn(readClaimBack(f, m)).map(_.group(1))
+        val back = holderOf(readClaimBack(f, m))
         if (!back.contains(token)) throw new IllegalStateException(
           s"lost the $what-lock race on $m — a concurrent $what " +
             s"acquired the lock (held by ${back.getOrElse("?")}); retry " +
@@ -473,22 +476,6 @@ object IO {
     }
   }
 
-  /** Acquire the fold lock: exclusive-create `_FOLDING` with this
-    * process's holder id. Returns true iff the marker PRE-EXISTED as a
-    * released/legacy crash-window bracket that this fold adopted — the
-    * caller must then preserve the bracket on its own failure paths
-    * (round-18 ADVICE: a retry whose write fails must not clear a
-    * marker over a prior fold's still-open duplicate window).
-    *
-    * A marker HELD by another process fails loudly naming the holder:
-    * either a concurrent fold is running (serialize them — the
-    * single-fold-at-a-time contract) or the holder was kill -9'd
-    * mid-fold; after verifying the latter, re-run with
-    * `takeoverCrashedFold = true`. Both adoption and takeover claim
-    * the marker IN PLACE (overwrite + read-back verify) so the bracket
-    * over any real duplicate window is continuously present — two
-    * racing takeovers still resolve to one winner (exactly the racer
-    * that reads its own token back proceeds; the loser fails loudly). */
   /** Read a lock marker's content for CLASSIFICATION. An EMPTY body is
     * ambiguous: a legacy/released bracket — or a mid-claim holder on an
     * atomic-create store, whose 0-length under-construction file is
@@ -521,19 +508,39 @@ object IO {
     }
   }
 
+  private[graft] case class FoldLock(token: String, adoptedWindow: Boolean)
+
+  /** Acquire the fold lock: exclusive-create `_FOLDING` with this
+    * acquisition's token. Returns the token, which the release checks
+    * ([[releaseFoldLock]]), and whether the marker PRE-EXISTED as a
+    * released/legacy crash-window bracket that this fold adopted — the
+    * caller must then preserve the bracket on its own failure paths
+    * (round-18 ADVICE: a retry whose write fails must not clear a
+    * marker over a prior fold's still-open duplicate window).
+    *
+    * A marker HELD by another process fails loudly naming the holder:
+    * either a concurrent fold is running (serialize them — the
+    * single-fold-at-a-time contract) or the holder was kill -9'd
+    * mid-fold; after verifying the latter, re-run with
+    * `takeoverCrashedFold = true`. Both adoption and takeover claim
+    * the marker IN PLACE (overwrite + read-back verify) so the bracket
+    * over any real duplicate window is continuously present — two
+    * racing takeovers still resolve to one winner (exactly the racer
+    * that reads its own token back proceeds; the loser fails loudly). */
   private[graft] def acquireFoldLock(f: FileSystem, manifestDir: String,
-                                     takeoverCrashedFold: Boolean): Boolean = {
+                                     takeoverCrashedFold: Boolean): FoldLock = {
     val m = foldingMarker(manifestDir)
     // the token is per-ACQUISITION (holder id + nonce): see
     // tryClaimLock for the atomic-create fast path and the verified
     // settle window the non-atomic stores pay
     val token = s"$foldHolderId:${java.util.UUID.randomUUID().toString.take(8)}"
-    if (tryClaimLock(f, m, token, "fold", overwrite = false)) return false
+    if (tryClaimLock(f, m, token, "fold", overwrite = false))
+      return FoldLock(token, adoptedWindow = false)
     // marker exists: a released crash-window bracket (adoptable), a
     // legacy empty marker (same, after the settle re-read rules out a
     // mid-claim holder), or a holder — live or kill -9'd
     val txt = readMarkerSettled(f, m)
-    val holder = """"holder"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    val holder = holderOf(txt)
     val adoptable = txt.trim.isEmpty || holder.contains(ReleasedHolder)
     if (!adoptable && !takeoverCrashedFold)
       throw new IllegalStateException(
@@ -544,7 +551,7 @@ object IO {
           "that holder crashed, re-run with takeoverCrashedFold = true; " +
           "readers keep deduplicating its crash window either way")
     tryClaimLock(f, m, token, "fold", overwrite = true)
-    true
+    FoldLock(token, adoptedWindow = true)
   }
 
   /** Generic verified-claim process lock (the `acquireFoldLock`
@@ -572,7 +579,7 @@ object IO {
     // atomic-create claimer's create→close window must not read as
     // "finished holder" and get overwrite-claimed (r20 ADVICE, high)
     val txt = readMarkerSettled(f, m)
-    val holder = """"holder"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    val holder = holderOf(txt)
     if (!takeoverCrashed && txt.trim.nonEmpty)
       throw new IllegalStateException(
         s"another $what of this target is already in flight: $m is held by " +
@@ -593,21 +600,35 @@ object IO {
                                         token: String): Unit = {
     val f = fs(spark, lockPath)
     val m = new Path(lockPath)
-    val holder =
-      try """"holder"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(readSmallTextFile(f, m)).map(_.group(1))
-      catch { case _: java.io.FileNotFoundException => None }
-    if (holder.contains(token)) f.delete(m, false): Unit
+    if (holds(f, m, token)) f.delete(m, false): Unit
   }
 
-  /** Downgrade a held marker to a lock-free crash-window bracket:
-    * the fold failed after the point where duplicates may exist (or
-    * adopted a prior crash's window), so readers must keep
-    * deduplicating — but the next fold must not need a takeover. */
-  private def releaseFoldLockKeepWindow(f: FileSystem, manifestDir: String): Unit = {
-    val out = f.create(foldingMarker(manifestDir), true)
-    try out.write(s"""{"holder":"$ReleasedHolder"}""".getBytes("UTF-8"))
-    finally out.close()
+  /** Whether the marker `m` still names `token` as its holder — the
+    * one holder check both lock releases make. A missing marker holds
+    * nothing. */
+  private def holds(f: FileSystem, m: Path, token: String): Boolean =
+    try holderOf(readSmallTextFile(f, m)).contains(token)
+    catch { case _: java.io.FileNotFoundException => false }
+
+  /** Release the fold lock iff `_FOLDING` still names this fold's
+    * token: delete the marker, or, when `keepWindow` (the fold failed
+    * after the point where duplicates may exist, or adopted a prior
+    * crash's window), downgrade it to a lock-free crash-window bracket
+    * — readers keep deduplicating, but the next fold needs no
+    * takeover. A fold whose lock was taken over (`takeoverCrashedFold`
+    * on a holder that was in fact alive) leaves the new holder's
+    * marker alone, so the readers' bracket over the new holder's
+    * duplicate window stays. */
+  private def releaseFoldLock(f: FileSystem, manifestDir: String, token: String,
+                              keepWindow: Boolean): Unit = {
+    val m = foldingMarker(manifestDir)
+    if (holds(f, m, token)) {
+      if (keepWindow) {
+        val out = f.create(m, true)
+        try out.write(s"""{"holder":"$ReleasedHolder"}""".getBytes("UTF-8"))
+        finally out.close()
+      } else f.delete(m, false): Unit
+    }
   }
 
   /** The accumulated manifest: (path, length), one row per landed file.
@@ -671,7 +692,8 @@ object IO {
     * measured. After compaction a read is one parquet scan plus a glob
     * over only the segments appended SINCE — run it on the ingest
     * cadence (e.g. daily) and the live segment count stays O(waves per
-    * cadence), probe: tools/probes/probe_manifest_compaction.sc.
+    * cadence) — PROBES.md, "Landing-manifest compaction at 50k
+    * segments".
     *
     * Crash-safe and concurrent-append-safe: the segment list is
     * snapshotted FIRST, so waves appended while the fold runs are
@@ -1101,12 +1123,12 @@ object IO {
     // steady-state read stays shuffle-free, and creating the bracket
     // this early only SHRINKS the documented reader-races-fold-start
     // transient.
-    val adoptedWindow = acquireFoldLock(f, manifestDir, takeoverCrashedFold)
+    val lock = acquireFoldLock(f, manifestDir, takeoverCrashedFold)
     // windowOpen = "duplicate rows may exist between checkpoint and
     // live segments": true from acquisition if we adopted a prior
     // crash's bracket, true from just before this fold's swap until
     // its last segment delete
-    var windowOpen = adoptedWindow
+    var windowOpen = lock.adoptedWindow
     var done = false
     var out = (0, 0L)
     try {
@@ -1159,16 +1181,11 @@ object IO {
         // release on the FAILURE path here (suppressing cleanup errors
         // onto the original), success path releases below — a finally
         // can't distinguish the two without re-throw gymnastics
-        try {
-          if (windowOpen) releaseFoldLockKeepWindow(f, manifestDir)
-          else f.delete(foldingMarker(manifestDir), false): Unit
-        } catch { case c: Throwable => e.addSuppressed(c) }
+        try releaseFoldLock(f, manifestDir, lock.token, windowOpen)
+        catch { case c: Throwable => e.addSuppressed(c) }
         throw e
     } finally {
-      if (done) {
-        if (windowOpen) releaseFoldLockKeepWindow(f, manifestDir)
-        else f.delete(foldingMarker(manifestDir), false): Unit
-      }
+      if (done) releaseFoldLock(f, manifestDir, lock.token, windowOpen)
     }
   }
 
@@ -1176,9 +1193,9 @@ object IO {
     * (fname, length, content) rows as the `binaryFile` source, but
     * split planning comes from the manifest instead of
     * InMemoryFileIndex — no per-file driver metadata calls, so the
-    * driver-side cost is flat in file count (probe:
-    * tools/probes/probe_s18_manifest_listing.sc). Files hash-pack into
-    * ~`spark.sql.files.maxPartitionBytes` tasks (balanced in
+    * driver-side cost is flat in file count (PROBES.md, "s18
+    * manifest-listed ingest vs binaryFile at 20k-300k files"). Files
+    * hash-pack into ~`spark.sql.files.maxPartitionBytes` tasks (balanced in
     * expectation — control-metadata shuffle only, the payload bytes
     * move exactly once, executor-side). Drift fails LOUDLY: a
     * manifested path that is missing, or whose on-disk length differs,

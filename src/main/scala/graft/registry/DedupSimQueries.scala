@@ -240,7 +240,8 @@ object DedupSimQueries {
     // (drop bands whose bucket exceeds maxBucketDf BEFORE the
     // self-join) are oracle-pinned, not just spec-asserted. cap=3
     // genuinely binds on this corpus (sf0.01: 79 buckets at df 4-6;
-    // sf0.1: 781 at df 4-8 — measured, probe_x2b_occupancy.sc), so a
+    // sf0.1: 781 at df 4-8 — a measured band-bucket census, recorded
+    // only here), so a
     // cap implementation that silently stopped filtering would
     // hash-mismatch. The oracle replays it as HAVING count(*) <= 3 on
     // the band CTE.

@@ -360,7 +360,8 @@ object IoQueries {
     // instead of InMemoryFileIndex — at 100k files the binaryFile
     // source pays 26.3 s of serial DRIVER listing before the first
     // task; this path's driver cost is one tiny-segment glob, flat in
-    // file count (probe_s18_manifest_listing.sc), and the per-file
+    // file count (PROBES.md, "s18 manifest-listed ingest vs binaryFile
+    // at 20k-300k files"), and the per-file
     // opens run in executors packed to ~maxPartitionBytes tasks. Two
     // manifest segments here exercise the append-only accumulation;
     // same content-level oracle as s16 — the planner must be

@@ -253,7 +253,8 @@ object StreamQueries {
       // (Streams.suggestedStatePartitions, r19 verdict #7): the
       // sf0.1 fixture's join state peaks at ~1e5 rows (the events
       // table, all within the 24 h watermark band), which the helper
-      // maps to the probed p8 pin (probe_st8_rocksdb_trim.sc); the 10×
+      // maps to the probed p8 pin (PROBES.md, "st8 RocksDB
+      // per-trigger constant: priced and trimmed 30%"); the 10×
       // pin p16 (PROBES.md, "st8 state-partition U-curve RE-TESTED at
       // 10x state") is the helper's next
       // decade — the spec pins both. Results are partition-independent
@@ -385,16 +386,14 @@ object StreamQueries {
         |  FROM events)
         |WHERE dwell_us IS NOT NULL ORDER BY entry_id""".stripMargin) { (s, dir) =>
       // modern arbitrary-state API; requires the RocksDB provider —
-      // the engine default (round-15 verdict item 1), PINNED here so
-      // the heap A/B knob can't put this query on a provider that
-      // cannot run it. Table-sized result ⇒ parquet file-sink twin
+      // the engine's one state store (round-15 verdict item 1).
+      // Table-sized result ⇒ parquet file-sink twin
       val glob = writeMicroBatches(s, dir)
       Streams
         .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "stream/st5tws_ckpt"),
           scratch(dir, "stream/st5tws_out"),
           df => Streams.stitchDwellTws(s, df),
-          maxFilesPerTrigger = Some(2), shufflePartitions = Some(4),
-          stateStoreMode = Some("rocksdb"))
+          maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("entry_id")
     },
     // st15 — streaming near-dup ingest gate: micro-batches of incoming

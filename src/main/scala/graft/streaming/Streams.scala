@@ -39,24 +39,19 @@ object Streams {
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
-  /** Session knob selecting the state-store backend for every stream
-    * the engine runs: `rocksdb` (default) or `heap` (Spark's
-    * HDFSBackedStateStoreProvider, for A/B comparison). */
-  val StateStoreModeKey = "spark.graft.streaming.stateStore"
-
   private val TrackRowsKey =
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Engine-wide state-store default: ROCKSDB, for every stateful
-    * streaming query (round-15 verdict item 1). Spark's default
-    * HDFSBackedStateStoreProvider keeps every state row in executor
-    * HEAP (the loaded-version map) — correct at test scale, but
-    * session windows, stream-stream joins, dedup state and top-k
-    * counts all grow with stream history or key cardinality, so at
-    * 100× stream state the heap provider is the first OOM while
+  /** Engine-wide state store: ROCKSDB with changelog checkpointing,
+    * for every stateful streaming query (round-15 verdict item 1).
+    * Spark's default HDFSBackedStateStoreProvider keeps every state
+    * row in executor HEAP (the loaded-version map) — correct at test
+    * scale, but session windows, stream-stream joins, dedup state and
+    * top-k counts all grow with stream history or key cardinality, so
+    * at 100× stream state the heap provider is the first OOM while
     * RocksDB pages state to native memory + local disk and its JVM
     * footprint stays flat (PROBES.md, "State-scale probe: heap grows
     * with state, RocksDB stays flat"). transformWithState additionally
@@ -74,10 +69,8 @@ object Streams {
     * compactOnCommit, formatVersion (Spark exposes no direct
     * bloom-policy knob) — all inside box noise across two sweeps:
     * the per-row tax is the provider's FLOOR, knobs exhausted. The
-    * default therefore trades wall while state still FITS heap for
-    * survival when it no longer does; deployments whose state
-    * provably fits executor heap reclaim the tax with `heap` mode
-    * (SPARK_GRAFT_STATE_STORE=heap).
+    * engine therefore trades wall while state still FITS heap for
+    * survival when it no longer does; RocksDB is the one provider.
     *
     * The provider is a session-level SQL conf captured into the
     * query's checkpoint at START — Spark has no per-query spelling —
@@ -89,26 +82,24 @@ object Streams {
     * verdict #1 — the reference DAG schedules the users and
     * browsinghistory drains as sibling tasks, dags/dwh_dag.py:212-221);
     * the former session-wide set/restore swap and its one-stream-per-
-    * session lock are gone. `heap` mode opts a run back to the Spark
-    * default (the A/B knob the bench comparison uses); resuming an
-    * EXISTING checkpoint under a different provider is rejected by
-    * Spark itself (offsets pin the provider), so flipping the knob
-    * mid-deployment requires a fresh checkpoint — the standard Spark
+    * session lock are gone. Resuming an EXISTING checkpoint under a
+    * different provider is rejected by Spark itself (offsets pin the
+    * provider), so a checkpoint written before RocksDB became the
+    * engine's provider needs a fresh checkpoint — the standard Spark
     * migration contract. */
   private[graft] def newRunnerSession(
       spark: SparkSession,
-      stateStoreMode: Option[String],
       shufflePartitions: Option[Int]): SparkSession = {
     val runner = spark.newSession()
     // carry the caller's RUNTIME conf onto the clone: newSession()
     // starts from the builder-time conf, so session-level user settings
-    // (timezone, AQE toggles, the engine's own StateStoreModeKey)
-    // would otherwise silently reset. ONLY static/context-wide entries
-    // may fail the set (AnalysisException: CANNOT_MODIFY_CONFIG) —
-    // they are shared through the context anyway, so exactly that
-    // rejection is skipped; any other failure on a dynamic conf would
-    // be a silently-dropped load-bearing setting and must surface
-    // (round-18 ADVICE: the old NonFatal catch swallowed everything).
+    // (timezone, AQE toggles) would otherwise silently reset. ONLY
+    // static/context-wide entries may fail the set (AnalysisException:
+    // CANNOT_MODIFY_CONFIG) — they are shared through the context
+    // anyway, so exactly that rejection is skipped; any other failure
+    // on a dynamic conf would be a silently-dropped load-bearing
+    // setting and must surface (round-18 ADVICE: the old NonFatal
+    // catch swallowed everything).
     spark.conf.getAll.foreach { case (k, v) =>
       try runner.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () }
@@ -121,36 +112,23 @@ object Streams {
     // size it from the probed U-curve via [[suggestedStatePartitions]].
     shufflePartitions.foreach(n =>
       runner.conf.set("spark.sql.shuffle.partitions", n))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val logKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    stateStoreMode.getOrElse(runner.conf.get(StateStoreModeKey, "rocksdb")) match {
-      // heap PINS the HDFS-backed provider rather than merely skipping
-      // the RocksDB set: on a session whose defaults already pin
-      // providerClass, a skip would silently A/B rocksdb against
-      // rocksdb (round-16 review finding)
-      case "heap" => runner.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      case "rocksdb" =>
-        // changelog checkpointing: commit uploads the delta, not a full
-        // snapshot — the per-trigger RocksDB commit cost that dominates
-        // small-state benches (st8 A/B: 7.6 s vs heap 3.5 s without it)
-        // and the recommended production config at large state.
-        // trackTotalNumberOfRows off by default (round-16 verdict item
-        // 4): maintaining the numTotalStateRows METRIC costs the write
-        // path a point-get per put/remove — a bookkeeping knob, zero
-        // effect on answers or stored state (the metric just reads 0).
-        // The interleaved sf0.1 A/B (probe_st8_rocksdb_trim.sc)
-        // attributes part of the stream-join trim to it; an explicit
-        // caller-session setting wins over the default (it was copied
-        // onto the clone above).
-        runner.conf.set(provKey, RocksDbProvider)
-        runner.conf.set(logKey, "true")
-        if (runner.conf.getOption(TrackRowsKey).isEmpty)
-          runner.conf.set(TrackRowsKey, "false")
-      case other => throw new IllegalArgumentException(
-        s"$StateStoreModeKey must be 'rocksdb' or 'heap', got '$other'")
-    }
+    // changelog checkpointing: commit uploads the delta, not a full
+    // snapshot — the per-trigger RocksDB commit cost that dominates
+    // small-state benches (st8: 7.6 s without it vs 3.5 s on the heap
+    // provider) and the recommended production config at large state.
+    // trackTotalNumberOfRows off by default (round-16 verdict item 4):
+    // maintaining the numTotalStateRows METRIC costs the write path a
+    // point-get per put/remove — a bookkeeping knob, zero effect on
+    // answers or stored state (the metric just reads 0). The
+    // interleaved sf0.1 A/B (PROBES.md, "st8 RocksDB per-trigger
+    // constant: priced and trimmed 30%") attributes part of the
+    // stream-join trim to it; an explicit caller-session setting wins
+    // over the default (it was copied onto the clone above).
+    runner.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
+    runner.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    if (runner.conf.getOption(TrackRowsKey).isEmpty)
+      runner.conf.set(TrackRowsKey, "false")
     runner
   }
 
@@ -165,7 +143,8 @@ object Streams {
     * U-shaped in partition count and its minimum MOVES RIGHT with
     * state volume. Probed pins under the RocksDB default, stream-
     * stream self-join shape: ~1e5 state rows → p8
-    * (probe_st8_rocksdb_trim.sc: p1 27.2 / p4 7.9 / p8 5.5 / p16 6.6 /
+    * (PROBES.md, "st8 RocksDB per-trigger constant: priced and trimmed
+    * 30%": p1 27.2 / p4 7.9 / p8 5.5 / p16 6.6 /
     * p32 ~16 s), ~1e6 → p16 (PROBES.md, "st8 state-partition U-curve
     * RE-TESTED at 10x state": p16 36-43 s
     * beats p8 45-47 s in both sweeps, p1 ~330 s). The rule: partitions
@@ -222,14 +201,10 @@ object Streams {
       outputMode: OutputMode = OutputMode.Append(),
       maxFilesPerTrigger: Option[Int] = None,
       shufflePartitions: Option[Int] = None,
-      format: String = "json",
-      // per-query state-store pin: transformWithState queries pass
-      // Some("rocksdb") because the heap provider cannot run them at
-      // all — the engine-wide A/B knob must not break them
-      stateStoreMode: Option[String] = None
+      format: String = "json"
   ): DataFrame = {
     deleteDir(spark, checkpoint)
-    val runner = newRunnerSession(spark, stateStoreMode, shufflePartitions)
+    val runner = newRunnerSession(spark, shufflePartitions)
     val reader = runner.readStream.schema(schema)
     val src = maxFilesPerTrigger
       .map(n => reader.option("maxFilesPerTrigger", n))
@@ -286,7 +261,8 @@ object Streams {
     *
     * LIFETIME CONTRACT — the sink's `_spark_metadata` commit log grows
     * with every file EVER written (r19 verdict #3, measured in
-    * probe_sink_metadata_growth.sc): Spark rewrites a `.compact` file
+    * PROBES.md, "Round-20: file-sink `_spark_metadata` growth,
+    * measured to the 10k-batch shape"): Spark rewrites a `.compact` file
     * holding one entry per historical file every
     * `spark.sql.streaming.fileSink.log.compactInterval` (10) batches,
     * and Spark 4.1 exposes NO entry expiry (deletion/cleanupDelay
@@ -318,14 +294,13 @@ object Streams {
       maxFilesPerTrigger: Option[Int] = None,
       shufflePartitions: Option[Int] = None,
       format: String = "json",
-      stateStoreMode: Option[String] = None,
       reset: Boolean = true
   ): DataFrame = {
     if (reset) {
       deleteDir(spark, checkpoint)
       deleteDir(spark, outPath)
     }
-    val runner = newRunnerSession(spark, stateStoreMode, shufflePartitions)
+    val runner = newRunnerSession(spark, shufflePartitions)
     val reader = runner.readStream.schema(schema)
     val src = maxFilesPerTrigger
       .map(n => reader.option("maxFilesPerTrigger", n))

@@ -419,11 +419,22 @@ class OperatorsSpec extends SparkSpec {
       }
     }
     assert(readV() == Seq(1), "failed rebuild must not touch the live artifact")
-    // a successful rebuild replaces the whole artifact
+    // the failed build leaves its staged dir behind, as a build killed
+    // -9 mid-write does (nothing cleans up on the way out); readers never
+    // see it, and the next rebuild replaces it and then the artifact
+    val orphan = new org.apache.hadoop.fs.Path(dir + ".__swap_tmp")
+    assert(fs.exists(orphan) &&
+      spark.read.parquet(orphan.toString).as[Int].collect().toSeq == Seq(2),
+      "the failed build's staged dir is left as a killed build leaves it")
+    graft.io.IO.recoverSwap(spark, dir)
+    assert(readV() == Seq(1), "an orphaned staged dir must not heal into the live path")
     graft.io.IO.replaceDir(spark, dir) { tmp =>
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(tmp)),
+        "the next rebuild must start from an empty staged dir")
       Seq(3).toDF("v").write.parquet(tmp)
     }
     assert(readV() == Seq(3))
+    assert(!fs.exists(orphan), "the rebuild must consume the orphaned staged dir")
     // crash between the two renames leaves (live missing, __swap_old
     // present) — the ONLY lossy-looking state — and both the next
     // swap and an explicit recoverSwap() heal it
@@ -892,6 +903,37 @@ class OperatorsSpec extends SparkSpec {
     assert(graft.io.IO.readLandingManifest(spark, man).count() == 4L,
       "no lost or resurrected manifest rows after racing folds")
     assert(segCount() == 0)
+    // a fold whose lock is taken over while it runs (takeoverCrashedFold
+    // against a holder that was in fact alive) leaves the new holder's
+    // marker on its way out: that marker brackets the new holder's
+    // duplicate window for readers. The takeover lands from a listener
+    // when the fold's checkpoint write starts.
+    val f4 = java.nio.file.Paths.get(zone, "f4.bin")
+    java.nio.file.Files.write(f4, "lock 4".getBytes("UTF-8"))
+    graft.io.IO.appendLandingManifest(spark, man,
+      Seq((f4.toString, 6L)).toDF("path", "length"))
+    val usurper = """{"holder":"usurper:pid42:feedbeef","acquired_at_ms":1}"""
+    val foldTmp = new Path(s"$man/_checkpoint.__swap_tmp")
+    val foldReturned = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val usurpedMidFold = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val usurp = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!foldReturned.get && !usurpedMidFold.get && fs.exists(foldTmp)) {
+          val o = fs.create(marker, true)
+          try o.write(usurper.getBytes("UTF-8")) finally o.close()
+          usurpedMidFold.set(!foldReturned.get)
+        }
+    }
+    spark.sparkContext.addSparkListener(usurp)
+    try {
+      assert(graft.io.IO.compactLandingManifest(spark, man) == ((1, 5L)))
+      foldReturned.set(true)
+    } finally spark.sparkContext.removeSparkListener(usurp)
+    assert(usurpedMidFold.get, "the takeover must land while the fold runs")
+    assert(fs.exists(marker) &&
+      scala.io.Source.fromInputStream(fs.open(marker), "UTF-8").mkString == usurper,
+      "a fold whose lock was taken over must leave the new holder's _FOLDING marker")
+    fs.delete(marker, false)
   }
 
   test("graceMs fold clamps to consumer marks; the binding mark is reported (r19 verdict #1/#5)") {
@@ -1023,7 +1065,7 @@ class OperatorsSpec extends SparkSpec {
         })
         th.start()
         val adopted =
-          try graft.io.IO.acquireFoldLock(fs, man, takeoverCrashedFold = needTakeover)
+          try graft.io.IO.acquireFoldLock(fs, man, takeoverCrashedFold = needTakeover).adoptedWindow
           finally { stop.set(true); th.join() }
         assert(adopted, "a pre-existing marker must report adoptedWindow = true")
         assert(!vanished.get(),
@@ -1145,7 +1187,7 @@ class OperatorsSpec extends SparkSpec {
       // a marker still empty AFTER the settle is a legacy/released
       // bracket and adopts as before
       fs.create(marker, true).close()
-      assert(graft.io.IO.acquireFoldLock(fs, man, takeoverCrashedFold = false),
+      assert(graft.io.IO.acquireFoldLock(fs, man, takeoverCrashedFold = false).adoptedWindow,
         "an empty-after-settle marker must adopt as a legacy bracket")
       fs.delete(marker, false)
       // same guard on the generic process lock: empty-but-live refuses

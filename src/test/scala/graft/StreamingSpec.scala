@@ -507,12 +507,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("concurrent engine streams isolate per-run provider and partition pins (the race the old lock guarded)") {
-    // one drain pinned heap, one pinned rocksdb, CONCURRENTLY on one
-    // session — under the old session-wide conf swap this interleaving
-    // could start a query on the wrong provider; with per-run clones
-    // each query's checkpoint must record ITS OWN pin. The offsets log
-    // persists the conf the query actually started with, so the
-    // assertion reads the artifact Spark itself commits to.
+    // two drains that differ only in their partition pin, CONCURRENTLY
+    // on one session — under the old session-wide conf swap this
+    // interleaving could start a query on the other's settings; with
+    // per-run clones each query's checkpoint must record the RocksDB
+    // provider and ITS OWN partition count. The offsets log persists
+    // the conf the query actually started with, so the assertion reads
+    // the artifact Spark itself commits to.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -523,25 +524,20 @@ class StreamingSpec extends SparkSpec {
       (1 to 6).map(i =>
         s"""{"entry_id":$i,"user_id":${i % 2},"ts_us":${i * 1000000},"pageview_count":1,"event_type":"view"}""")
         .mkString("\n").getBytes("UTF-8"))
-    def drain(ckpt: String, mode: String, parts: Int) =
+    def drain(ckpt: String, parts: Int) =
       Streams.runFileStream(spark, dir.toString, schema, ckpt,
         df => Streams.streamDedupKeys(df, Seq("user_id")),
-        stateStoreMode = Some(mode), shufflePartitions = Some(parts))
-    val fHeap = Future(drain(s"$base/ckptH", "heap", 2))
-    val fRocks = Future(drain(s"$base/ckptR", "rocksdb", 3))
-    assert(Await.result(fHeap, 5.minutes).count() == 2)
-    assert(Await.result(fRocks, 5.minutes).count() == 2)
-    def offsetsConf(ckpt: String): String =
-      new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(s"$ckpt/offsets/0").toPath), "UTF-8")
-    val heapConf = offsetsConf(s"$base/ckptH")
-    val rocksConf = offsetsConf(s"$base/ckptR")
-    assert(heapConf.contains("HDFSBackedStateStoreProvider")
-      && heapConf.contains("\"spark.sql.shuffle.partitions\":\"2\""),
-      s"heap drain must start on its own pins:\n$heapConf")
-    assert(rocksConf.contains("RocksDBStateStoreProvider")
-      && rocksConf.contains("\"spark.sql.shuffle.partitions\":\"3\""),
-      s"rocksdb drain must start on its own pins:\n$rocksConf")
+        shufflePartitions = Some(parts))
+    val pins = Seq(2, 3)
+    pins.map(n => Future(drain(s"$base/ckpt$n", n)))
+      .foreach(f => assert(Await.result(f, 5.minutes).count() == 2))
+    pins.foreach { n =>
+      val conf = new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(s"$base/ckpt$n/offsets/0").toPath), "UTF-8")
+      assert(conf.contains("RocksDBStateStoreProvider")
+        && conf.contains(s"\"spark.sql.shuffle.partitions\":\"$n\""),
+        s"the p$n drain must start on RocksDB and its own partition pin:\n$conf")
+    }
   }
 
   test("concurrent foreachBatch drains (manifest ingest + bucketed upsert) share one session safely") {
@@ -988,7 +984,7 @@ class StreamingSpec extends SparkSpec {
     // the registry's 1x-state pin and the 10x probe's optimum are the
     // anchor and the next decade — the rule must reproduce both
     assert(Streams.suggestedStatePartitions(100000L) == 8,
-      "1e5 state rows is the probed p8 pin (probe_st8_rocksdb_trim.sc)")
+      "1e5 state rows is the probed p8 pin (PROBES.md, st8 RocksDB per-trigger constant)")
     assert(Streams.suggestedStatePartitions(1000000L) == 16,
       "1e6 state rows is the probed p16 pin (PROBES.md, st8 U-curve at 10x state)")
     // below the anchor the per-trigger commit constant dominates: p8 floor
@@ -1040,5 +1036,113 @@ class StreamingSpec extends SparkSpec {
       schema, s"$base/ckpt2", s"$base/out2",
       df => df.select("entry_id", "user_id"))
     assert(empty.isEmpty && empty.columns.toSeq == Seq("entry_id", "user_id"))
+  }
+
+  /** One incarnation of a foreachBatch stream over the json files under
+    * `srcDir`, one file per micro-batch, against checkpoint `ckpt`. When
+    * `failOn` names a batch id, that batch throws before `sink` runs.
+    * Returns the batch ids this incarnation saw and its failure. */
+  private def foreachBatchDrain(srcDir: String, fileSchema: StructType, ckpt: String,
+                                failOn: Option[Long])(
+      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)(
+      sink: org.apache.spark.sql.DataFrame => Unit): (Seq[Long], Option[Throwable]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = transform(spark.readStream.schema(fileSchema)
+        .option("maxFilesPerTrigger", 1).json(srcDir))
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        seen.add(id)
+        if (failOn.contains(id)) sys.error(s"injected failure in batch $id")
+        sink(batch.toDF())
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    val failure =
+      try { q.awaitTermination(); None }
+      catch { case e: org.apache.spark.sql.streaming.StreamingQueryException => Some(e) }
+      finally q.stop()
+    import scala.jdk.CollectionConverters._
+    (seen.asScala.toSeq, failure)
+  }
+
+  /** Runs `drain` uninterrupted on one checkpoint, then on a second one
+    * failing in its second micro-batch and resumed: the failed run saw
+    * batches 0 and 1, and the resume re-runs exactly batch 1 onward. */
+  private def assertResumesFromFailedBatch(base: String)(
+      drain: (String, Option[Long]) => (Seq[Long], Option[Throwable])): Unit = {
+    val (seenBase, failBase) = drain("base", None)
+    assert(failBase.isEmpty && seenBase == Seq(0L, 1L, 2L, 3L), s"uninterrupted run: $seenBase $failBase")
+    val (seenFirst, failFirst) = drain("crash", Some(1L))
+    assert(failFirst.exists(_.getMessage.contains("injected failure in batch 1")),
+      s"the first incarnation must fail in batch 1: $failFirst")
+    assert(seenFirst == Seq(0L, 1L), s"the failed run stops at batch 1: $seenFirst")
+    val (seenResume, failResume) = drain("crash", None)
+    assert(failResume.isEmpty, s"the resume must complete: $failResume")
+    assert(seenResume == Seq(1L, 2L, 3L),
+      s"batch 0 is committed, so the resume re-runs batch 1 onward: $seenResume")
+  }
+
+  test("ST12 bucketed upsert resumes from its checkpoint after a failed micro-batch; the table equals an uninterrupted run") {
+    val base = s"${sys.props("java.io.tmpdir")}/graft_test_st12_resume"
+    Streams.deleteDir(spark, base)
+    // 4 one-file micro-batches; later files carry newer ts for
+    // overlapping ids, so every batch has keep-latest work to do
+    val rowSchema = StructType(Seq(StructField("id", LongType),
+      StructField("v", LongType), StructField("ts", LongType)))
+    val rows = for (b <- 0L until 4L; i <- 0L until 50L) yield (b * 25 + i, b * 10, b)
+    rows.groupBy(_._3).toSeq.sortBy(_._1).foreach { case (b, rs) =>
+      val f = new java.io.File(s"$base/src/b$b.json")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.writeString(f.toPath,
+        rs.map { case (id, v, ts) => s"""{"id":$id,"v":$v,"ts":$ts}""" }.mkString("\n"))
+      Thread.sleep(20) // distinct mod times → deterministic batch order
+    }
+    assertResumesFromFailedBatch(base) { (run, failOn) =>
+      foreachBatchDrain(s"$base/src", rowSchema, s"$base/ckpt_$run", failOn)(identity) { batch =>
+        Streams.upsertBucketedBatch(spark, s"$base/table_$run", batch, Seq("id"), Seq("ts"), 4)
+      }
+    }
+    def table(run: String): Seq[(Long, Long, Long)] =
+      spark.read.parquet(s"$base/table_$run").select("id", "v", "ts")
+        .as[(Long, Long, Long)].collect().toSeq.sorted
+    val keepLatest = rows.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq.sorted
+    assert(table("base") == keepLatest, "the uninterrupted run must keep the latest row per id")
+    assert(table("crash") == table("base"), "a failed batch and its resume must be invisible in the table")
+  }
+
+  test("transformWithState dwell stitch resumes from its RocksDB checkpoint after a failed micro-batch; the output equals an uninterrupted run") {
+    val base = s"${sys.props("java.io.tmpdir")}/graft_test_tws_resume"
+    Streams.deleteDir(spark, base)
+    // 4 one-file micro-batches, 3 users in every file, ts increasing
+    // across files: every batch's first dwell per user stitches to the
+    // state the previous batch left, so lost or doubled state shows
+    val evSchema = StructType(Seq(StructField("user_id", LongType),
+      StructField("entry_id", LongType), StructField("ts_us", LongType)))
+    val evs = for (b <- 0L until 4L; i <- 0L until 12L) yield (i % 3, i + b * 100, i * 7 + b * 1000)
+    evs.grouped(12).zipWithIndex.foreach { case (rs, b) =>
+      val f = new java.io.File(s"$base/src/b$b.json")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.writeString(f.toPath, rs.map { case (u, e, t) =>
+        s"""{"user_id":$u,"entry_id":$e,"ts_us":$t}""" }.mkString("\n"))
+      Thread.sleep(20) // distinct mod times → deterministic batch order
+    }
+    withSQLConf("spark.sql.streaming.stateStore.providerClass" -> Streams.RocksDbProvider,
+                "spark.sql.shuffle.partitions" -> "2") {
+      assertResumesFromFailedBatch(base) { (run, failOn) =>
+        foreachBatchDrain(s"$base/src", evSchema, s"$base/ckpt_$run", failOn)(
+          df => Streams.stitchDwellTws(spark, df)) { batch =>
+          batch.write.mode("append").parquet(s"$base/out_$run")
+        }
+      }
+    }
+    def out(run: String): Seq[(Long, Long, Long)] =
+      spark.read.parquet(s"$base/out_$run").select("user_id", "entry_id", "dwell_us")
+        .as[(Long, Long, Long)].collect().toSeq.sorted
+    val lead = evs.groupBy(_._1).toSeq.flatMap { case (u, rs) =>
+      rs.sortBy(_._3).sliding(2).collect { case Seq(a, b) => (u, a._2, b._3 - a._3) }
+    }.sorted
+    assert(out("base") == lead, "the uninterrupted run must stitch every consecutive pair")
+    assert(out("crash") == out("base"), "a failed batch and its resume must be invisible in the output")
   }
 }

@@ -6,7 +6,8 @@
 # outran. This script makes "suite green" a PRECONDITION of the snapshot
 # instead of a convention:
 #   1. it runs the full ScalaTest suite, then the benchmark's pytest
-#      suite (perfbench/tests), and refuses (exit 1) on any failure;
+#      suite (perfbench/tests), and refuses (exit 1) on any failure or
+#      on a CrashSpec child JVM left running;
 #   2. on success it writes SUITE_GREEN.md recording the run (HEAD,
 #      date, the suite's own derived counts — never hand-counted) PLUS a
 #      content digest of src/ + build.sbt as it was tested;
@@ -66,6 +67,17 @@ if [ $STATUS -ne 0 ] || ! echo "$SUMMARY" | grep -q "failed 0, canceled 0"; then
   echo "[suite_gate] RED — refusing to stamp a snapshot marker"
   echo "[suite_gate] $SUMMARY"
   grep -E "\*\*\* FAILED \*\*\*|TESTS? FAILED" "$LOG" | head -20
+  exit 1
+fi
+
+# CrashSpec kills each child JVM it starts (mains named graft.*Kill9Child);
+# one still alive after the suite means a spec lost track of its child.
+# The [.] keeps the pattern from matching a shell whose command line
+# merely quotes it.
+ORPHANS=$(pgrep -f 'graft[.][A-Za-z]*Kill9Child')
+if [ -n "$ORPHANS" ]; then
+  echo "[suite_gate] RED — CrashSpec child JVMs still running after the suite: $(echo $ORPHANS)"
+  pgrep -af 'graft[.][A-Za-z]*Kill9Child' | cut -c1-200
   exit 1
 fi
 

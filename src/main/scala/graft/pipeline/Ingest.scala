@@ -43,7 +43,10 @@ object Ingest {
     * bronze upsert absorbs the repeat. An empty batch leaves no landing
     * or archive directory and keeps the watermark (ST2). The control
     * table is driver-side text, so a non-empty batch costs two Spark
-    * jobs (the two writes) before the caller's QC.
+    * jobs (the two writes) before the caller's QC. The batch is cached
+    * by the landing write, so the source is scanned once: the archive
+    * write and the caller's first action read the cache, which that
+    * action releases ([[graft.Caching.releaseAfterFirstUse]]).
     */
   def incrementalIngest(
       spark: SparkSession,
@@ -58,25 +61,35 @@ object Ingest {
     val wm = Watermark
       .lookup(spark, watermarkCsv, table)
       .getOrElse(sys.error(s"no watermark row for $table"))
+    // persist at the fan-out: the landing write builds the cache, and
+    // the archive write and the caller's QC read it instead of the source
     val batch = Watermark.incrementalScan(source, wm.updateColumn, wm.watermarkValue)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seen = Observation()
     val landing = IO.datedPath(landzone, "stream", table, "json", yyyyMMdd, stamp)
-    IO.writeJsonLines(
-      batch.observe(seen, count(lit(1)).as("rows"),
-        max(col(wm.updateColumn)).cast("string").as("next_wm")),
-      landing)
-    val m = seen.get
-    // the count is only known once the landing write has run, so an
-    // empty batch drops the empty directory that write left behind
-    if (m("rows").asInstanceOf[Long] == 0L)
-      graft.streaming.Streams.deleteDir(spark, landing)
-    else {
-      IO.writeParquet(
-        Rows.stringifyColumns(batch, Seq.empty),
-        IO.datedPath(archive, "archives", table, "parquet", yyyyMMdd, stamp))
-      Watermark.update(spark, watermarkCsv, table, Option(m("next_wm").asInstanceOf[String]))
+    try {
+      IO.writeJsonLines(
+        batch.observe(seen, count(lit(1)).as("rows"),
+          max(col(wm.updateColumn)).cast("string").as("next_wm")),
+        landing)
+      val m = seen.get
+      // the count is only known once the landing write has run, so an
+      // empty batch drops the empty directory that write left behind
+      if (m("rows").asInstanceOf[Long] == 0L)
+        graft.streaming.Streams.deleteDir(spark, landing)
+      else {
+        IO.writeParquet(
+          Rows.stringifyColumns(batch, Seq.empty),
+          IO.datedPath(archive, "archives", table, "parquet", yyyyMMdd, stamp))
+        Watermark.update(spark, watermarkCsv, table, Option(m("next_wm").asInstanceOf[String]))
+      }
+    } catch {
+      case e: Throwable => batch.unpersist(false); throw e
     }
-    batch
+    // released on the caller's first action; the fresh projection keeps
+    // the two writes' listener events from releasing it early (see
+    // batchFullLoad)
+    graft.Caching.releaseAfterFirstUse(batch.select(col("*")), batch)
   }
 
   /** E3 — batch full load with a 10 % sample. `sampleKeys` selects the

@@ -125,11 +125,18 @@ object CodegenCache {
   *    `nearest_cell_cos` and `nearest_cell_l2`;
   *  - [[DotFusionRule]], which rewrites HOF dot products into `dotq`;
   *  - [[CodegenCache]], which sizes the JVM's generated-code cache
-  *    before the first query compiles anything.
+  *    before the first query compiles anything;
+  *  - [[graft.io.LocalFileSystems]], bound as the `file:` scheme for
+  *    `FileSystem` and `FileContext`, which sets file permissions and
+  *    tells symlinks in-process instead of forking `chmod` per file and
+  *    directory and `readlink` per path a `FileContext` rename stats,
+  *    unless the SparkConf binds `spark.hadoop.fs.file.impl` or
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl` itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     CodegenCache.install()
+    graft.io.LocalFileSystems.install()
     ext.injectOptimizerRule(_ => DotFusionRule)
     ext.injectFunction(LongArrayDot.descriptor)
     ext.injectFunction(graft.functions.SortedArrayJaccard.descriptor)

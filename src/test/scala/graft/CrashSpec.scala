@@ -19,16 +19,6 @@ import org.apache.spark.sql.SparkSession
 class CrashSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The `--add-opens` flags Spark needs on JDK 17, as this JVM got
-    * them (reported either joined or as a flag followed by its value). */
-  private def addOpens: Seq[String] = {
-    val in = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
-    in.zip(in.drop(1) :+ "").collect {
-      case (a, _) if a.startsWith("--add-opens=") => a
-      case ("--add-opens", v)                     => s"--add-opens=$v"
-    }
-  }
-
   /** Start `main` in a child JVM, poll `inWindow` until it holds, then
     * kill the child and return its pid. Fails naming `window` with the
     * child's output if the child dies, finishes or stalls before the
@@ -37,12 +27,7 @@ class CrashSpec extends SparkSpec {
   private def killInWindow(main: String, base: String, window: String, args: String*)(
       inWindow: => Boolean): Long = {
     val log = new File(s"$base/child.log")
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx768m") ++ addOpens ++
-      Seq("-cp", sys.props("java.class.path"), main) ++ args
-    val pb = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).redirectOutput(log)
-    // keep the child's Spark scratch under `base`, which the spec deletes
-    pb.environment().remove("SPARK_LOCAL_DIRS")
-    val child = pb.start()
+    val child = ChildJvm.start(main, log, args: _*)
     def output = scala.util.Try(Files.readString(log.toPath)).getOrElse("<none>").takeRight(4000)
     try {
       val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(180)
@@ -244,6 +229,29 @@ class CrashSpec extends SparkSpec {
       "a fold must not move live segments past the killed join's mark")
     assertBootstrapRecovers(base, expected, pid)
     fs.delete(new Path(base), true)
+  }
+}
+
+/** A child JVM on this suite's class path: the `--add-opens` flags
+  * Spark needs on JDK 17 as this JVM got them, a small heap, its output
+  * to `log`. */
+object ChildJvm {
+  private def addOpens: Seq[String] = {
+    // reported either joined or as a flag followed by its value
+    val in = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+    in.zip(in.drop(1) :+ "").collect {
+      case (a, _) if a.startsWith("--add-opens=") => a
+      case ("--add-opens", v)                     => s"--add-opens=$v"
+    }
+  }
+
+  def start(main: String, log: File, args: String*): Process = {
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx768m") ++ addOpens ++
+      Seq("-cp", sys.props("java.class.path"), main) ++ args
+    val pb = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).redirectOutput(log)
+    // keep the child's Spark scratch under the caller's scratch dir
+    pb.environment().remove("SPARK_LOCAL_DIRS")
+    pb.start()
   }
 }
 

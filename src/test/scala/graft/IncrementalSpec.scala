@@ -4,6 +4,7 @@ import graft.incremental.Watermark
 import graft.io.IO
 import graft.pipeline.Ingest
 import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
 
 /** The watermark control table's text round trip and E1's order:
   * land, archive, then advance. */
@@ -136,5 +137,35 @@ class IncrementalSpec extends SparkSpec {
     assert(jobs <= 2, s"E1 ran $jobs jobs")
     assert(landed(base, "20240102060000") == (11L to 40L))
     assert(wmOf(s"$base/wm", "t") == "40")
+  }
+
+  test("E1 reads its source once: the archive write and the caller's first action read the cached batch") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val (base, source) = e1Fixture("cached", (1L to 40L), "10")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val out = Ingest.incrementalIngest(spark, source, "t", s"$base/wm",
+        s"$base/land", s"$base/arch", "20240102", "20240102060000")
+      assert(out.count() == 30L)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    val seen = plans.asScala.toSeq
+    def scansSource(p: SparkPlan) = allPhysicalNodes(p).exists {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.endsWith(s"$base/src"))
+      case _                     => false
+    }
+    def readsCache(p: SparkPlan) = allPhysicalNodes(p).exists(_.isInstanceOf[InMemoryTableScanExec])
+    assert(seen.size == 3, s"expected landing, archive and count executions, got ${seen.size}")
+    val Seq(landing, archive, first) = seen
+    assert(landing.toString.contains(s"$base/land") && archive.toString.contains(s"$base/arch"))
+    for ((name, p) <- Seq("archive write" -> archive, "caller's first action" -> first))
+      assert(readsCache(p) && !scansSource(p), s"$name must read the cached batch, not the source:\n$p")
   }
 }

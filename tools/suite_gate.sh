@@ -9,8 +9,9 @@
 #      suite (perfbench/tests), and refuses (exit 1) on any failure or
 #      on a CrashSpec child JVM left running;
 #   2. on success it writes SUITE_GREEN.md recording the run (HEAD,
-#      date, the suite's own derived counts — never hand-counted) PLUS a
-#      content digest of src/ + build.sbt as it was tested;
+#      date, the suite's own derived counts — never hand-counted — and
+#      sbt's Total time, the tier-1 wall time) PLUS a content digest of
+#      src/ + build.sbt as it was tested;
 #   3. `tools/suite_gate.sh --check` recomputes that digest and fails
 #      if ANY source changed after the recorded run — the snapshot
 #      procedure is: run the gate, `git add -A && git commit`, nothing
@@ -61,6 +62,8 @@ sbt -batch test >"$LOG" 2>&1
 STATUS=$?
 
 SUMMARY=$(grep -E "^\[info\] Tests: " "$LOG" | tail -1 | sed 's/^\[info\] //')
+# sbt's own wall time for the run, e.g. "Total time: 215 s (03:35), completed ..."
+TOTAL=$(grep -E "^\[[a-z]+\] Total time: " "$LOG" | tail -1 | sed -E 's/^\[[a-z]+\] //')
 SUITES=$(grep -E "^\[info\] Suites: " "$LOG" | tail -1 | sed 's/^\[info\] //')
 
 if [ $STATUS -ne 0 ] || ! echo "$SUMMARY" | grep -q "failed 0, canceled 0"; then
@@ -123,10 +126,11 @@ certifies; its parent is the recorded HEAD plus the digested worktree.
 - src digest: $DIGEST
 - $SUMMARY
 - $SUITES
+- sbt test: ${TOTAL:-<no Total time line>}
 - perfbench/tests (pytest): $PYSUMMARY
 
 Counts above are the suite's own output — derived, not hand-maintained
 (round-13 verdict item 4).
 EOF
-echo "[suite_gate] GREEN — $SUMMARY; perfbench/tests: $PYSUMMARY"
+echo "[suite_gate] GREEN — $SUMMARY; perfbench/tests: $PYSUMMARY; sbt $TOTAL"
 echo "[suite_gate] wrote SUITE_GREEN.md (src digest $DIGEST)"
